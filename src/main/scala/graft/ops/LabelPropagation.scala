@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import graft.util.Ckpt
+import org.apache.spark.storage.StorageLevel
 
 /** Label-propagation community detection — the reference's LP clustering kernel
   * (`/root/reference/kaminpar-shm/coarsening/clustering/lp_clusterer.cc` over the
@@ -34,7 +35,12 @@ object LabelPropagation {
       maxIter: Int = 20,
       seed: Long = 42L
   ): DataFrame = {
-    val e = edges.select(col("src"), col("dst"), col("w")).persist()
+    // cache the edge projection unless the caller's cache already serves it: the
+    // select of the same three columns resolves to the caller's cache entry, and
+    // unpersisting that entry at the end would drop the caller's cache
+    val projected = edges.select(col("src"), col("dst"), col("w"))
+    val ownsCache = projected.storageLevel == StorageLevel.NONE
+    val e = if (ownsCache) projected.persist() else projected
     var labels = Ckpt(
       e.select(col("src").as("node")).distinct().withColumn("label", col("node")),
       "lp-labels")
@@ -86,7 +92,7 @@ object LabelPropagation {
       labels = staged.select(col("node"), col("label"))
       it += 1
     }
-    e.unpersist()
+    if (ownsCache) e.unpersist()
     labels
   }
 

@@ -49,7 +49,7 @@ object DistCoarsener {
         * returned labels. The RETURNED FRAME READS THESE BLOCKS: the caller must
         * release them (Par.releaseLocalCkpt) only after its last job consuming
         * the clustering has run — coarsen/VCycle do so after their contraction
-        * artifacts are durably checkpointed. Callers that don't collect them
+        * artifacts are staged (Ckpt). Callers that don't collect them
         * (None) leave the blocks to the ContextCleaner, which reclaims on GC —
         * correct but unpredictable timing (the persist-hygiene flake, r06).
         */
@@ -154,7 +154,10 @@ object DistCoarsener {
           col("bestS.nl").as("cand"), col("bestS.rating").as("gain")
         )
 
-      val movers = candidates.filter(col("cand") =!= col("cur"))
+      // staged behind a lazy localCheckpoint: the admission below reads the movers
+      // twice (demand aggregate + join), and without the cut Spark plans the whole
+      // gather -> argmax subtree once per read. The staging job materializes it.
+      val movers = candidates.filter(col("cand") =!= col("cur")).localCheckpoint(false)
 
       // O23 capacity protocol, proportional form (round-4 judge fix #2): per target
       // cluster, aggregate the movers' weight demand D and admit each mover with a
@@ -220,7 +223,7 @@ object DistCoarsener {
       // run (this superstep's staging aggregate AND its rollback count, whose
       // `capacity` subplan re-reads the previous labels) — release them
       staleBlocks.foreach(graft.util.Par.releaseLocalCkpt)
-      staleBlocks = Seq(staged) ++ newCommitBlocks
+      staleBlocks = Seq(movers, staged) ++ newCommitBlocks
       labels = newLabels
       Log.info(
         s"lpCluster superstep $it: tentativeMoves=$moves committed=$committed contention=$contention")
@@ -535,8 +538,8 @@ object DistCoarsener {
         */
       knownStats: Option[(Long, Long)] = None
   ): (Seq[DistCoarsener.Level], DataFrame, DataFrame) = {
-    // callers pass already-checkpointed inputs (Partitioner does); re-checkpointing
-    // here would add two redundant full-table write jobs per run
+    // callers pass already-staged inputs (Partitioner does); restaging here would
+    // add two redundant full-table jobs per run
     var edges = edges0
     var nodeW = nodeW0
     // n and totalW in one aggregation job (was two driver actions; callers that
@@ -555,7 +558,7 @@ object DistCoarsener {
     // the driver 10^8-edge coarse graphs (round-2 judge fix #5)
     while ((n > targetN || m > targetM) && !converged) {
       val stage = s"coarsen${levels.length}"
-      val (cEdges, cNodeW, mapping, cnKnown) = resume.filter(_.hasNamed(s"$stage-mapping")) match {
+      val (cEdges, cNodeW, mapping, countsKnown) = resume.filter(_.hasNamed(s"$stage-mapping")) match {
         // resumable run: a committed level reloads from the run directory — the loop
         // conditions recompute deterministically from the loaded tables
         case Some(r) =>
@@ -563,7 +566,7 @@ object DistCoarsener {
           (r.loadNamed(spark, s"$stage-cedges"),
             r.loadNamed(spark, s"$stage-cnodew"),
             r.loadNamed(spark, s"$stage-mapping"),
-            None: Option[Long])
+            None: Option[(Long, Long)])
         case None =>
           // max cluster weight: eps * W / clamp(n/C, 2, k)
           // (reference EPSILON_BLOCK_WEIGHT, `coarsening/max_cluster_weights.h:17-46`)
@@ -583,31 +586,22 @@ object DistCoarsener {
             else chainIsolated(spark, lpOut,
               nodeW, edges, cap, seed + 977L * (levels.length + 1))
           var level = contract(edges, nodeW, clustering)
-          // the coarse-node count rides the cnodew checkpoint write as an
-          // Observation (r06: was a separate count job here AND a second identical
-          // count at the bottom of the loop)
-          def ckptCounted(df: DataFrame, tag: String): (DataFrame, Long) = {
-            val obs = org.apache.spark.sql.Observation()
-            val out = Ckpt(df.observe(obs, count(lit(1)).as("c")), tag)
-            (out, obs.get("c").asInstanceOf[Number].longValue)
-          }
-          // the three level-artifact writes are independent actions over the same
+          // the three level-artifact stages are independent actions over the same
           // (cached) clustering blocks — submit them concurrently so their fixed
-          // job costs overlap (guide §2.6)
-          def ckptLevel(lv: Level): (DataFrame, (DataFrame, Long), DataFrame) = {
+          // job costs overlap (guide §2.6). The coarse node and edge counts come
+          // from the cnodew and cedges stages themselves, not from count jobs
+          def ckptLevel(lv: Level): ((DataFrame, Long), (DataFrame, Long), DataFrame) = {
             val rs = graft.util.Par.awaitAll[Any](Seq(
-              () => Ckpt(lv.coarseEdges, "cedges"),
-              () => ckptCounted(lv.coarseNodeW, "cnodew"),
+              () => Ckpt.counted(lv.coarseEdges, "cedges"),
+              () => Ckpt.counted(lv.coarseNodeW, "cnodew"),
               () => Ckpt(lv.mapping, "mapping")))
-            (rs(0).asInstanceOf[DataFrame], rs(1).asInstanceOf[(DataFrame, Long)],
+            (rs(0).asInstanceOf[(DataFrame, Long)], rs(1).asInstanceOf[(DataFrame, Long)],
               rs(2).asInstanceOf[DataFrame])
           }
-          var (ce, cwc0, mp) = ckptLevel(level)
-          var cw = cwc0._1
-          var cnNow = cwc0._2
-          // all three level artifacts are durable — nothing reads the clustering
-          // again (the two-hop branch below re-derives it from the mp parquet), so
-          // the staged blocks backing it are released deterministically here
+          var ((ce, cmNow), (cw, cnNow), mp) = ckptLevel(level)
+          // all three level artifacts are staged — nothing reads the clustering
+          // again (the two-hop branch below re-derives it from the mp stage), so
+          // the superstep blocks backing it are released deterministically here
           // instead of waiting for the ContextCleaner (r06 persist-hygiene fix)
           lpStale.foreach(graft.util.Par.releaseLocalCkpt)
           // two-hop rescue (O3): if the level shrank < 50%, merge singleton clusters
@@ -621,10 +615,11 @@ object DistCoarsener {
                 seed + levels.length),
               "twohop")
             level = contract(edges, nodeW, rescued)
-            val (ce2, cwc2, mp2) = ckptLevel(level)
+            val ((ce2, cm2), (cw2, cn2), mp2) = ckptLevel(level)
             ce = ce2
-            cw = cwc2._1
-            cnNow = cwc2._2
+            cmNow = cm2
+            cw = cw2
+            cnNow = cn2
             mp = mp2
             Log.info(s"two-hop rescue applied at level ${levels.length}")
           }
@@ -637,10 +632,9 @@ object DistCoarsener {
             r.appendMetrics(levels.length, Map("stage" -> stage))
             Partitioner.failpoint(stage)
           }
-          (ce, cw, mp, Some(cnNow))
+          (ce, cw, mp, Some((cnNow, cmNow)))
       }
-      val cn = cnKnown.getOrElse(cNodeW.count())
-      val cm = if (targetM == Long.MaxValue) 0L else cEdges.count()
+      val (cn, cm) = countsKnown.getOrElse((cNodeW.count(), cEdges.count()))
       Log.info(s"coarsen level ${levels.length}: n=$n -> $cn, m=$m -> $cm")
       if (cn >= n * 0.95) converged = true // <5% shrink (reference `presets.cc:186`)
       if (cn < n) {

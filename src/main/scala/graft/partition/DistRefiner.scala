@@ -112,10 +112,10 @@ object DistRefiner {
     // is what matters (each superstep references the previous state 3x, so an
     // untruncated chain grows the analyzed plan 3^it — measured: superstep walls
     // 3 s, 3 s, 11 s, 77 s), and the lazy local checkpoint provides it without a
-    // storage round trip or an extra job. The function's RETURN value is parquet-
-    // checkpointed once at the end, so caller-visible lineage/stats are unchanged
+    // storage round trip or an extra job. The function's RETURN value is cut once
+    // at the end (Ckpt), so callers see a flat leaf with fresh statistics
     // (LogicalRDD keeps origin stats — products over <= maxIter supersteps are
-    // bounded; the end-of-stage parquet resets them, see Ckpt's docstring).
+    // bounded; the end-of-stage cut resets them, see Ckpt's docstring).
     // Violating TARGET blocks roll back all their moves this round (per-block
     // rollback, `lp_refiner.cc:296-333` made finer-grained). Block weights are
     // maintained driver-side from the deltas (k values), so the balance invariant
@@ -174,9 +174,14 @@ object DistRefiner {
         )
         .filter(col("cand") =!= col("cur") && col("gain") > 0)
 
+      // staged behind a lazy localCheckpoint: gainDf and accepted below both read
+      // it, and without the cut Spark plans the whole gather -> argmax subtree
+      // twice. The staging job below materializes it; released with the rest.
       val candidates = perNode
         .join(residualDf, "cand")
         .filter(col("nw") <= col("residual"))
+        .localCheckpoint(false)
+      localCkpts += candidates
 
       // O24 probabilistic acceptance: p = (gain/G_b) * (R_b/w) — expected admitted
       // weight per target <= residual; G_b folded in as an agg+join, coin is a seeded
@@ -212,7 +217,7 @@ object DistRefiner {
       val okBlocks = (0 until k).filter(b => blockW(b) + inW(b) <= caps(b)).toSet
 
       // apply with per-target-block rollback (violating TARGET blocks drop all their
-      // moves this round) — a projection over the staged parquet, no extra write
+      // moves this round) — a projection over the staged blocks, no extra write
       val applyCand =
         if (okBlocks.size == k) col("cand")
         else when(col("cand").isin(okBlocks.toSeq.map(Int.box): _*), col("cand"))
@@ -238,10 +243,10 @@ object DistRefiner {
       it += 1
     }
     lastBlockW.foreach(out => System.arraycopy(blockW, 0, out, 0, k))
-    // the caller-visible result is a parquet checkpoint, exactly as before:
-    // downstream stages read a flat scan with fresh leaf statistics — after which
-    // the superstep local-checkpoint blocks are explicitly released (no pinned
-    // RDDs survive the call; nothing re-reads them once the output is on parquet)
+    // the caller-visible result is cut (Ckpt): downstream stages read a flat leaf
+    // with fresh statistics — after which the superstep local-checkpoint blocks
+    // are explicitly released (no pinned RDDs survive the call; nothing re-reads
+    // them once the output is materialized)
     val out = Ckpt(
       if (weighted) part else part.select(col("node"), col("block")),
       "ref-part-out")
@@ -338,9 +343,9 @@ object DistRefiner {
     val blockW: Array[Long] = blockW0.getOrElse(Metrics.blockWeightsW(part, k))
     // staged tables are lazy local checkpoints instead of parquet checkpoints (r06:
     // halves the per-round job count — the delta collect materializes the flat
-    // LogicalRDD); the winner is re-checkpointed to parquet at the end, so the
-    // caller sees the same flat lineage/stats as before, and the staging blocks
-    // are released after that write
+    // LogicalRDD); the winner is cut once more at the end (Ckpt), so the caller
+    // sees a flat leaf with fresh statistics, and the staging blocks are released
+    // after that
     val localCkpts = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
 
     var best: DataFrame = null
@@ -371,7 +376,7 @@ object DistRefiner {
 
       // phase 1: ONE gather pass -> per-node table with internal/external weight and
       // the best external block; checkpointed so the cut aggregate and the tentative
-      // filter below both read the (n-row) parquet, not the full plan twice.
+      // filter below both read the (n-row) staged blocks, not the full plan twice.
       // Plan shape: aggregate FIRST (ratings keyed by (src, nb) need no per-src
       // state), join the n-row part table after — the m-row stream shuffles once
       // (map-side partial agg), never a second time for the src-side join.
@@ -470,7 +475,10 @@ object DistRefiner {
       val allowDf = broadcast(
         (0 until k).map(b => (b, math.max(0L, caps(b) - blockW(b)) + slackArr(b)))
           .toDF("cand", "allow"))
+      // staged like lpRefineCaps' candidates: the admission reads it twice
       val positives = recomputed.filter(col("toCand") - col("toCur") > 0)
+        .localCheckpoint(false)
+      localCkpts += positives
       val accepted = admitProportional(positives, allowDf, seed + r)
 
       // phase 3: ONE staged lazy local checkpoint (old block + accepted cand); the
@@ -528,8 +536,8 @@ object DistRefiner {
     val improved =
       (bestFeasible && !firstFeasible) || (bestFeasible == firstFeasible && bestCut < firstEntering)
     Log.info(s"jet done: bestCut=$bestCut feasible=$bestFeasible improved=$improved")
-    // re-checkpoint the winner so the caller sees a flat parquet scan with fresh
-    // leaf statistics (as before), then release the staging blocks
+    // cut the winner so the caller sees a flat leaf with fresh statistics, then
+    // release the staging blocks
     val outPart = Ckpt(
       if (weighted) best else best.select(col("node"), col("block")),
       "jet-best")
@@ -1261,6 +1269,10 @@ object DistRefiner {
       .select(keep.map(col): _*)
   }
 
+  /** Clamped in double before the INT cast: a take-all group (bin width 1.0) over
+    * hash scores spans ~1.8e19 buckets, which overflows INT (and BIGINT) under ANSI.
+    * Every in-range bucket is the same as floor-then-clamp.
+    */
   private def bucketOf(score: Column, lo: Column, binW: Column, nBuckets: Int): Column =
-    least(lit(nBuckets - 1), greatest(lit(0), floor((score - lo) / binW).cast("int")))
+    floor(least(lit(nBuckets - 1.0), greatest(lit(0.0), (score - lo) / binW))).cast("int")
 }

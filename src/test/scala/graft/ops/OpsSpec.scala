@@ -103,6 +103,16 @@ class LabelPropagationSpec extends SparkFunSuite {
     assert(a === b)
   }
 
+  test("leaves the caller's cached edge table cached") {
+    val und = (0L until 30L).map(i => (i, (i + 1) % 30))
+    val edges = undirectedUnit(und).select("src", "dst", "w").persist()
+    edges.count()
+    val level = edges.storageLevel
+    LabelPropagation.run(spark, edges, maxIter = 3, seed = 5L).count()
+    assert(edges.storageLevel === level, "LabelPropagation.run dropped the caller's cache")
+    edges.unpersist()
+  }
+
   test("dense relabel produces consecutive ids") {
     val s = spark
     import s.implicits._

@@ -1,5 +1,7 @@
 package graft.partition
 
+import scala.jdk.CollectionConverters._
+
 import graft.SparkFunSuite
 import graft.graph.MetisIO
 import graft.model.CsrGraph
@@ -208,6 +210,59 @@ class PersistHygieneSpec extends SparkFunSuite {
       val leaked = spark.sparkContext.getPersistentRDDs.keySet -- before
       assert(leaked.isEmpty, s"hub=$hub leaked persisted RDDs: $leaked")
     }
+  }
+
+  test("a non-resumable computePartition writes only its returned assignment") {
+    val rnd = new scala.util.Random(29)
+    val n = 200
+    val edgeSet = scala.collection.mutable.Set.empty[(Long, Long)]
+    (0 until n).foreach(i => edgeSet += ((i.toLong, ((i + 1) % n).toLong)))
+    (0 until 3 * n).foreach { _ =>
+      val a = rnd.nextInt(n); val b = rnd.nextInt(n)
+      if (a != b) edgeSet += ((math.min(a, b).toLong, math.max(a, b).toLong))
+    }
+    // not cached by the caller, so the edge table is staged inside the call too
+    val edges = undirectedUnit(edgeSet.toSeq)
+    val dir = java.nio.file.Paths.get(graft.util.Ckpt.baseDir)
+    def written: Set[String] =
+      if (!java.nio.file.Files.isDirectory(dir)) Set.empty
+      else {
+        val ls = java.nio.file.Files.list(dir)
+        try ls.iterator().asScala.map(_.getFileName.toString).toSet finally ls.close()
+      }
+    val before = written
+    // the default preset runs every stage kind: coarsening levels, refinement, JET,
+    // balancing, pairwise FM and V-cycles
+    val res = Partitioner(edges).setK(4).setEpsilon(0.05).setSeed(2L)
+      .setDriverThreshold(60L).computePartition(spark)
+    val added = written -- before
+    assert(added.size == 1 && added.head.startsWith("assignment-"), s"wrote $added")
+    assert(res.assignment.inputFiles.forall(_.contains(added.head)))
+    assert(res.assignment.count() == n)
+  }
+}
+
+/** The overload balancer when a block weighs twice its cap or more: the leftover
+  * overload takes the hash-ranked fallback, whose take-all selection spans the full
+  * hash range (previously a CAST_OVERFLOW under ANSI).
+  */
+class BalanceOverloadSpec extends SparkFunSuite {
+  test("balance repairs a block at 2x its cap or more") {
+    val s = spark
+    import s.implicits._
+    val n = 160
+    // a ring: every node has edges only into its own neighbourhood
+    val edges = undirectedUnit((0 until n).map(i => (i.toLong, ((i + 1) % n).toLong)))
+    val nodeW = (0 until n).map(i => (i.toLong, 1L)).toDF("node", "weight")
+    val k = 4
+    val lmax = 44L
+    // block 0 holds 100 nodes (2.3x its cap), the rest spread over blocks 1-3
+    val part = (0 until n).map(i => (i.toLong, if (i < 100) 0 else 1 + i % 3))
+      .toDF("node", "block")
+    val balanced = DistRefiner.balance(spark, edges, nodeW, part, k, lmax, seed = 101L)
+    val w = Metrics.blockWeights(balanced, nodeW, k)
+    assert(w.forall(_ <= lmax), s"block weights ${w.mkString(",")} over $lmax")
+    assert(w.sum == n && balanced.count() == n)
   }
 }
 

@@ -54,6 +54,17 @@ class SelectTopSpec extends SparkFunSuite {
     assert(byGrp(2) >= 45 && byGrp(2) <= 200, s"got ${byGrp(2)}")
   }
 
+  test("a take-all group whose scores span the whole hash range is selected whole") {
+    // the balancer's fallback scores members by a 64-bit hash cast to double; with
+    // the group taken whole its buckets are (score - lo) / 1.0, up to ~1.8e19
+    val cand = candDf(Seq(
+      (1L, 0, 1L, -9.0e18), (2L, 0, 1L, -1.0), (3L, 0, 1L, 0.0), (4L, 0, 1L, 4.5e18),
+      (5L, 0, 1L, 9.0e18)))
+    val rows = DistRefiner.selectTopByScore(
+      cand, "cur", "relGain", Map(0 -> 10L), seed = 5L, keep = Seq("src"))
+    assert(rows.map(_.getAs[Long]("src")).toSet === Set(1L, 2L, 3L, 4L, 5L))
+  }
+
   test("groups absent from the target map are never selected") {
     val cand = candDf(Seq((1L, 0, 1L, 1.0), (2L, 9, 1L, 9.0)))
     val rows = DistRefiner.selectTopByScore(
