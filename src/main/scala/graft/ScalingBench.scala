@@ -95,9 +95,8 @@ object ScalingBench {
           val n = geHub.hubs.map(_.count()).getOrElse(0L)
           def timeRefineHub(iters: Int, seed: Long): Double = {
             val t0 = System.nanoTime()
-            graft.partition.DistRefiner.lpRefine(
-              spark, geHub, nodeW, part0, k, lmax, maxIter = iters, seed = seed,
-              runId = "", level = -1, lastBlockW = None
+            graft.partition.DistRefiner.lpRefineCaps(
+              spark, geHub, nodeW, part0, k, Array.fill(k)(lmax), maxIter = iters, seed = seed
             ).count()
             (System.nanoTime() - t0) / 1e9
           }

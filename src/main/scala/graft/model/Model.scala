@@ -75,9 +75,6 @@ final case class PartCtx(
     else math.floor((1.0 - minEpsilon) * totalNodeWeight.toDouble / k).toLong
 
   def hasMinBlockWeights: Boolean = minBlockWeight > 0L
-
-  def imbalanceOf(maxWeight: Long): Double =
-    maxWeight.toDouble / perfectBlockWeight.toDouble - 1.0
 }
 
 /** In-memory CSR graph used ONLY at the coarsest level, after the distributed

@@ -12,10 +12,11 @@ import graft.util.{Ckpt, RunCheckpoint}
   * `GROUP BY dst` (gather sum). At cluster scale the edge table is bucketed/partitioned
   * by `src`, so the big side never re-shuffles: the per-iteration cost is one shuffle of
   * the (n-row) rank table plus one map-side-combined aggregation of contributions.
-  * Lineage is truncated every `checkpointEvery` supersteps (localCheckpoint here;
-  * Iceberg snapshots with per-iteration metrics rows in prod) so the plan does not grow
-  * with iteration count — which is also what makes a run resumable from the last
-  * checkpoint.
+  * [[run]] truncates lineage every `checkpointEvery` supersteps with a [[Ckpt]] (a
+  * parquet write and read-back outside a partition call's staging scope) so the plan
+  * does not grow with iteration count; [[runResumable]] writes every superstep's state
+  * durably instead (Iceberg snapshots with per-iteration metrics rows in prod), which
+  * both truncates lineage and makes the run resumable from the last superstep.
   */
 object PageRank {
 
@@ -29,7 +30,59 @@ object PageRank {
       iterations: Int,
       damping: Double = 0.85,
       checkpointEvery: Int = 8
+  ): DataFrame =
+    supersteps(edges, iterations, damping, None) { step =>
+      if (step.index % checkpointEvery == 0 && step.index < iterations)
+        Ckpt(step.next, "pr-ranks").repartition(col("node"))
+      else step.next
+    }._1.select(col("node"), col("pr")) // reads the persisted tables lazily: not released
+
+  /** Resumable variant: every superstep's state is durably checkpointed with a
+    * metrics row (superstep, l1 delta, wall ms); a restarted run continues from the
+    * latest committed superstep instead of recomputing (north rule: resumable
+    * convergence with per-partition lineage + per-iteration metrics). The superstep
+    * loop is [[run]]'s — a fresh N-iteration run and an interrupted-then-resumed one
+    * produce the same ranks. The result is read back from the last checkpoint, and
+    * nothing the call persisted outlives it.
+    */
+  def runResumable(
+      spark: SparkSession,
+      edges: DataFrame,
+      iterations: Int,
+      run: RunCheckpoint,
+      damping: Double = 0.85
   ): DataFrame = {
+    val resumeFrom = run.latestStep.map(s => (s, run.load(spark, s))) // 1-based supersteps
+    val (state, persisted) = supersteps(edges, iterations, damping, resumeFrom) { step =>
+      val saved = run.save(step.index, step.next) // durable write first; delta read is cheap after
+      val l1 = saved.join(step.prev.select(col("node"), col("pr").as("prevPr")), "node")
+        .agg(sum(abs(col("pr") - col("prevPr")))).first().getDouble(0)
+      val wallMs = (System.nanoTime() - step.startNs) / 1000000
+      run.appendMetrics(step.index, Map("l1_delta" -> l1, "wall_ms" -> wallMs, "n" -> step.n.toLong))
+      saved
+    }
+    run.markDone()
+    persisted.foreach(_.unpersist(blocking = true))
+    state.select(col("node"), col("pr"))
+  }
+
+  /** A finished superstep: its 1-based index, the node count, its start time, and the
+    * state (node, outdeg, pr) before and after it.
+    */
+  private final case class Step(index: Int, n: Double, startNs: Long, prev: DataFrame, next: DataFrame)
+
+  /** The superstep loop shared by [[run]] and [[runResumable]], from the initial
+    * uniform state or from `resumeFrom` = (superstep, state). `afterStep` gets each
+    * finished superstep and returns the state the loop continues from (the place to
+    * cut lineage). Returns the final (node, outdeg, pr) state and the tables this
+    * call persisted, which the state may still read.
+    */
+  private def supersteps(
+      edges: DataFrame,
+      iterations: Int,
+      damping: Double,
+      resumeFrom: Option[(Int, DataFrame)]
+  )(afterStep: Step => DataFrame): (DataFrame, Seq[DataFrame]) = {
     // Co-partitioning contract: the (big) edge table is hash-partitioned by src ONCE
     // and pinned; every superstep's gather join then reuses that partitioning, so only
     // the n-row state table moves through the shuffle — the edge table never
@@ -43,9 +96,8 @@ object PageRank {
       .repartition(col("src")).sortWithinPartitions(col("src")).persist()
     // static per-node base: node list with out-degree in ONE hash aggregation (each
     // edge emits (src, 1) and (dst, 0); sum of flags = out-degree, and every node of
-    // either endpoint role appears) — replaces the distinct + groupBy + join shape,
-    // which shuffled the edge stream twice and joined (guide §2.3/§2.4). Out-degree
-    // rides in the iterated state, saving a join per superstep.
+    // either endpoint role appears), so the edge stream shuffles once (guide
+    // §2.3/§2.4). Out-degree rides in the iterated state, saving a join per superstep.
     val base = e
       .select(explode(array(
         struct(col("src").as("node"), lit(1L).as("c")),
@@ -54,7 +106,7 @@ object PageRank {
       .groupBy(col("p.node").as("node"))
       .agg(sum(col("p.c")).as("outdeg"))
       .persist()
-    // n and the dangling-node check in ONE driver action (was: count + filter-count)
+    // n and the dangling-node check in ONE driver action
     val s0 = base.agg(
       count(lit(1)).as("n"),
       coalesce(sum(when(col("outdeg") === 0L, 1L).otherwise(0L)), lit(0L)).as("dangling")).first()
@@ -64,9 +116,9 @@ object PageRank {
     // per-iteration driver action.
     val hasDangling = s0.getLong(1) > 0L
 
-    var state = base.withColumn("pr", lit(1.0 / n)) // (node, outdeg, pr)
-    var it = 0
+    var (it, state) = resumeFrom.getOrElse((0, base.withColumn("pr", lit(1.0 / n))))
     while (it < iterations) {
+      val t0 = System.nanoTime()
       val dangling =
         if (!hasDangling) 0.0
         else state.filter(col("outdeg") === 0L)
@@ -77,7 +129,7 @@ object PageRank {
         .select(col("dst"), (col("pr") / col("outdeg")).as("c"))
         .groupBy(col("dst"))
         .agg(sum(col("c")).as("contrib"))
-      state = base
+      val next = base
         .join(contribs, col("node") === col("dst"), "left")
         .select(
           col("node"), col("outdeg"),
@@ -86,74 +138,8 @@ object PageRank {
             .as("pr")
         )
       it += 1
-      if (it % checkpointEvery == 0 && it < iterations) {
-        state = Ckpt(state, "pr-ranks").repartition(col("node"))
-      }
+      state = afterStep(Step(it, n, t0, state, next))
     }
-    val out = state.select(col("node"), col("pr"))
-    out
-  }
-
-  /** Resumable variant: every superstep's ranks are durably checkpointed with a
-    * metrics row (superstep, l1 delta, wall ms); a restarted run continues from the
-    * latest committed superstep instead of recomputing (north rule: resumable
-    * convergence with per-partition lineage + per-iteration metrics). Identical math
-    * to [[run]] — a fresh N-iteration run and an interrupted-then-resumed one produce
-    * the same ranks.
-    */
-  def runResumable(
-      spark: SparkSession,
-      edges: DataFrame,
-      iterations: Int,
-      run: RunCheckpoint,
-      damping: Double = 0.85
-  ): DataFrame = {
-    val e = edges.select(col("src"), col("dst")).persist()
-    val nodes = e.select(explode(array(col("src"), col("dst"))).as("node"))
-      .distinct().persist()
-    val n = nodes.count().toDouble
-    val outDeg = e.groupBy(col("src").as("node"))
-      .agg(count(lit(1)).cast("long").as("outdeg")).persist()
-    val hasDangling = nodes.join(outDeg, Seq("node"), "left_anti").limit(1).count() > 0
-
-    val startStep = run.latestStep // superstep indices are 1-based in the metrics
-    var ranks = startStep match {
-      case Some(s) => run.load(spark, s)
-      case None => nodes.withColumn("pr", lit(1.0 / n))
-    }
-    var it = startStep.getOrElse(0)
-    while (it < iterations) {
-      val t0 = System.nanoTime()
-      val withDeg = ranks.join(outDeg, Seq("node"), "left")
-      val dangling =
-        if (!hasDangling) 0.0
-        else withDeg.filter(col("outdeg").isNull)
-          .agg(coalesce(sum(col("pr")), lit(0.0))).first().getDouble(0)
-      val contribs = withDeg
-        .filter(col("outdeg").isNotNull)
-        .join(e, col("node") === col("src"))
-        .select(col("dst"), (col("pr") / col("outdeg")).as("c"))
-        .groupBy(col("dst"))
-        .agg(sum(col("c")).as("contrib"))
-      val next = nodes
-        .join(contribs, col("node") === col("dst"), "left")
-        .select(
-          col("node"),
-          (lit((1.0 - damping) / n) +
-            lit(damping) * (coalesce(col("contrib"), lit(0.0)) + lit(dangling / n)))
-            .as("pr")
-        )
-      val prev = ranks
-      val saved = run.save(it + 1, next) // durable write first; delta read is cheap after
-      val l1 = saved.join(prev.withColumnRenamed("pr", "prevPr"), "node")
-        .agg(sum(abs(col("pr") - col("prevPr")))).first().getDouble(0)
-      val wallMs = (System.nanoTime() - t0) / 1000000
-      run.appendMetrics(it + 1, Map("l1_delta" -> l1, "wall_ms" -> wallMs, "n" -> n.toLong))
-      ranks = saved
-      it += 1
-    }
-    run.markDone()
-    e.unpersist()
-    ranks
+    (state, Seq(e, base))
   }
 }

@@ -313,39 +313,6 @@ object DistCoarsener {
       .select(col("node"), col("label"), col("weight"), col("nl"))
   }
 
-  /** Overlay clustering (SURVEY O10, reference `coarsening/overlay_cluster_coarsener
-    * .cc:2-3` role): intersect `t` independent seeded LP clusterings — a node pair
-    * merges only if EVERY clustering merged it, giving gentler, more uniform
-    * coarsening. New label = min member node id of each intersection class
-    * (deterministic, partition-independent).
-    */
-  def overlayCluster(
-      spark: SparkSession,
-      edges: DataFrame,
-      nodeW: DataFrame,
-      cap: Long,
-      t: Int = 2,
-      maxIter: Int = 5,
-      seed: Long = 42L
-  ): DataFrame = {
-    require(t >= 1)
-    var combined = lpCluster(spark, edges, nodeW, cap, maxIter, seed)
-    var i = 1
-    while (i < t) {
-      val li = lpCluster(spark, edges, nodeW, cap, maxIter, seed + i * 7919L)
-      val pairs = Ckpt(
-        combined.withColumnRenamed("label", "l1")
-          .join(li.withColumnRenamed("label", "l2"), "node"),
-        "overlay-pairs")
-      val leaders = pairs.groupBy(col("l1"), col("l2")).agg(min(col("node")).as("leader"))
-      combined = Ckpt(
-        pairs.join(leaders, Seq("l1", "l2")).select(col("node"), col("leader").as("label")),
-        "overlay")
-      i += 1
-    }
-    combined
-  }
-
   /** Sparsification (SURVEY O11, reference `sparsification_cluster_coarsener.cc`
     * role, ESA'25 threshold sparsification): when the (coarse) graph carries more
     * edges than `targetM`, keep only the heaviest — threshold from an approximate
@@ -365,69 +332,6 @@ object DistCoarsener {
         edges.filter(col("w") > thr || (col("w") === thr && tie < frac)),
         "sparsified")
     }
-  }
-
-  /** Heavy-edge-matching clustering (SURVEY O30, reference
-    * `kaminpar-dist/coarsening/clustering/hem/hem_clusterer.cc:2` role): color the
-    * graph, then one BSP round per color class — every unmatched node of the round's
-    * color proposes to its heaviest unmatched neighbor that fits the weight cap;
-    * same-color proposers are never adjacent (proper coloring), and two proposers
-    * sharing a target resolve by (edge weight, hash) argmax on the target side.
-    * Leftover nodes stay singletons. Alternative coarsening to LP — optional, like
-    * the reference (LP is the default preset).
-    */
-  def hemCluster(
-      spark: SparkSession,
-      edges: DataFrame,
-      nodeW: DataFrame,
-      cap: Long,
-      maxColors: Int = 8,
-      seed: Long = 42L
-  ): DataFrame = {
-    val e = edges.select(col("src"), col("dst"), col("w")).repartition(col("dst")).persist()
-    val colors = graft.ops.Auxiliary.greedyColoring(spark, e, seed = seed)
-    // LEFT join: greedyColoring's domain is edge endpoints only — isolated nodes
-    // (and any node left uncolored at maxIter) must still flow through as singleton
-    // clusters, or contraction would lose nodes and node weight
-    var state = Ckpt(
-      nodeW.join(colors, Seq("node"), "left")
-        .select(col("node"), col("weight"), coalesce(col("color"), lit(-1)).as("color"),
-          lit(null).cast("long").as("mate")),
-      "hem-state")
-
-    var c = 0
-    while (c < maxColors) {
-      // proposals: this color's unmatched nodes -> heaviest unmatched neighbor
-      // fitting the pair weight cap (argmax by weight, hash tiebreak)
-      val free = state.filter(col("mate").isNull)
-      val targets = free.select(col("node").as("dst"), col("weight").as("dw"))
-      val proposers = free.filter(col("color") === c)
-        .select(col("node").as("src"), col("weight").as("sw"))
-      val proposals = e
-        .join(targets, "dst")
-        .join(proposers, "src")
-        .filter(col("src") =!= col("dst") && col("sw") + col("dw") <= cap)
-        .withColumn("h", xxhash64(col("dst"), lit(seed + c)))
-        .groupBy(col("src"))
-        .agg(max_by(col("dst"), struct(col("w"), (-col("h")).as("nh"))).as("tgt"))
-      // conflict resolution: one winner per target (targets are never proposers this
-      // round: proposers share the round's color, targets cannot)
-      val pairs = proposals
-        .withColumn("hs", xxhash64(col("src"), lit(seed + c)))
-        .groupBy(col("tgt"))
-        .agg(min_by(col("src"), col("hs")).as("src"))
-      val mates = pairs.select(col("src").as("node"), col("tgt").as("m"))
-        .unionAll(pairs.select(col("tgt").as("node"), col("src").as("m")))
-      state = Ckpt(
-        state.join(mates, Seq("node"), "left")
-          .select(col("node"), col("weight"), col("color"),
-            coalesce(col("mate"), col("m")).as("mate")),
-        "hem-state")
-      c += 1
-    }
-    e.unpersist()
-    state.select(col("node"),
-      coalesce(least(col("node"), col("mate")), col("node")).as("label"))
   }
 
   /** Two-hop clustering (SURVEY O3, reference `label_propagation.h:931-1100`):

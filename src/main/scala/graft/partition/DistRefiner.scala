@@ -2,7 +2,7 @@ package graft.partition
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.util.{Ckpt, Log}
+import graft.util.{Ckpt, Log, Par}
 
 /** Distributed balanced refinement — the uncoarsening half of the partitioner.
   *
@@ -45,28 +45,12 @@ object DistRefiner {
       level: Int = -1,
       lastBlockW: Option[Array[Long]] = None
   ): DataFrame =
-    lpRefine(spark, Gather.plain(edges), nodeW, part0, k, lmax, maxIter, seed,
-      runId, level, lastBlockW)
+    lpRefineCaps(spark, Gather.plain(edges), nodeW, part0, k, Array.fill(k)(lmax), maxIter,
+      seed, runId, level, lastBlockW)
 
-  /** [[lpRefine]] over prepared (optionally hub-salted) gather edges. */
-  def lpRefine(
-      spark: SparkSession,
-      ge: GatherEdges,
-      nodeW: DataFrame,
-      part0: DataFrame,
-      k: Int,
-      lmax: Long,
-      maxIter: Int,
-      seed: Long,
-      runId: String,
-      level: Int,
-      lastBlockW: Option[Array[Long]]
-  ): DataFrame =
-    lpRefineCaps(spark, ge, nodeW, part0, k, Array.fill(k)(lmax), maxIter, seed,
-      runId, level, lastBlockW)
-
-  /** [[lpRefine]] with PER-BLOCK caps — during deep-MGP extension a block owning
-    * fk final blocks is capped at fk*Lmax (`partition_utils.cc:21-50` role).
+  /** [[lpRefine]] over prepared (optionally hub-salted) gather edges, with PER-BLOCK
+    * caps — during deep-MGP extension a block owning fk final blocks is capped at
+    * fk*Lmax (`partition_utils.cc:21-50` role).
     */
   def lpRefineCaps(
       spark: SparkSession,
@@ -250,16 +234,9 @@ object DistRefiner {
     val out = Ckpt(
       if (weighted) part else part.select(col("node"), col("block")),
       "ref-part-out")
-    releaseLocalCkpts(localCkpts.toSeq)
+    localCkpts.foreach(Par.releaseLocalCkpt)
     out
   }
-
-  /** Unpersist the RDD blocks behind lazy `localCheckpoint` staging tables. Only
-    * call once nothing can re-execute a plan referencing them (their lineage is
-    * truncated, so an evicted block cannot be recomputed).
-    */
-  private def releaseLocalCkpts(dfs: Seq[DataFrame]): Unit =
-    dfs.foreach(graft.util.Par.releaseLocalCkpt)
 
   /** JET refiner (SURVEY O20, reference `refinement/jet/jet_refiner.cc` — a
     * bulk-synchronous refiner designed for GPUs, i.e. exactly Spark's model). Per
@@ -302,24 +279,12 @@ object DistRefiner {
       runId: String = "",
       level: Int = -1
   ): JetResult =
-    jetRefine(spark, Gather.plain(edges), nodeW, part0, k, lmax, rounds, seed, runId, level)
+    jetRefineCaps(spark, Gather.plain(edges), nodeW, part0, k, Array.fill(k)(lmax), rounds,
+      seed, runId, level)
 
-  /** [[jetRefine]] over prepared (optionally hub-salted) gather edges. */
-  def jetRefine(
-      spark: SparkSession,
-      ge: GatherEdges,
-      nodeW: DataFrame,
-      part0: DataFrame,
-      k: Int,
-      lmax: Long,
-      rounds: Int,
-      seed: Long,
-      runId: String,
-      level: Int
-  ): JetResult =
-    jetRefineCaps(spark, ge, nodeW, part0, k, Array.fill(k)(lmax), rounds, seed, runId, level)
-
-  /** [[jetRefine]] with per-block caps (deep-MGP extension phases). */
+  /** [[jetRefine]] over prepared (optionally hub-salted) gather edges, with per-block
+    * caps (deep-MGP extension phases).
+    */
   def jetRefineCaps(
       spark: SparkSession,
       ge: GatherEdges,
@@ -541,7 +506,7 @@ object DistRefiner {
     val outPart = Ckpt(
       if (weighted) best else best.select(col("node"), col("block")),
       "jet-best")
-    releaseLocalCkpts(localCkpts.toSeq)
+    localCkpts.foreach(Par.releaseLocalCkpt)
     JetResult(outPart, bestCut, bestBlockW, bestFeasible, improved)
   }
 
@@ -725,7 +690,7 @@ object DistRefiner {
         // irrelevant (CsrGraph.fromEdges sorts, ext accumulation is commutative)
         val rSrc = region.select(col("node").as("src"), col("pid"))
         val rDst = region.select(col("node").as("dst"), col("pid"))
-        val rs = graft.util.Par.awaitAll[Array[_]](Seq(
+        val rs = Par.awaitAll[Array[_]](Seq(
           () => region.join(part, "node")
             .select(col("node"), col("pid"), col("block"), col("weight"))
             .collect()
@@ -846,28 +811,14 @@ object DistRefiner {
       maxRounds: Int = 8,
       seed: Long = 42L
   ): DataFrame =
-    balanceTracked(spark, edges, nodeW, part0, k, lmax, maxRounds, seed, None)._1
+    balanceTrackedCaps(spark, edges, nodeW, part0, k, Array.fill(k)(lmax), maxRounds, seed)._1
 
-  /** [[balance]] with driver-tracked block weights: pass the current weights in
-    * (skipping the initial n-row aggregation) and get the final weights back; per
-    * round the weights update from the admitted-move deltas (k^2 rows, read from the
-    * already-checkpointed admitted table) instead of a full re-aggregation.
+  /** [[balance]] with per-block caps (deep-MGP extension phases) and driver-tracked
+    * block weights: pass the current weights in (skipping the initial n-row
+    * aggregation) and get the final weights back; per round the weights update from
+    * the admitted-move deltas (k^2 rows, read from the already-checkpointed admitted
+    * table) instead of a full re-aggregation.
     */
-  def balanceTracked(
-      spark: SparkSession,
-      edges: DataFrame,
-      nodeW: DataFrame,
-      part0: DataFrame,
-      k: Int,
-      lmax: Long,
-      maxRounds: Int = 8,
-      seed: Long = 42L,
-      blockW0: Option[Array[Long]] = None
-  ): (DataFrame, Array[Long]) =
-    balanceTrackedCaps(spark, edges, nodeW, part0, k, Array.fill(k)(lmax), maxRounds,
-      seed, blockW0)
-
-  /** [[balanceTracked]] with per-block caps (deep-MGP extension phases). */
   def balanceTrackedCaps(
       spark: SparkSession,
       edges: DataFrame,
@@ -1032,7 +983,7 @@ object DistRefiner {
     * underload_balancer.cc` — part of the DEFAULT refinement chain,
     * `presets.cc:332-337`; a no-op unless min block weights are configured, exactly
     * like the reference's `has_min_block_weights()` early-out at
-    * `underload_balancer.cc:47`). Dual of [[balanceTracked]]: per underloaded block
+    * `underload_balancer.cc:47`). Dual of [[balanceTrackedCaps]]: per underloaded block
     * (weight < lmin), PULL boundary nodes in by best relative gain until the deficit
     * is covered, donors never dropping below their own lmin (the reference's donor
     * rule at `underload_balancer.cc:243`) and never pulled above lmax.

@@ -21,12 +21,6 @@ final class Dinic(n: Int, arcCapacity: Int) {
     to(m) = u; cap(m) = c; nxt(m) = head(v); head(v) = m; m += 1
   }
 
-  /** Directed arc u->v cap c (residual v->u starts at 0). */
-  def addDirected(u: Int, v: Int, c: Long): Unit = {
-    to(m) = v; cap(m) = c; nxt(m) = head(u); head(u) = m; m += 1
-    to(m) = u; cap(m) = 0L; nxt(m) = head(v); head(v) = m; m += 1
-  }
-
   private val level = new Array[Int](n)
   private val it = new Array[Int](n)
   private val queue = new Array[Int](n)

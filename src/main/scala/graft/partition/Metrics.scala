@@ -68,10 +68,4 @@ object Metrics {
   /** M4 with per-block caps (deep-MGP extension: cap(b) = fk(b) * Lmax). */
   def isBalanced(blockW: Array[Long], caps: Array[Long]): Boolean =
     blockW.indices.forall(b => blockW(b) <= caps(b))
-
-  /** M4 dual: all blocks at or above the min weight (reference `metrics.h:66-93`
-    * `is_min_balanced`); vacuously true when min weights are unset (lmin = 0).
-    */
-  def isMinBalanced(blockW: Array[Long], lmin: Long): Boolean =
-    blockW.forall(_ >= lmin)
 }

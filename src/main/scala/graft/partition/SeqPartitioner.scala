@@ -35,12 +35,6 @@ object SeqPartitioner {
   private val MaxFmPasses = 10
   private val CoarsestSize = 20
 
-  /** Dev-only stage tracing (ProbeWalshaw experiments). */
-  private[graft] var Trace = false
-  private[graft] var traceExtractNs = 0L
-  private[graft] var traceFmNs = 0L
-  private[graft] var traceFlowNs = 0L
-
   final case class Result(part: Array[Int], cut: Long)
 
   /** Best of `attempts` independent seeded runs, preferring feasible then min-cut —
@@ -144,8 +138,6 @@ object SeqPartitioner {
       perfect: Long, lmax: Long, rand: Random, part: Array[Int],
       maxDoublings: Int
   ): List[(Int, Int)] = {
-    val traceT0 = System.nanoTime()
-
     // groups: (blockId = final-range start, #final blocks in the group)
     // Balance anneals across the doublings: intermediate levels get a RELAXED cap
     // (at tight eps every block sits within a few units of its cap right after
@@ -197,7 +189,6 @@ object SeqPartitioner {
         if (fk == 1) List((lo, 1))
         else { val k0 = (fk + 1) / 2; List((lo, k0), (lo + k0, fk - k0)) }
       }
-      if (Trace) println(s"  k'=${groups.size} afterBisect cut=${cut(g, part)} t=${(System.nanoTime() - traceT0) / 1e9}")
       // 3. refine at the new granularity under RELAXED caps (at tight eps every
       // block sits within a few units of its cap right after bisection and per-move
       // balance checks freeze FM/LP entirely — measured: 0 improving moves); step 1
@@ -208,7 +199,6 @@ object SeqPartitioner {
         groups.foreach { case (lo, fk) => capsLoose(lo) = fk * lmaxLoose }
         kwayFmRefine(g, part, k, capsLoose)
         kwayLpRefine(g, part, k, capsLoose, rand, rounds = 3)
-        if (Trace) println(s"  k'=${groups.size} afterRefine cut=${cut(g, part)} t=${(System.nanoTime() - traceT0) / 1e9}")
       }
     }
     // doubling-capped (deep-MGP coarsest stage): tighten every group to its exact
@@ -228,7 +218,6 @@ object SeqPartitioner {
     val slack = math.max(2 * g.maxNodeWeight, lmax / 10)
     kwayFmRefine(g, part, k, capsFinal, slack)
     kwayLpRefine(g, part, k, capsFinal, rand, rounds = 3)
-    if (Trace) println(s"  tighten cut=${cut(g, part)} maxW=${blockWeights(g, part, k).max} t=${(System.nanoTime() - traceT0) / 1e9}")
     var lastCut = Long.MaxValue
     var curCut = cut(g, part)
     var polishIters = 0
@@ -239,23 +228,17 @@ object SeqPartitioner {
     val pairSweeps = if (g.n > 8192) 4 else 8
     while (curCut < lastCut && polishIters < maxPolish) {
       lastCut = curCut
-      val tP0 = System.nanoTime()
       pairwiseFmRefine(g, part, k, lmax, maxSweeps = pairSweeps)
-      val tP1 = System.nanoTime()
       kwayFmRefine(g, part, k, capsFinal, slack)
-      val tP2 = System.nanoTime()
       kwayLpRefine(g, part, k, capsFinal, rand, rounds = 2)
-      val tP3 = System.nanoTime()
       curCut = cut(g, part)
       polishIters += 1
-      if (Trace) println(f"  polish#$polishIters cut=$curCut maxW=${blockWeights(g, part, k).max} t=${(System.nanoTime() - traceT0) / 1e9} (pair=${(tP1 - tP0) / 1e9}%.2f fm=${(tP2 - tP1) / 1e9}%.2f lp=${(tP3 - tP2) / 1e9}%.2f | pairExtract=${traceExtractNs / 1e9}%.2f pairFm=${traceFmNs / 1e9}%.2f pairFlow=${traceFlowNs / 1e9}%.2f cumulative)")
     }
     // feasibility backstop (slack-tolerant refinement can strand residual overload
     // when LP eviction finds no adjacent room), then one more pairwise polish
     if (blockWeights(g, part, k).zip(capsFinal).exists { case (w0, c) => w0 > c }) {
       forceFeasible(g, part, k, capsFinal)
       pairwiseFmRefine(g, part, k, lmax)
-      if (Trace) println(s"  backstop cut=${cut(g, part)} maxW=${blockWeights(g, part, k).max}")
     }
     // V-cycle count scales down with size: on large coarse handoffs (inside the deep
     // pipeline) the distributed JET/LP levels above recover the quality, so one cycle
@@ -496,25 +479,17 @@ object SeqPartitioner {
           // induced subgraph over blocks {a, b} from the member lists — identical
           // (sub, ids) to a whole-graph inducedSubgraph scan: ids ascend (merge of
           // two ascending disjoint lists) and neighbors keep adjacency order
-          val tE0 = if (Trace) System.nanoTime() else 0L
           val (sub, ids) = inducedByPair(g, remap, mem(a), mem(b))
-          if (Trace) traceExtractNs += System.nanoTime() - tE0
           var improvedPair = false
           if (sub.n > 1) {
             val side = new Array[Int](sub.n)
             var j = 0
             while (j < sub.n) { side(j) = if (part(ids(j)) == b) 1 else 0; j += 1 }
             val before = cut(sub, side)
-            val tF0 = if (Trace) System.nanoTime() else 0L
             fmRefine(sub, side, lmax, lmax, slack = math.max(2 * sub.maxNodeWeight, lmax / 10))
-            val tF1 = if (Trace) System.nanoTime() else 0L
             // flow step (O21): min S-T cut through the border corridor — finds the
             // non-local re-routings move-based FM cannot; rejects infeasible cuts
             FlowRefine.refineRegion(sub, side, delta = 6, lmax, lmax)
-            if (Trace) {
-              traceFmNs += tF1 - tF0
-              traceFlowNs += System.nanoTime() - tF1
-            }
             if (cut(sub, side) < before) {
               improvedSweep = true
               improvedPair = true

@@ -47,4 +47,26 @@ class ResumableSpec extends SparkFunSuite {
       .collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
     assert(again === resumed)
   }
+
+  test("a resumed run past checkpointEvery equals run, with one metrics row per superstep") {
+    val und = (0L until 30L).map(i => (i, (i + 1) % 30)) ++ Seq((0L, 15L), (7L, 22L))
+    val edges = undirectedUnit(und)
+    val root = Files.createTempDirectory("graft-resume-past-cut").toString
+    // run cuts its lineage after superstep 8 (default checkpointEvery) and goes on
+    val fresh = PageRank.run(spark, edges, iterations = 10)
+      .collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
+
+    PageRank.runResumable(spark, edges, iterations = 3, RunCheckpoint("job2", root))
+    val run = RunCheckpoint("job2", root)
+    val resumed = PageRank.runResumable(spark, edges, iterations = 10, run)
+      .collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
+    assert(run.isDone && run.latestStep === Some(10))
+    assert(resumed.keySet === fresh.keySet)
+    fresh.foreach { case (node, pr) =>
+      assert(math.abs(resumed(node) - pr) < 1e-12, s"node $node: $pr vs ${resumed(node)}")
+    }
+    val lines = run.metricsLines
+    assert(lines.size === 10, s"expected 10 metrics rows, got:\n${lines.mkString("\n")}")
+    assert(lines.last.contains("\"superstep\":10"))
+  }
 }

@@ -46,8 +46,8 @@ class HubSplitSpec extends SparkFunSuite {
     val nodeW = (0L to 40L).map((_, 1L)).toDF("node", "weight")
     val part0 = (0L to 40L).map(n => (n, (n % 4).toInt)).toDF("node", "block")
     def run(ge: GatherEdges): Seq[(Long, Int)] =
-      DistRefiner.lpRefine(spark, ge, nodeW, part0, 4, lmax = 12L,
-        maxIter = 4, seed = 11L, runId = "", level = -1, lastBlockW = None)
+      DistRefiner.lpRefineCaps(spark, ge, nodeW, part0, 4, Array.fill(4)(12L),
+        maxIter = 4, seed = 11L)
         .collect().map(r => (r.getLong(0), r.getInt(1))).sortBy(_._1).toSeq
     val plain = run(Gather.plain(edges.repartition(col("dst"))))
     val split = run(Gather.prepare(edges, hubDegThreshold = 10L, nSalt = 4))

@@ -240,6 +240,16 @@ class PersistHygieneSpec extends SparkFunSuite {
     assert(res.assignment.inputFiles.forall(_.contains(added.head)))
     assert(res.assignment.count() == n)
   }
+
+  test("PageRank.runResumable leaves no pinned RDDs behind") {
+    val edges = undirectedUnit((0L until 40L).map(i => (i, (i + 1) % 40)) ++ Seq((0L, 20L)))
+    val root = java.nio.file.Files.createTempDirectory("graft-pr-hygiene").toString
+    val before = spark.sparkContext.getPersistentRDDs.keySet
+    val ranks = graft.ops.PageRank.runResumable(spark, edges, iterations = 3,
+      graft.util.RunCheckpoint("hygiene", root))
+    assert(spark.sparkContext.getPersistentRDDs.keySet === before)
+    assert(math.abs(ranks.agg(sum(col("pr"))).first().getDouble(0) - 1.0) < 1e-9)
+  }
 }
 
 /** The overload balancer when a block weighs twice its cap or more: the leftover
