@@ -90,14 +90,17 @@ object ScalingBench {
       val hubThreshold = sys.env.getOrElse("SPARK_GRAFT_HUB_THRESHOLD", "20000").toLong
       val (tRefineHub, nHubs) =
         if (hubThreshold <= 0L || skipRefine) (tRefine, 0L)
-        else {
-          val geHub = graft.partition.Gather.prepare(eRef, hubThreshold)
+        else graft.util.Stage.scope { st =>
+          val geHub = graft.partition.Gather.prepare(st, eRef, hubThreshold)
           val n = geHub.hubs.map(_.count()).getOrElse(0L)
           def timeRefineHub(iters: Int, seed: Long): Double = {
             val t0 = System.nanoTime()
-            graft.partition.DistRefiner.lpRefineCaps(
-              spark, geHub, nodeW, part0, k, Array.fill(k)(lmax), maxIter = iters, seed = seed
-            ).count()
+            st.scope { in =>
+              val part = in.local(part0.join(nodeW, "node"))
+              in.durable(graft.partition.DistRefiner.lpRefineCaps(
+                in, spark, geHub, part, k, Array.fill(k)(lmax), maxIter = iters, seed = seed
+              ).select(col("node"), col("block")), "ref-part-out").count()
+            }
             (System.nanoTime() - t0) / 1e9
           }
           timeRefineHub(1, 99L) // warmup

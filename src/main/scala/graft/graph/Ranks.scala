@@ -3,6 +3,7 @@ package graft.graph
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
+import graft.util.Stage
 
 /** Distributed dense ranking — the "rank-compaction join" (SURVEY S9/O5) that mints
   * consecutive ids 0..n-1 for a key column WITHOUT a global single-partition window.
@@ -41,11 +42,11 @@ object Ranks {
   }
 
   /** (key, rankCol) for every distinct value of `key` in `df`, ranks 0..n-1 ascending. */
-  def denseRank(df: DataFrame, key: String, rankCol: String): DataFrame = {
-    // checkpoint the locally-ranked table ONCE: `_pid`/`_lrank` become frozen data, so
+  def denseRank(df: DataFrame, key: String, rankCol: String): DataFrame = Stage.scope { st =>
+    // write the locally-ranked table ONCE: `_pid`/`_lrank` become frozen data, so
     // the two consumers below (counts + final join) cannot observe different range
     // boundaries from a re-sampled exchange
-    val local = graft.util.Ckpt(localRanked(df, key), "rank")
+    val local = st.durable(localRanked(df, key), "rank")
     // per-partition counts: <= `parts` rows; exclusive prefix sum via a tiny
     // broadcast theta self-join (no global window)
     val counts = local.groupBy(col("_pid")).agg(count(lit(1)).as("_cnt"))

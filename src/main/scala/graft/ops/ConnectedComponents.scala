@@ -2,7 +2,7 @@ package graft.ops
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.util.Ckpt
+import graft.util.Stage
 
 /** Connected components via alternating large-star / small-star (Kiveris et al.,
   * "Connected Components in MapReduce and Beyond", SoCC'14) — the north-star-mandated
@@ -25,24 +25,20 @@ object ConnectedComponents {
     * @return (node BIGINT, component BIGINT) where component = min node id of the
     *         connected component (exact labels at convergence).
     */
-  def run(spark: SparkSession, edges: DataFrame, maxIter: Int = 50): DataFrame = {
-    // Per-round state staging is a LAZY localCheckpoint materialized by the fixpoint-
+  def run(spark: SparkSession, edges: DataFrame, maxIter: Int = 50): DataFrame = Stage.scope { st =>
+    // Per-round state staging is a LAZY local checkpoint materialized by the fixpoint-
     // signature aggregate (count, xor-of-pair-hashes — order-independent, overflow-
     // free under ANSI mode): still ONE job per round, but no parquet round-trip
     // (optimization r06, the lpRefine staging pattern — the plan truncation is what
     // matters, and the lazy local checkpoint provides it without a storage write).
-    // LogicalRDD keeps origin stats (see Ckpt's docstring), so the state is reset to
-    // a parquet checkpoint every `statsResetEvery` rounds on LONG runs; typical runs
-    // (O(log n) rounds) never pay a mid-loop write. Blocks are released after the
-    // final parquet checkpoint below.
+    // A local checkpoint keeps origin stats (see graft.util.Stage), so the state is
+    // reset to a parquet checkpoint every `statsResetEvery` rounds on LONG runs;
+    // typical runs (O(log n) rounds) never pay a mid-loop write.
     val statsResetEvery = 8
-    // superseded rounds' staged blocks, released eagerly one round later (round
-    // t's blocks are dead as soon as round t+1's staging aggregate has run —
-    // the same staleBlocks discipline as DistCoarsener.lpCluster); a slow
-    // convergence must not pin O(rounds) copies of the pair table
-    var stale: Seq[DataFrame] = Nil
+    // a round's staged pairs are dead as soon as the next round's staging aggregate
+    // has run: a slow convergence must not pin O(rounds) copies of the pair table
     def stageWithSig(df: DataFrame): (DataFrame, (Long, Long)) = {
-      val staged = df.localCheckpoint(false)
+      val staged = st.local(df)
       val r = staged.agg(
         count(lit(1)).as("c"),
         coalesce(expr("bit_xor(xxhash64(u, v))"), lit(0L)).as("h")).first()
@@ -99,26 +95,21 @@ object ConnectedComponents {
           .repartition(col("u"))
           .distinct())
 
-      // the previous round's staged blocks are dead — the only jobs that read
-      // them (this round's staging aggregate) have run
-      stale.foreach(graft.util.Par.releaseLocalCkpt)
-      stale = Seq(pairs)
+      st.release(pairs)
       converged = newSig == sig
       sig = newSig
       pairs = rewired
       it += 1
       if (it % statsResetEvery == 0 && !converged) {
-        val ck = Ckpt(pairs, "cc-pairs") // the write reads the staged blocks
-        stale = stale :+ pairs
+        val ck = st.durable(pairs, "cc-pairs")
+        st.release(pairs)
         pairs = ck
       }
     }
 
-    // final star forest parquet-checkpointed once (flat scan + fresh leaf stats for
-    // the caller, exactly as before), after which the remaining staging blocks are
-    // released (releaseLocalCkpt is a no-op on parquet-backed frames)
-    val finalPairs = Ckpt(pairs.select(col("u"), col("v")), "cc-pairs-out")
-    (stale :+ pairs).foreach(graft.util.Par.releaseLocalCkpt)
+    // final star forest written once (flat scan + fresh leaf stats for the caller);
+    // the scope releases the last staged round when it closes
+    val finalPairs = st.durable(pairs.select(col("u"), col("v")), "cc-pairs-out")
     allNodes
       .join(finalPairs.select(col("u").as("node"), col("v").as("root")), Seq("node"), "left")
       .select(col("node"), coalesce(col("root"), col("node")).as("component"))

@@ -3,8 +3,7 @@ package graft.ops
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
-import graft.util.Ckpt
-import org.apache.spark.storage.StorageLevel
+import graft.util.Stage
 
 /** Label-propagation community detection — the reference's LP clustering kernel
   * (`/root/reference/kaminpar-shm/coarsening/clustering/lp_clusterer.cc` over the
@@ -34,14 +33,11 @@ object LabelPropagation {
       edges: DataFrame,
       maxIter: Int = 20,
       seed: Long = 42L
-  ): DataFrame = {
-    // cache the edge projection unless the caller's cache already serves it: the
-    // select of the same three columns resolves to the caller's cache entry, and
-    // unpersisting that entry at the end would drop the caller's cache
-    val projected = edges.select(col("src"), col("dst"), col("w"))
-    val ownsCache = projected.storageLevel == StorageLevel.NONE
-    val e = if (ownsCache) projected.persist() else projected
-    var labels = Ckpt(
+  ): DataFrame = Stage.scope { st =>
+    // the edge projection is cached for the call unless the caller's cache already
+    // serves it (the select of the same three columns resolves to that entry)
+    val e = st.cache(edges.select(col("src"), col("dst"), col("w")))
+    var labels = st.durable(
       e.select(col("src").as("node")).distinct().withColumn("label", col("node")),
       "lp-labels")
 
@@ -84,7 +80,7 @@ object LabelPropagation {
 
       // checkpoint WITH the moved flag, then read the count from the checkpoint —
       // one execution of the superstep plan, not two
-      val staged = Ckpt(
+      val staged = st.durable(
         updatedActive.unionAll(inactive.withColumn("moved", lit(false))),
         "lp-labels")
       val moves = staged.filter(col("moved")).count()
@@ -92,7 +88,6 @@ object LabelPropagation {
       labels = staged.select(col("node"), col("label"))
       it += 1
     }
-    if (ownsCache) e.unpersist()
     labels
   }
 

@@ -2,7 +2,7 @@ package graft.ops
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.util.{Ckpt, RunCheckpoint}
+import graft.util.{RunCheckpoint, Stage}
 
 /** PageRank as an iterative batch of shuffle-hash-join gather-scatter supersteps
   * (north-star companion operator; standard public semantics — damping 0.85, dangling
@@ -12,11 +12,12 @@ import graft.util.{Ckpt, RunCheckpoint}
   * `GROUP BY dst` (gather sum). At cluster scale the edge table is bucketed/partitioned
   * by `src`, so the big side never re-shuffles: the per-iteration cost is one shuffle of
   * the (n-row) rank table plus one map-side-combined aggregation of contributions.
-  * [[run]] truncates lineage every `checkpointEvery` supersteps with a [[Ckpt]] (a
-  * parquet write and read-back outside a partition call's staging scope) so the plan
-  * does not grow with iteration count; [[runResumable]] writes every superstep's state
-  * durably instead (Iceberg snapshots with per-iteration metrics rows in prod), which
-  * both truncates lineage and makes the run resumable from the last superstep.
+  * [[run]] truncates lineage every `checkpointEvery` supersteps with a durable stage
+  * (a parquet write and read-back) so the plan does not grow with iteration count;
+  * [[runResumable]] writes every superstep's state durably instead (Iceberg
+  * snapshots with per-iteration metrics rows in prod), which both truncates lineage
+  * and makes the run resumable from the last superstep. Both write their ranks
+  * durably and release the edge and base tables they cache before returning.
   */
 object PageRank {
 
@@ -31,19 +32,22 @@ object PageRank {
       damping: Double = 0.85,
       checkpointEvery: Int = 8
   ): DataFrame =
-    supersteps(edges, iterations, damping, None) { step =>
-      if (step.index % checkpointEvery == 0 && step.index < iterations)
-        Ckpt(step.next, "pr-ranks").repartition(col("node"))
-      else step.next
-    }._1.select(col("node"), col("pr")) // reads the persisted tables lazily: not released
+    Stage.scope { st =>
+      val state = supersteps(st, edges, iterations, damping, None) { step =>
+        if (step.index % checkpointEvery == 0 && step.index < iterations)
+          st.durable(step.next, "pr-ranks").repartition(col("node"))
+        else step.next
+      }
+      // the lazy ranks read the scope's cached tables: the result is the one write
+      st.durable(state.select(col("node"), col("pr")), "pr-out")
+    }
 
   /** Resumable variant: every superstep's state is durably checkpointed with a
     * metrics row (superstep, l1 delta, wall ms); a restarted run continues from the
     * latest committed superstep instead of recomputing (north rule: resumable
     * convergence with per-partition lineage + per-iteration metrics). The superstep
     * loop is [[run]]'s — a fresh N-iteration run and an interrupted-then-resumed one
-    * produce the same ranks. The result is read back from the last checkpoint, and
-    * nothing the call persisted outlives it.
+    * produce the same ranks. The result is read back from the last checkpoint.
     */
   def runResumable(
       spark: SparkSession,
@@ -53,16 +57,15 @@ object PageRank {
       damping: Double = 0.85
   ): DataFrame = {
     val resumeFrom = run.latestStep.map(s => (s, run.load(spark, s))) // 1-based supersteps
-    val (state, persisted) = supersteps(edges, iterations, damping, resumeFrom) { step =>
+    val state = Stage.scope(st => supersteps(st, edges, iterations, damping, resumeFrom) { step =>
       val saved = run.save(step.index, step.next) // durable write first; delta read is cheap after
       val l1 = saved.join(step.prev.select(col("node"), col("pr").as("prevPr")), "node")
         .agg(sum(abs(col("pr") - col("prevPr")))).first().getDouble(0)
       val wallMs = (System.nanoTime() - step.startNs) / 1000000
       run.appendMetrics(step.index, Map("l1_delta" -> l1, "wall_ms" -> wallMs, "n" -> step.n.toLong))
       saved
-    }
+    })
     run.markDone()
-    persisted.foreach(_.unpersist(blocking = true))
     state.select(col("node"), col("pr"))
   }
 
@@ -74,17 +77,18 @@ object PageRank {
   /** The superstep loop shared by [[run]] and [[runResumable]], from the initial
     * uniform state or from `resumeFrom` = (superstep, state). `afterStep` gets each
     * finished superstep and returns the state the loop continues from (the place to
-    * cut lineage). Returns the final (node, outdeg, pr) state and the tables this
-    * call persisted, which the state may still read.
+    * cut lineage). Returns the final (node, outdeg, pr) state, which may read the
+    * tables cached in `st`.
     */
   private def supersteps(
+      st: Stage,
       edges: DataFrame,
       iterations: Int,
       damping: Double,
       resumeFrom: Option[(Int, DataFrame)]
-  )(afterStep: Step => DataFrame): (DataFrame, Seq[DataFrame]) = {
+  )(afterStep: Step => DataFrame): DataFrame = {
     // Co-partitioning contract: the (big) edge table is hash-partitioned by src ONCE
-    // and pinned; every superstep's gather join then reuses that partitioning, so only
+    // and cached; every superstep's gather join then reuses that partitioning, so only
     // the n-row state table moves through the shuffle — the edge table never
     // re-shuffles (the north-star "CSR-partitioned adjacency" in DataFrame terms; on a
     // real cluster this is the bucketed-by-src Iceberg layout).
@@ -92,20 +96,19 @@ object PageRank {
     // every superstep's sort-merge gather join skips re-sorting the m-row edge side
     // (r06; the at-rest analog is a bucketed+sorted-by-src Iceberg layout) — only
     // the n-row rank state is sorted per superstep.
-    val e = edges.select(col("src"), col("dst"))
-      .repartition(col("src")).sortWithinPartitions(col("src")).persist()
+    val e = st.cache(edges.select(col("src"), col("dst"))
+      .repartition(col("src")).sortWithinPartitions(col("src")))
     // static per-node base: node list with out-degree in ONE hash aggregation (each
     // edge emits (src, 1) and (dst, 0); sum of flags = out-degree, and every node of
     // either endpoint role appears), so the edge stream shuffles once (guide
     // §2.3/§2.4). Out-degree rides in the iterated state, saving a join per superstep.
-    val base = e
+    val base = st.cache(e
       .select(explode(array(
         struct(col("src").as("node"), lit(1L).as("c")),
         struct(col("dst").as("node"), lit(0L).as("c"))
       )).as("p"))
       .groupBy(col("p.node").as("node"))
-      .agg(sum(col("p.c")).as("outdeg"))
-      .persist()
+      .agg(sum(col("p.c")).as("outdeg")))
     // n and the dangling-node check in ONE driver action
     val s0 = base.agg(
       count(lit(1)).as("n"),
@@ -140,6 +143,6 @@ object PageRank {
       it += 1
       state = afterStep(Step(it, n, t0, state, next))
     }
-    (state, Seq(e, base))
+    state
   }
 }

@@ -3,6 +3,7 @@ package graft.ops
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions
 import org.apache.spark.sql.functions._
+import graft.util.Stage
 
 /** Triangle counting by degree-ordered orientation (north-star companion operator).
   *
@@ -31,15 +32,15 @@ object Triangles {
   }
 
   /** Total triangle count (one row: `triangles BIGINT`). */
-  def count(spark: SparkSession, edges: DataFrame): DataFrame = {
-    // materialized once (parquet round-trip) so the 3-way self-join reads files, not
+  def count(spark: SparkSession, edges: DataFrame): DataFrame = Stage.scope { st =>
+    // written durably once (parquet round-trip) so the 3-way self-join reads files, not
     // a 3x-recomputed orient plan — and nothing stays pinned in executor memory.
     // Deliberately NOT a lazy cache (r06 A/B: persist() measured +3 s): the parquet
     // files carry accurate size stats at PLANNING time, which is what lets the
     // closing e3 join plan as a broadcast hash join — with a lazy cache the
     // stats are the huge pre-aggregation estimate, the join plans as sort-merge,
     // and the whole wedge stream gets shuffled (guide §3.1).
-    val o = graft.util.Ckpt(orient(edges), "tri-orient")
+    val o = st.durable(orient(edges), "tri-orient")
     val e1 = o.as("e1")
     val e2 = o.as("e2")
     val e3 = o.as("e3")
@@ -51,8 +52,8 @@ object Triangles {
   }
 
   /** Per-node triangle participation counts: (node, triangles). */
-  def perNode(spark: SparkSession, edges: DataFrame): DataFrame = {
-    val o = graft.util.Ckpt(orient(edges), "tri-orient")
+  def perNode(spark: SparkSession, edges: DataFrame): DataFrame = Stage.scope { st =>
+    val o = st.durable(orient(edges), "tri-orient")
     val e1 = o.as("e1")
     val e2 = o.as("e2")
     val e3 = o.as("e3")

@@ -1,9 +1,9 @@
 package graft.partition
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Observation, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
-import graft.util.{Ckpt, Log}
+import graft.util.{Log, Stage}
 
 /** Distributed LP clustering + contraction — the coarsening half of the partitioner.
   *
@@ -33,9 +33,12 @@ object DistCoarsener {
 
   /** One LP clustering run: returns (node, label) with cluster weights <= cap.
     * Labels start as self; <=maxIter supersteps or until no moves (reference default 5,
-    * `presets.cc:143`).
+    * `presets.cc:143`). The returned frame reads the last superstep's blocks, staged
+    * in `st`: coarsen and VCycle run it and the level's contraction in a child scope
+    * and stage the level's artifacts in the parent.
     */
   def lpCluster(
+      st: Stage,
       spark: SparkSession,
       edges: DataFrame,
       nodeW: DataFrame,
@@ -44,16 +47,7 @@ object DistCoarsener {
       seed: Long = 42L,
       hubDegThreshold: Long = 0L,
       largeDegThreshold: Long = Long.MaxValue,
-      maxNumNeighbors: Long = Long.MaxValue,
-      /** Receives the loop-ending staged localCheckpoint frames that BACK the
-        * returned labels. The RETURNED FRAME READS THESE BLOCKS: the caller must
-        * release them (Par.releaseLocalCkpt) only after its last job consuming
-        * the clustering has run — coarsen/VCycle do so after their contraction
-        * artifacts are staged (Ckpt). Callers that don't collect them
-        * (None) leave the blocks to the ContextCleaner, which reclaims on GC —
-        * correct but unpredictable timing (the persist-hygiene flake, r06).
-        */
-      staleOut: Option[scala.collection.mutable.Buffer[DataFrame]] = None
+      maxNumNeighbors: Long = Long.MaxValue
   ): DataFrame = {
     val base = edges.select(col("src"), col("dst"), col("w"))
     // High-degree LP filters (SURVEY P4, reference `label_propagation.h:106-118`,
@@ -79,30 +73,27 @@ object DistCoarsener {
                 .cast("double") < lit(maxNumNeighbors.toDouble * 1e6) / col("deg"))
           .select(col("src"), col("dst"), col("w"))
       }
-    // edge table hash-partitioned by the gather key ONCE and pinned (co-partitioning);
+    // edge table hash-partitioned by the gather key ONCE and cached (co-partitioning);
     // hub splitting (Gather.prepare) when a threshold is configured
     val ge =
       if (hubDegThreshold > 0L)
-        Gather.prepare(gatherInput, hubDegThreshold)
+        Gather.prepare(st, gatherInput, hubDegThreshold)
       else
         // sorted cache: superstep gather joins on dst skip the m-row sort (r06)
-        Gather.plain(
-          gatherInput.repartition(col("dst")).sortWithinPartitions(col("dst")).persist())
+        Gather.plain(st.cache(
+          gatherInput.repartition(col("dst")).sortWithinPartitions(col("dst"))))
     val e = ge.e
     // entry labels as a LAZY local checkpoint (r06: was a parquet write+read) —
     // superstep 0's staging job materializes it and its several superstep-0
     // consumers (cluster weights, payload join, gather labels, active state) read
-    // the shared blocks; released once superstep 1's staging lands, like every
-    // other staged table
-    var labels = nodeW.select(col("node"), col("node").as("label"), col("weight"))
-      .localCheckpoint(false)
+    // the shared blocks
+    var labels = st.local(nodeW.select(col("node"), col("node").as("label"), col("weight")))
 
     var it = 0
     var quiet = 0
-    // block-backed staging/commit tables awaiting release (superseded once the NEXT
-    // superstep's staged blocks land; tables that end the loop are instead
-    // reclaimed by the ContextCleaner when the caller drops the DataFrame)
-    var staleBlocks: Seq[DataFrame] = Seq(labels)
+    // the staged tables of the previous superstep, released once this superstep's
+    // staged blocks land (a rolling window of one superstep)
+    var previous: Seq[DataFrame] = Seq(labels)
     while (it < maxIter && quiet < 2) {
       // alternating deterministic halves (same rationale as community LP: decorrelate
       // simultaneous neighbor moves, reproducibly)
@@ -157,7 +148,7 @@ object DistCoarsener {
       // staged behind a lazy localCheckpoint: the admission below reads the movers
       // twice (demand aggregate + join), and without the cut Spark plans the whole
       // gather -> argmax subtree once per read. The staging job materializes it.
-      val movers = candidates.filter(col("cand") =!= col("cur")).localCheckpoint(false)
+      val movers = st.local(candidates.filter(col("cand") =!= col("cur")))
 
       // O23 capacity protocol, proportional form (round-4 judge fix #2): per target
       // cluster, aggregate the movers' weight demand D and admit each mover with a
@@ -177,11 +168,10 @@ object DistCoarsener {
       // admitted rows) come from the materializing aggregate — still one job, no
       // second scan, no storage round-trip. D/allow ride in the blocks solely for
       // that aggregate; every downstream projection drops them.
-      val staged = labels
+      val staged = st.local(labels
         .join(tentative, Seq("node"), "left")
         .select(col("node"), col("label"), col("weight"), col("cand"),
-          col("D"), col("allow"))
-        .localCheckpoint(false)
+          col("D"), col("allow")))
       val mRow = staged.agg(
         sum(when(col("cand").isNotNull, 1L).otherwise(0L)).as("moves"),
         max(when(col("cand").isNotNull, col("D") - col("allow"))
@@ -197,7 +187,7 @@ object DistCoarsener {
       // truncation for the next superstep's 3 consumers, no storage round-trip; an
       // UNtruncated lazy-projection commit was tried earlier and cost ~+14 s/run at
       // sf0.1 because the rollback subplan re-executes ~4x inside the next
-      // superstep's write). Blocks are released once the next staged write lands.
+      // superstep's write).
       var committed = moves
       var newCommitBlocks: Option[DataFrame] = None
       val newLabels =
@@ -211,27 +201,25 @@ object DistCoarsener {
           // attached below a lazy localCheckpoint are not delivered when a later
           // query materializes the RDD); the old-label column is dropped by the
           // lazy projection below, which reads the flat blocks
-          val committedFull = commitWithRollbackFull(staged, capacity)
-            .localCheckpoint(false)
+          val committedFull = st.local(commitWithRollbackFull(staged, capacity))
           newCommitBlocks = Some(committedFull)
           committed = committedFull
             .agg(sum(when(col("nl") =!= col("label"), 1L).otherwise(0L)).as("c"))
             .first().getLong(0)
           committedFull.select(col("node"), col("nl").as("label"), col("weight"))
         }
-      // every job referencing the PREVIOUS superstep's block-backed tables has now
-      // run (this superstep's staging aggregate AND its rollback count, whose
-      // `capacity` subplan re-reads the previous labels) — release them
-      staleBlocks.foreach(graft.util.Par.releaseLocalCkpt)
-      staleBlocks = Seq(movers, staged) ++ newCommitBlocks
+      // every job reading the previous superstep's tables has run (this superstep's
+      // staging aggregate AND its rollback count, whose `capacity` subplan re-reads
+      // the previous labels)
+      previous.foreach(st.release)
+      previous = Seq(movers, staged) ++ newCommitBlocks
       labels = newLabels
       Log.info(
         s"lpCluster superstep $it: tentativeMoves=$moves committed=$committed contention=$contention")
       quiet = if (committed == 0L) quiet + 1 else 0
       it += 1
     }
-    e.unpersist()
-    staleOut.foreach(_ ++= staleBlocks)
+    st.release(e)
     labels.select(col("node"), col("label"))
   }
 
@@ -317,7 +305,8 @@ object DistCoarsener {
     * role, ESA'25 threshold sparsification): when the (coarse) graph carries more
     * edges than `targetM`, keep only the heaviest — threshold from an approximate
     * weight quantile, ties broken by a SYMMETRIC hash of the unordered endpoint pair
-    * so both directions of an undirected edge live or die together.
+    * so both directions of an undirected edge live or die together. The filter is
+    * lazy; [[coarsen]] stages it with the level artifacts.
     */
   def sparsify(spark: SparkSession, edges: DataFrame, targetM: Long): DataFrame = {
     val m = edges.count()
@@ -328,9 +317,7 @@ object DistCoarsener {
       val tie = pmod(
         xxhash64(least(col("src"), col("dst")), greatest(col("src"), col("dst"))),
         lit(1000000L)).cast("double") / 1e6
-      Ckpt(
-        edges.filter(col("w") > thr || (col("w") === thr && tie < frac)),
-        "sparsified")
+      edges.filter(col("w") > thr || (col("w") === thr && tie < frac))
     }
   }
 
@@ -414,11 +401,30 @@ object DistCoarsener {
   }
 
   /** Coarsening driver loop (SURVEY O9): repeat LP+contract while the graph is larger
-    * than `targetN` and each level shrinks >=5%. Every level's artifacts are
-    * checkpointed (lineage truncation + resumability). Returns the stack of levels,
-    * finest first, plus the final coarse (edges, nodeW).
+    * than `targetN` and each level shrinks >=5%. Every level's artifacts are written
+    * to parquet, so they outlive the call. Returns the stack of levels, finest first,
+    * plus the final coarse (edges, nodeW).
     */
   def coarsen(
+      spark: SparkSession,
+      edges0: DataFrame,
+      nodeW0: DataFrame,
+      k: Int,
+      eps: Double,
+      targetN: Long,
+      seed: Long,
+      targetM: Long = Long.MaxValue
+  ): (Seq[DistCoarsener.Level], DataFrame, DataFrame) =
+    Stage.scope(st =>
+      coarsenIn(st, durable = true, spark, edges0, nodeW0, k, eps, targetN, seed, targetM))
+
+  /** [[coarsen]] with the level artifacts staged in `st` (in memory), or written to
+    * parquet when `durable`. Each level's clustering runs in a child scope that
+    * closes once the level's artifacts are staged.
+    */
+  private[partition] def coarsenIn(
+      st: Stage,
+      durable: Boolean,
       spark: SparkSession,
       edges0: DataFrame,
       nodeW0: DataFrame,
@@ -455,6 +461,24 @@ object DistCoarsener {
     var n = n0
     var m = if (targetM == Long.MaxValue) 0L else edges.count()
     val levels = scala.collection.mutable.ArrayBuffer.empty[Level]
+    // a level artifact and its row count, from the one job that stages it
+    def keep(df: DataFrame, tag: String): (DataFrame, Long) =
+      if (!durable) st.memory(df)
+      else {
+        val obs = Observation()
+        val out = st.durable(df.observe(obs, count(lit(1)).as("c")), tag)
+        (out, obs.get("c").asInstanceOf[Number].longValue)
+      }
+    // the three level-artifact stages are independent actions over the same
+    // clustering blocks — submit them concurrently so their fixed job costs overlap
+    // (guide §2.6). The coarse node and edge counts come from the stages themselves
+    def keepLevel(lv: Level): ((DataFrame, Long), (DataFrame, Long), DataFrame) = {
+      val rs = graft.util.Par.awaitAll(Seq(
+        () => keep(lv.coarseEdges, "cedges"),
+        () => keep(lv.coarseNodeW, "cnodew"),
+        () => keep(lv.mapping, "mapping")))
+      (rs(0), rs(1), rs(2)._1)
+    }
     var converged = false
     val C = 2000L
     // keep coarsening while EITHER bound is exceeded: the driver handoff collects
@@ -480,46 +504,30 @@ object DistCoarsener {
           // cannot shrink them, so without this an isolated-heavy graph (dangling
           // URLs are ~half a crawl's vertex set) never coarsens its singleton tail.
           // Across levels the pairs re-chain into 4s, 8s, ... until the cap binds.
-          val lpStale = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
-          val lpOut = lpCluster(spark, edges, nodeW, cap, maxIter = 5,
-            seed = seed + levels.length, hubDegThreshold = hubDegThreshold,
-            largeDegThreshold = largeDegThreshold, maxNumNeighbors = maxNumNeighbors,
-            staleOut = Some(lpStale))
-          val clustering =
-            if (noIsolatedFinest && levels.isEmpty) lpOut
-            else chainIsolated(spark, lpOut,
-              nodeW, edges, cap, seed + 977L * (levels.length + 1))
-          var level = contract(edges, nodeW, clustering)
-          // the three level-artifact stages are independent actions over the same
-          // (cached) clustering blocks — submit them concurrently so their fixed
-          // job costs overlap (guide §2.6). The coarse node and edge counts come
-          // from the cnodew and cedges stages themselves, not from count jobs
-          def ckptLevel(lv: Level): ((DataFrame, Long), (DataFrame, Long), DataFrame) = {
-            val rs = graft.util.Par.awaitAll[Any](Seq(
-              () => Ckpt.counted(lv.coarseEdges, "cedges"),
-              () => Ckpt.counted(lv.coarseNodeW, "cnodew"),
-              () => Ckpt(lv.mapping, "mapping")))
-            (rs(0).asInstanceOf[(DataFrame, Long)], rs(1).asInstanceOf[(DataFrame, Long)],
-              rs(2).asInstanceOf[DataFrame])
+          // the clustering's blocks live in a child scope: nothing reads them once
+          // the level artifacts are staged (the two-hop branch below re-derives the
+          // clustering from the mapping)
+          var ((ce, cmNow), (cw, cnNow), mp) = st.scope { lv =>
+            val lpOut = lpCluster(lv, spark, edges, nodeW, cap, maxIter = 5,
+              seed = seed + levels.length, hubDegThreshold = hubDegThreshold,
+              largeDegThreshold = largeDegThreshold, maxNumNeighbors = maxNumNeighbors)
+            val clustering =
+              if (noIsolatedFinest && levels.isEmpty) lpOut
+              else chainIsolated(spark, lpOut,
+                nodeW, edges, cap, seed + 977L * (levels.length + 1))
+            keepLevel(contract(edges, nodeW, clustering))
           }
-          var ((ce, cmNow), (cw, cnNow), mp) = ckptLevel(level)
-          // all three level artifacts are staged — nothing reads the clustering
-          // again (the two-hop branch below re-derives it from the mp stage), so
-          // the superstep blocks backing it are released deterministically here
-          // instead of waiting for the ContextCleaner (r06 persist-hygiene fix)
-          lpStale.foreach(graft.util.Par.releaseLocalCkpt)
           // two-hop rescue (O3): if the level shrank < 50%, merge singleton clusters
           // sharing a favored cluster (reference gate, `lp_clusterer.cc:164-166`).
           // Judged from the CONTRACTED node count — the common good-shrink case
           // skips the extra distinct() job; a poor shrink pays one re-contraction.
           if (cnNow >= (n + 1) / 2) {
-            val rescued = Ckpt(
+            val (rescued, _) = keep(
               twoHopMerge(spark, edges,
                 mp.select(col("node"), col("cnode").as("label")), nodeW, cap,
                 seed + levels.length),
               "twohop")
-            level = contract(edges, nodeW, rescued)
-            val ((ce2, cm2), (cw2, cn2), mp2) = ckptLevel(level)
+            val ((ce2, cm2), (cw2, cn2), mp2) = keepLevel(contract(edges, nodeW, rescued))
             ce = ce2
             cmNow = cm2
             cw = cw2
@@ -556,7 +564,7 @@ object DistCoarsener {
       // how dense the coarse graph got. Only the IP input is sparsified; every
       // level's true edge set still drives the refinement above.
       Log.info(s"coarsen: converged with m=$m > edge cap $targetM — sparsifying the handoff")
-      edges = sparsify(spark, edges, targetM)
+      edges = keep(sparsify(spark, edges, targetM), "sparsified")._1
     }
     (levels.toSeq, edges, nodeW)
   }

@@ -3,7 +3,7 @@ package graft.partition
 import graft.model.CsrGraph
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.util.{Ckpt, Log}
+import graft.util.{Log, Stage}
 
 /** Deep-MGP k-extension during uncoarsening (SURVEY O15/O16 distributed, reference
   * `kaminpar-shm/partitioning/deep/deep_multilevel.cc:275-328`): the coarsest graph is
@@ -96,6 +96,7 @@ object DistExtend {
     * DataFrame lineage + bulk move joins).
     */
   def extendDoubling(
+      st: Stage,
       spark: SparkSession,
       edges: DataFrame,
       nodeW: DataFrame,
@@ -179,7 +180,7 @@ object DistExtend {
     for ((lo, fk) <- distBlocks) {
       Log.info(s"extendDoubling: block $lo has ${sizes(lo)} members > $perBlockCap — distributed bisection")
       val k0 = (fk + 1) / 2
-      val sideDf = distributedBisect(spark, edges, nodeW, part, lo, fk, lmax, seed + lo)
+      val sideDf = distributedBisect(st, spark, edges, nodeW, part, lo, fk, lmax, seed + lo)
       out = out
         .join(sideDf.select(col("node"), col("s1")), Seq("node"), "left")
         .select(
@@ -191,7 +192,7 @@ object DistExtend {
     if (allMoves.nonEmpty)
       out = out.join(broadcast(allMoves.toSeq.toDF("node", "nb2")), Seq("node"), "left")
         .select(col("node"), coalesce(col("nb2"), col("block")).cast("int").as("block"))
-    if (distBlocks.nonEmpty) Ckpt(out, "ext-dist") else out
+    if (distBlocks.nonEmpty) st.memory(out)._1 else out
   }
 
   /** Distributed bisection of one oversized block: LP-coarsen the block-induced
@@ -201,6 +202,7 @@ object DistExtend {
     * members (s1 = 1 moves to the upper half).
     */
   private def distributedBisect(
+      st: Stage,
       spark: SparkSession,
       edges: DataFrame,
       nodeW: DataFrame,
@@ -210,18 +212,16 @@ object DistExtend {
       lmax: Long,
       seed: Long
   ): DataFrame = {
-    val memberW = Ckpt(
-      part.filter(col("block") === lo).join(nodeW, "node").select(col("node"), col("weight")),
-      "dbis-nodes")
+    val (memberW, _) = st.memory(
+      part.filter(col("block") === lo).join(nodeW, "node").select(col("node"), col("weight")))
     val pSrc = part.select(col("node").as("src"), col("block").as("sb"))
     val pDst = part.select(col("node").as("dst"), col("block").as("db"))
-    val blockEdges = Ckpt(
+    val (blockEdges, _) = st.memory(
       edges.join(pSrc, "src").join(pDst, "dst")
         .filter(col("sb") === lit(lo) && col("db") === lit(lo))
-        .select(col("src"), col("dst"), col("w")),
-      "dbis-edges")
-    val (lvls, cE, cW) = DistCoarsener.coarsen(
-      spark, blockEdges, memberW, k = 2, eps = 0.03,
+        .select(col("src"), col("dst"), col("w")))
+    val (lvls, cE, cW) = DistCoarsener.coarsenIn(
+      st, durable = false, spark, blockEdges, memberW, k = 2, eps = 0.03,
       targetN = 2 * CExt, seed = seed, targetM = Partitioner.DriverEdgeCap)
     // driver bisect of the coarse graph
     val coarseNodes = cW.collect().map(r => (r.getLong(0), r.getLong(1))).sortBy(_._1)

@@ -2,7 +2,7 @@ package graft.partition
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.util.{Ckpt, Log, Par}
+import graft.util.{Log, Par, Stage}
 
 /** Distributed balanced refinement — the uncoarsening half of the partitioner.
   *
@@ -29,8 +29,8 @@ import graft.util.{Ckpt, Log, Par}
 object DistRefiner {
 
   /** One refinement run: maxIter probabilistic LP supersteps. `part` = (node, block),
-    * `nodeW` = (node, weight). Returns updated part. Never increases cut (moves have
-    * positive gain and rounds that break balance roll back).
+    * `nodeW` = (node, weight). Returns updated part, written to parquet. Never
+    * increases cut (moves have positive gain and rounds that break balance roll back).
     */
   def lpRefine(
       spark: SparkSession,
@@ -45,17 +45,28 @@ object DistRefiner {
       level: Int = -1,
       lastBlockW: Option[Array[Long]] = None
   ): DataFrame =
-    lpRefineCaps(spark, Gather.plain(edges), nodeW, part0, k, Array.fill(k)(lmax), maxIter,
-      seed, runId, level, lastBlockW)
+    Stage.scope { st =>
+      // the entry join is a LAZY local checkpoint (r06: flat plan, no upfront write
+      // job) — superstep 0's staged job materializes it and its three per-superstep
+      // consumers then read the cached blocks
+      val part = st.local(part0.join(nodeW, "node").select(col("node"), col("block"), col("weight")))
+      st.durable(
+        lpRefineCaps(st, spark, Gather.plain(edges), part, k, Array.fill(k)(lmax), maxIter,
+          seed, runId, level, lastBlockW).select(col("node"), col("block")),
+        "ref-part-out")
+    }
 
-  /** [[lpRefine]] over prepared (optionally hub-salted) gather edges, with PER-BLOCK
-    * caps — during deep-MGP extension a block owning fk final blocks is capped at
-    * fk*Lmax (`partition_utils.cc:21-50` role).
+  /** [[lpRefine]] over prepared (optionally hub-salted) gather edges and a (node,
+    * block, weight) table, with PER-BLOCK caps — during deep-MGP extension a block
+    * owning fk final blocks is capped at fk*Lmax (`partition_utils.cc:21-50` role).
+    * Returns a (node, block, weight) projection of the last superstep's table, staged
+    * in `st`: callers stage the result (a flat leaf with fresh statistics for the next
+    * stage) before the scope closes.
     */
   def lpRefineCaps(
+      st: Stage,
       spark: SparkSession,
       ge: GatherEdges,
-      nodeW: DataFrame,
       part0: DataFrame,
       k: Int,
       caps: Array[Long],
@@ -64,28 +75,17 @@ object DistRefiner {
       runId: String = "",
       level: Int = -1,
       lastBlockW: Option[Array[Long]] = None,
-      blockW0: Option[Array[Long]] = None,
-      weighted: Boolean = false
+      blockW0: Option[Array[Long]] = None
   ): DataFrame = {
     // `lastBlockW`: caller-supplied k-slot array that receives the exact tracked
     // block weights at return (avoids a full re-aggregation after a polish pass).
-    // `weighted`: part0 already carries (node, block, weight) AND is a checkpoint
-    // projection — skip the entry join + write, and return the weighted table so
-    // the next pipeline stage can do the same (one nodeW join per LEVEL, not per
-    // stage).
+    // The weight rides in `part0`, so the nodeW join happens once per LEVEL, not per
+    // stage.
     // PRECONDITION (co-partitioning contract): callers hash-partition the gather
-    // edges by the gather key once per level and pin them — see Partitioner/
+    // edges by the gather key once per level and cache them — see Partitioner/
     // ScalingBench/Gather.prepare — so supersteps reuse that layout and only the
     // n-row state shuffles.
-    // r06: the unweighted entry join is a LAZY localCheckpoint (flat plan, no
-    // upfront write job) — superstep 0's staged job materializes it and its three
-    // per-superstep consumers then read the cached blocks; released with the rest.
-    val entryCkpt =
-      if (weighted) None
-      else Some(
-        part0.join(nodeW, "node").select(col("node"), col("block"), col("weight"))
-          .localCheckpoint(false))
-    var part = entryCkpt.getOrElse(part0.select(col("node"), col("block"), col("weight")))
+    var part = part0.select(col("node"), col("block"), col("weight"))
 
     // Superstep shape (scales like the PageRank gather — no k-key windows, no
     // duplicated subplans, no per-round full-plan recomputation): ONE job per
@@ -96,18 +96,16 @@ object DistRefiner {
     // is what matters (each superstep references the previous state 3x, so an
     // untruncated chain grows the analyzed plan 3^it — measured: superstep walls
     // 3 s, 3 s, 11 s, 77 s), and the lazy local checkpoint provides it without a
-    // storage round trip or an extra job. The function's RETURN value is cut once
-    // at the end (Ckpt), so callers see a flat leaf with fresh statistics
-    // (LogicalRDD keeps origin stats — products over <= maxIter supersteps are
-    // bounded; the end-of-stage cut resets them, see Ckpt's docstring).
+    // storage round trip or an extra job. The caller stages the RETURN value, so
+    // the next stage reads a flat leaf with fresh statistics (a local checkpoint
+    // keeps origin stats — products over <= maxIter supersteps are bounded; the
+    // caller's cut resets them, see graft.util.Stage).
     // Violating TARGET blocks roll back all their moves this round (per-block
     // rollback, `lp_refiner.cc:296-333` made finer-grained). Block weights are
     // maintained driver-side from the deltas (k values), so the balance invariant
     // holds exactly at every superstep end.
     val blockW: Array[Long] = blockW0.getOrElse(Metrics.blockWeightsW(part, k))
 
-    val localCkpts = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
-    entryCkpt.foreach(localCkpts += _)
     var it = 0
     var quiet = 0
     while (it < maxIter && quiet < 2) {
@@ -158,14 +156,12 @@ object DistRefiner {
         )
         .filter(col("cand") =!= col("cur") && col("gain") > 0)
 
-      // staged behind a lazy localCheckpoint: gainDf and accepted below both read
+      // staged behind a lazy local checkpoint: gainDf and accepted below both read
       // it, and without the cut Spark plans the whole gather -> argmax subtree
-      // twice. The staging job below materializes it; released with the rest.
-      val candidates = perNode
+      // twice. The staging job below materializes it.
+      val candidates = st.local(perNode
         .join(residualDf, "cand")
-        .filter(col("nw") <= col("residual"))
-        .localCheckpoint(false)
-      localCkpts += candidates
+        .filter(col("nw") <= col("residual")))
 
       // O24 probabilistic acceptance: p = (gain/G_b) * (R_b/w) — expected admitted
       // weight per target <= residual; G_b folded in as an agg+join, coin is a seeded
@@ -187,11 +183,9 @@ object DistRefiner {
       // ONE heavy job per superstep: stage (old block, tentative cand) behind a lazy
       // local checkpoint; the k^2-row delta aggregate (the allreduce analog)
       // materializes it, and the rollback is a lazy projection over the flat plan
-      val staged = part
+      val staged = st.local(part
         .join(accepted, Seq("node"), "left")
-        .select(col("node"), col("block"), col("weight"), col("cand"))
-        .localCheckpoint(false)
-      localCkpts += staged
+        .select(col("node"), col("block"), col("weight"), col("cand")))
       val deltas = staged.filter(col("cand").isNotNull)
         .groupBy(col("block").as("cur"), col("cand")).agg(sum(col("weight")).as("mw"))
         .collect()
@@ -227,15 +221,7 @@ object DistRefiner {
       it += 1
     }
     lastBlockW.foreach(out => System.arraycopy(blockW, 0, out, 0, k))
-    // the caller-visible result is cut (Ckpt): downstream stages read a flat leaf
-    // with fresh statistics — after which the superstep local-checkpoint blocks
-    // are explicitly released (no pinned RDDs survive the call; nothing re-reads
-    // them once the output is materialized)
-    val out = Ckpt(
-      if (weighted) part else part.select(col("node"), col("block")),
-      "ref-part-out")
-    localCkpts.foreach(Par.releaseLocalCkpt)
-    out
+    part
   }
 
   /** JET refiner (SURVEY O20, reference `refinement/jet/jet_refiner.cc` — a
@@ -279,16 +265,23 @@ object DistRefiner {
       runId: String = "",
       level: Int = -1
   ): JetResult =
-    jetRefineCaps(spark, Gather.plain(edges), nodeW, part0, k, Array.fill(k)(lmax), rounds,
-      seed, runId, level)
+    Stage.scope { st =>
+      val part = st.durable(
+        part0.join(nodeW, "node").select(col("node"), col("block"), col("weight")), "jet-part")
+      val r = jetRefineCaps(st, spark, Gather.plain(edges), part, k, Array.fill(k)(lmax),
+        rounds, seed, runId, level)
+      r.copy(part = st.durable(r.part.select(col("node"), col("block")), "jet-best"))
+    }
 
   /** [[jetRefine]] over prepared (optionally hub-salted) gather edges, with per-block
-    * caps (deep-MGP extension phases).
+    * caps (deep-MGP extension phases). `part0` is (node, block, weight); the result's
+    * `part` is too, and it reads tables staged in `st`, so callers stage it before the
+    * scope closes.
     */
   def jetRefineCaps(
+      st: Stage,
       spark: SparkSession,
       ge: GatherEdges,
-      nodeW: DataFrame,
       part0: DataFrame,
       k: Int,
       caps: Array[Long],
@@ -296,22 +289,14 @@ object DistRefiner {
       seed: Long,
       runId: String = "",
       level: Int = -1,
-      blockW0: Option[Array[Long]] = None,
-      weighted: Boolean = false
+      blockW0: Option[Array[Long]] = None
   ): JetResult = {
-    val e = ge.e // precondition: hash-partitioned by the gather key + pinned
-    var part =
-      if (weighted) part0.select(col("node"), col("block"), col("weight"))
-      else Ckpt(
-        part0.join(nodeW, "node").select(col("node"), col("block"), col("weight")),
-        "jet-part")
+    val e = ge.e // precondition: hash-partitioned by the gather key + cached
+    var part = part0.select(col("node"), col("block"), col("weight"))
     val blockW: Array[Long] = blockW0.getOrElse(Metrics.blockWeightsW(part, k))
     // staged tables are lazy local checkpoints instead of parquet checkpoints (r06:
     // halves the per-round job count — the delta collect materializes the flat
-    // LogicalRDD); the winner is cut once more at the end (Ckpt), so the caller
-    // sees a flat leaf with fresh statistics, and the staging blocks are released
-    // after that
-    val localCkpts = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
+    // LogicalRDD)
 
     var best: DataFrame = null
     var bestCut = Long.MaxValue
@@ -359,7 +344,7 @@ object DistRefiner {
       // aggregate itself (still one job; an Observation would not survive the
       // checkpoint boundary — metrics attached below a lazy localCheckpoint are not
       // delivered when a later query materializes the RDD).
-      val perNode = ratings
+      val perNode = st.local(ratings
         .withColumn("tb", xxhash64(col("nb"), lit(seed + r)))
         .groupBy(col("src"), col("cur"), col("nw"))
         .agg(
@@ -378,9 +363,7 @@ object DistRefiner {
           col("bestS.nb").as("cand"),
           (col("bestS.rating") - col("internalW")).as("gain"),
           col("internalW"), col("extW")
-        )
-        .localCheckpoint(false)
-      localCkpts += perNode
+        ))
       // the cut of the partition ENTERING this round, from the one materializing
       // aggregate (the job the parquet write used to be)
       val cutNow = perNode
@@ -441,18 +424,14 @@ object DistRefiner {
         (0 until k).map(b => (b, math.max(0L, caps(b) - blockW(b)) + slackArr(b)))
           .toDF("cand", "allow"))
       // staged like lpRefineCaps' candidates: the admission reads it twice
-      val positives = recomputed.filter(col("toCand") - col("toCur") > 0)
-        .localCheckpoint(false)
-      localCkpts += positives
+      val positives = st.local(recomputed.filter(col("toCand") - col("toCur") > 0))
       val accepted = admitProportional(positives, allowDf, seed + r)
 
       // phase 3: ONE staged lazy local checkpoint (old block + accepted cand); the
       // k^2-row deltas materialize it, the applied partition is a projection of it
-      val staged = part
+      val staged = st.local(part
         .join(accepted, Seq("node"), "left")
-        .select(col("node"), col("block"), col("weight"), col("cand"))
-        .localCheckpoint(false)
-      localCkpts += staged
+        .select(col("node"), col("block"), col("weight"), col("cand")))
       val deltas = staged.filter(col("cand").isNotNull)
         .groupBy(col("block").as("cur"), col("cand")).agg(sum(col("weight")).as("mw"))
         .collect()
@@ -484,8 +463,8 @@ object DistRefiner {
       // overshoot the admission allows) — weighted pass-through, no re-join
       if (!Metrics.isBalanced(blockW, caps)) {
         val (balanced, balW) = balanceTrackedCaps(
-          spark, e, nodeW, part, k, caps,
-          seed = seed + r, blockW0 = Some(blockW.clone()), weighted = true)
+          spark, e, part, k, caps,
+          seed = seed + r, blockW0 = Some(blockW.clone()))
         part = balanced
         System.arraycopy(balW, 0, blockW, 0, k)
       }
@@ -501,13 +480,7 @@ object DistRefiner {
     val improved =
       (bestFeasible && !firstFeasible) || (bestFeasible == firstFeasible && bestCut < firstEntering)
     Log.info(s"jet done: bestCut=$bestCut feasible=$bestFeasible improved=$improved")
-    // cut the winner so the caller sees a flat leaf with fresh statistics, then
-    // release the staging blocks
-    val outPart = Ckpt(
-      if (weighted) best else best.select(col("node"), col("block")),
-      "jet-best")
-    localCkpts.foreach(Par.releaseLocalCkpt)
-    JetResult(outPart, bestCut, bestBlockW, bestFeasible, improved)
+    JetResult(best, bestCut, bestBlockW, bestFeasible, improved)
   }
 
   /** Proportional move admission (the JET capacity stage): given positive movers
@@ -553,12 +526,12 @@ object DistRefiner {
     *     improves nothing.
     *
     * Deterministic given the seed. Never worsens the cut (PairFm rolls back to the
-    * best prefix; infeasible states never survive a pass).
+    * best prefix; infeasible states never survive a pass). `part0` is (node, block,
+    * weight); so is the returned table.
     */
   def pairwiseFmDist(
       spark: SparkSession,
       edges0: DataFrame,
-      nodeW: DataFrame,
       part0: DataFrame,
       k: Int,
       caps: Array[Long],
@@ -566,17 +539,12 @@ object DistRefiner {
       rounds: Int = 2,
       radius: Int = 2,
       regionCap: Long = 200000L,
-      seed: Long = 42L,
-      weighted: Boolean = false
+      seed: Long = 42L
   ): (DataFrame, Array[Long]) = {
     import spark.implicits._
     val edges = edges0.select(col("src"), col("dst"), col("w"))
     val blockW = blockW0.clone()
-    var part =
-      if (weighted) part0.select(col("node"), col("block"), col("weight"))
-      else Ckpt(
-        part0.join(nodeW, "node").select(col("node"), col("block"), col("weight")),
-        "pfm-part")
+    var part = part0.select(col("node"), col("block"), col("weight"))
     var round = 0
     var done = false
     var prevChosen = Set.empty[(Int, Int)]
@@ -599,17 +567,14 @@ object DistRefiner {
       }
       prevChosen = chosen.toSet
       if (chosen.isEmpty) done = true
-      else {
+      else Stage.scope { rc =>
+        // round-scoped caches (r06: were parquet write+read round-trips — the
+        // multi-consumer reuse is what matters, not durability)
         val pmDf = broadcast(
           chosen.toSeq.zipWithIndex.flatMap { case ((a, b), i) => Seq((a, i, 0), (b, i, 1)) }
             .toDF("blk", "pid", "s"))
-        // round-scoped caches (r06: were parquet write+read round-trips — the
-        // multi-consumer reuse is what matters, not durability; released at the end
-        // of the round)
-        val roundCaches = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
-        def cache(df: DataFrame): DataFrame = { val c = df.persist(); roundCaches += c; c }
         // 2. pair-internal edge stream (both directions; third-block edges excluded)
-        val pe = cache(
+        val pe = rc.cache(
           edges.join(pd, "dst").join(ps, "src")
             .join(pmDf.select(col("blk").as("sb"), col("pid").as("spid"), col("s").as("ss")), "sb")
             .join(pmDf.select(col("blk").as("db"), col("pid").as("dpid"), col("s").as("ds")), "db")
@@ -626,7 +591,7 @@ object DistRefiner {
             .distinct()
           hop += 1
         }
-        region = cache(region)
+        region = rc.cache(region)
         // bounded collect: probabilistic thinning per over-cap pair (nodes thinned
         // out simply become fixed attachments — correctness is unaffected)
         val sizes = region.groupBy(col("pid")).agg(count(lit(1)).as("c")).collect()
@@ -635,7 +600,7 @@ object DistRefiner {
         if (over.nonEmpty) {
           val fracDf = broadcast(
             over.toSeq.map { case (pid, c) => (pid, regionCap.toDouble / c) }.toDF("pid", "frac"))
-          region = cache(
+          region = rc.cache(
             region.join(fracDf, Seq("pid"), "left")
               .filter(
                 col("frac").isNull ||
@@ -665,7 +630,7 @@ object DistRefiner {
             eCnt.filter(_._2 > edgeCapRows).toSeq
               .map { case (pid, c) => (pid, math.sqrt(edgeCapRows.toDouble / c)) }
               .toDF("pid", "frac"))
-          region = cache(
+          region = rc.cache(
             region.join(fracDf, Seq("pid"), "left")
               .filter(
                 col("frac").isNull ||
@@ -679,7 +644,7 @@ object DistRefiner {
         if (skippedPids.nonEmpty) {
           Log.info(s"pairFM round $round: skipping hub-dense pairs $skippedPids " +
             s"(internal edges still above $edgeCapRows after thinning)")
-          region = cache(
+          region = rc.cache(
             region.filter(!col("pid").isin(skippedPids.toSeq.map(Int.box): _*)))
         }
 
@@ -776,9 +741,8 @@ object DistRefiner {
           }
         }
         Log.info(s"pairFM round $round: pairs=${chosen.size} moves=${moves.size} cutDelta=$totalDelta")
-        // everything derived from the round caches is now driver-side data; the
-        // lazy apply below references only `part` + a broadcast of `moves`
-        roundCaches.foreach(_.unpersist(false))
+        // the lazy apply below references only `part` + a broadcast of `moves`, so
+        // the round's caches can go when the scope closes
         if (moves.isEmpty) done = true
         else {
           // lazy apply (r06: was a parquet checkpoint write per round) — broadcast
@@ -793,7 +757,7 @@ object DistRefiner {
       }
       round += 1
     }
-    (if (weighted) part else part.select(col("node"), col("block")), blockW)
+    (part, blockW)
   }
 
   /** Overload balancer (SURVEY O17 role): for each overloaded block, evict a
@@ -811,36 +775,35 @@ object DistRefiner {
       maxRounds: Int = 8,
       seed: Long = 42L
   ): DataFrame =
-    balanceTrackedCaps(spark, edges, nodeW, part0, k, Array.fill(k)(lmax), maxRounds, seed)._1
+    Stage.scope { st =>
+      val part = st.durable(
+        part0.join(nodeW, "node").select(col("node"), col("block"), col("weight")), "bal-part")
+      balanceTrackedCaps(spark, edges, part, k, Array.fill(k)(lmax), maxRounds, seed)
+        ._1.select(col("node"), col("block"))
+    }
 
-  /** [[balance]] with per-block caps (deep-MGP extension phases) and driver-tracked
-    * block weights: pass the current weights in (skipping the initial n-row
-    * aggregation) and get the final weights back; per round the weights update from
-    * the admitted-move deltas (k^2 rows, read from the already-checkpointed admitted
-    * table) instead of a full re-aggregation.
+  /** [[balance]] over a (node, block, weight) table with per-block caps (deep-MGP
+    * extension phases) and driver-tracked block weights: pass the current weights in
+    * (skipping the initial n-row aggregation) and get the final weights back; per
+    * round the weights update from the admitted-move deltas (k^2 rows) instead of a
+    * full re-aggregation. Returns a lazy (node, block, weight) table.
     */
   def balanceTrackedCaps(
       spark: SparkSession,
       edges: DataFrame,
-      nodeW: DataFrame,
       part0: DataFrame,
       k: Int,
       caps: Array[Long],
       maxRounds: Int = 8,
       seed: Long = 42L,
-      blockW0: Option[Array[Long]] = None,
-      weighted: Boolean = false
+      blockW0: Option[Array[Long]] = None
   ): (DataFrame, Array[Long]) = {
-    // caller-tracked weights + already balanced: return without spending the staging
-    // checkpoint — the common case when this runs as a per-level safety net
+    // caller-tracked weights + already balanced: return at once — the common case
+    // when this runs as a per-level safety net
     blockW0.filter(w => (0 until k).forall(b => w(b) <= caps(b))).foreach { w =>
-      return (if (weighted) part0 else part0.select(col("node"), col("block")), w)
+      return (part0, w)
     }
-    var part =
-      if (weighted) part0.select(col("node"), col("block"), col("weight"))
-      else Ckpt(
-        part0.join(nodeW, "node").select(col("node"), col("block"), col("weight")),
-        "bal-part")
+    var part = part0.select(col("node"), col("block"), col("weight"))
     val blockW = blockW0.getOrElse(Metrics.blockWeightsW(part, k))
     var round = 0
     var done = false
@@ -976,7 +939,7 @@ object DistRefiner {
       }
       round += 1
     }
-    (if (weighted) part else part.select(col("node"), col("block")), blockW)
+    (part, blockW)
   }
 
   /** Underload balancer (SURVEY O18, reference `refinement/balancer/
@@ -992,6 +955,7 @@ object DistRefiner {
     * a bounded top-candidate prefix collected, exact matching on the driver.
     */
   def underloadBalance(
+      st: Stage,
       spark: SparkSession,
       edges: DataFrame,
       nodeW: DataFrame,
@@ -1003,9 +967,8 @@ object DistRefiner {
       seed: Long = 42L,
       blockW0: Option[Array[Long]] = None
   ): (DataFrame, Array[Long]) = {
-    var part = Ckpt(
-      part0.join(nodeW, "node").select(col("node"), col("block"), col("weight")),
-      "ubal-part")
+    var part = st.memory(
+      part0.join(nodeW, "node").select(col("node"), col("block"), col("weight")))._1
     val blockW = blockW0.getOrElse(Metrics.blockWeightsW(part, k))
     var round = 0
     var done = lmin <= 0L
@@ -1067,15 +1030,14 @@ object DistRefiner {
         if (moves.isEmpty) done = true // no eligible donors: stop (infeasible config)
         else {
           val movesDf = moves.toSeq.toDF("node", "ucand")
-          part = Ckpt(
+          part = st.memory(
             part
               .join(broadcast(movesDf), Seq("node"), "left")
               .select(
                 col("node"),
                 coalesce(col("ucand"), col("block")).cast("int").as("block"),
                 col("weight")
-              ),
-            "ubal-part")
+              ))._1
         }
       }
       round += 1
@@ -1122,9 +1084,7 @@ object DistRefiner {
     // the three driver-blocking jobs below (extents, histogram, select) all scan
     // `cand`; cache it so the candidate plan (typically a full gather) executes
     // once — callers pass the raw plan, no checkpoint write needed
-    val cached = cand.persist()
-    try selectTopCached(cached, grp, score, targetW, seed, keep)
-    finally cached.unpersist()
+    Stage.scope(st => selectTopCached(st.cache(cand), grp, score, targetW, seed, keep))
   }
 
   private def selectTopCached(

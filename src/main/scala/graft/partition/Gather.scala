@@ -2,6 +2,7 @@ package graft.partition
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import graft.util.Stage
 
 /** Per-level gather-edge preparation, including degree-bucket hub splitting —
   * SURVEY P1 wired into the hot path (round-2 judge item #8).
@@ -28,23 +29,21 @@ object Gather {
   def plain(edges: DataFrame): GatherEdges = GatherEdges(edges, None, 1)
 
   /** Salt edges whose dst has degree >= `hubDegThreshold` into `nSalt` shards.
-    * Returns a pinned (dst, salt)-partitioned table plus the (small) hub set.
+    * Returns a (dst, salt)-partitioned table cached in `st` plus the (small) hub set.
     */
-  def prepare(edges: DataFrame, hubDegThreshold: Long, nSalt: Int = 16): GatherEdges = {
-    val hubs = graft.util.Ckpt(
+  def prepare(st: Stage, edges: DataFrame, hubDegThreshold: Long, nSalt: Int = 16): GatherEdges = {
+    val (hubs, _) = st.memory(
       edges.groupBy(col("dst")).agg(count(lit(1)).as("d"))
         .filter(col("d") >= hubDegThreshold)
-        .select(col("dst").as("hub")),
-      "hubs")
-    val salted = edges
+        .select(col("dst").as("hub")))
+    val salted = st.cache(edges
       .join(broadcast(hubs), col("dst") === col("hub"), "left")
       .select(
         col("src"), col("dst"), col("w"),
         when(col("hub").isNotNull, pmod(xxhash64(col("src"), lit(7L)), lit(nSalt.toLong)))
           .otherwise(lit(0L)).as("salt"))
       .repartition(col("dst"), col("salt"))
-      .sortWithinPartitions(col("dst"), col("salt"))
-      .persist()
+      .sortWithinPartitions(col("dst"), col("salt")))
     GatherEdges(salted, Some(hubs), nSalt)
   }
 

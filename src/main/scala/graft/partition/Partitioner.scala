@@ -4,7 +4,7 @@ import graft.model.{CsrGraph, PartCtx}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.functions._
-import graft.util.{Ckpt, Stage}
+import graft.util.Stage
 
 /** Balanced k-way graph partitioning — the engine's flagship operator, mirroring the
   * reference's library surface (`/root/reference/include/kaminpar-shm/kaminpar.h:912-1025`
@@ -96,10 +96,10 @@ final class Partitioner private (
 
   private def computePartitionImpl(
       spark: SparkSession, resume: Option[graft.util.RunCheckpoint]): Partitioner.Result =
-    Stage.scoped(computeStaged(spark, resume))
+    Stage.scope(st => computeStaged(st, spark, resume))
 
   private def computeStaged(
-      spark: SparkSession, resume: Option[graft.util.RunCheckpoint]): Partitioner.Result = {
+      st: Stage, spark: SparkSession, resume: Option[graft.util.RunCheckpoint]): Partitioner.Result = {
     val runId = "partition-" + seed + "-" + System.identityHashCode(this)
     // per-stage wall clock, accumulated across levels (all stages are eager — they
     // end in checkpoints/collects); surfaces in Result.stageTimes for the bench's
@@ -125,12 +125,11 @@ final class Partitioner private (
     val eIn = edges.select(col("src"), col("dst"), col("w"))
     val e =
       if (edges.storageLevel.useDisk) eIn
-      else Ckpt(eIn, "edges")
-    val nodeW = Ckpt(
+      else st.memory(eIn)._1
+    val nodeW = st.memory(
       nodeWeights.getOrElse(
         e.select(col("src").as("node")).distinct().withColumn("weight", lit(1L))
-      ),
-      "nodew")
+      ))._1
 
     val stats = nodeW.agg(sum(col("weight")), max(col("weight")), count(lit(1))).first()
     val ctx = PartCtx(k, epsilon, stats.getLong(0), stats.getLong(1), minEpsilon)
@@ -146,7 +145,7 @@ final class Partitioner private (
     // 1. distributed coarsening (node target + edge cap: the driver collect below is
     // bounded by EDGES too, since coarsening densifies graphs)
     val (levels, cEdges, cNodeW) = timed("coarsen") {
-      DistCoarsener.coarsen(spark, e, nodeW, k, epsilon, targetN, seed,
+      DistCoarsener.coarsenIn(st, durable = false, spark, e, nodeW, k, epsilon, targetN, seed,
         targetM = Partitioner.DriverEdgeCap, resume = resume,
         hubDegThreshold = hubThreshold,
         largeDegThreshold = preset.lpLargeDegreeThreshold,
@@ -266,7 +265,7 @@ final class Partitioner private (
       // deep-MGP extension: grow k' toward k as the level can host ~CExt-node blocks;
       // the finest level always reaches full k
       if (groupsNow.exists(_._2 > 1)) {
-        projected = Ckpt(projected, "proj")
+        projected = st.memory(projected)._1
         val nLevel = fineNodeW.count()
         val targetD =
           if (levelNo == 0) 32
@@ -275,11 +274,10 @@ final class Partitioner private (
         while (doublings < targetD && groupsNow.exists(_._2 > 1)) {
           val g0 = groupsNow
           doublings += 1
-          projected = timed("extend") { Ckpt(
+          projected = timed("extend") { st.memory(
             DistExtend.extendDoubling(
-              spark, feExt, fineNodeW, projected, g0,
-              ctx.perfectBlockWeight, ctx.maxBlockWeight, seed + 4000 + doublings),
-            "proj-ext") }
+              st, spark, feExt, fineNodeW, projected, g0,
+              ctx.perfectBlockWeight, ctx.maxBlockWeight, seed + 4000 + doublings))._1 }
           graft.util.Log.info(s"extend level=$levelNo k'=${groupsNow.size}")
         }
       }
@@ -290,42 +288,44 @@ final class Partitioner private (
       // state shuffles per superstep)
       val ge =
         if (hubThreshold > 0L)
-          Gather.prepare(fineEdges.select(col("src"), col("dst"), col("w")), hubThreshold)
+          Gather.prepare(st, fineEdges.select(col("src"), col("dst"), col("w")), hubThreshold)
         else
           // sorted-within-partitions cache: every superstep's sort-merge gather join
           // on dst skips re-sorting the m-row edge side (r06; one sort per level,
           // reused by ~16 superstep joins across refine/jet/polish/pairFM)
-          Gather.plain(
+          Gather.plain(st.cache(
             fineEdges.select(col("src"), col("dst"), col("w"))
-              .repartition(col("dst")).sortWithinPartitions(col("dst")).persist())
+              .repartition(col("dst")).sortWithinPartitions(col("dst"))))
       val fe = ge.e
       // the level's partition rides through the whole chain as ONE weighted table
       // (node, block, weight): the nodeW join happens here once, and every stage
       // below both skips its entry join+checkpoint and passes its exact
       // driver-tracked block weights to the next (no n-row re-aggregations)
-      var partW = Ckpt(
+      var partW = st.memory(
         projected.join(fineNodeW, "node")
-          .select(col("node"), col("block"), col("weight")),
-        "level-part")
+          .select(col("node"), col("block"), col("weight")))._1
       val refW = new Array[Long](k)
-      partW = timed("refine") { DistRefiner.lpRefineCaps(
-        spark, ge, fineNodeW, partW, k, caps,
+      // each refiner stages its supersteps in a child scope; its result is staged
+      // here, after which the child's blocks are released
+      partW = timed("refine") { st.scope(in => st.memory(DistRefiner.lpRefineCaps(
+        in, spark, ge, partW, k, caps,
         maxIter = refineIters, seed = seed + levelNo, runId = runId, level = levelNo,
-        lastBlockW = Some(refW), weighted = true
-      ) }
+        lastBlockW = Some(refW)))._1) }
       val (balanced, balW) = timed("balance") { DistRefiner.balanceTrackedCaps(
-        spark, fe, fineNodeW, partW, k, caps, seed = seed + levelNo,
-        blockW0 = Some(refW.clone()), weighted = true) }
+        spark, fe, partW, k, caps, seed = seed + levelNo,
+        blockW0 = Some(refW.clone())) }
       partW = balanced
       // JET pass (O20): negative-gain-tolerant bulk moves with an afterwards-filter —
       // recovers cut quality that positive-gain LP cannot reach from a projected
       // partition; keeps the best (feasible, cut) snapshot, so it never regresses
       val jet =
-        if (preset.jetRounds > 0) timed("jet") { DistRefiner.jetRefineCaps(
-          spark, ge, fineNodeW, partW, k, caps,
-          rounds = preset.jetRounds, seed = seed + 1000 + levelNo, runId = runId,
-          level = levelNo, blockW0 = Some(balW.clone()), weighted = true
-        ) }
+        if (preset.jetRounds > 0) timed("jet") { st.scope { in =>
+          val r = DistRefiner.jetRefineCaps(
+            in, spark, ge, partW, k, caps,
+            rounds = preset.jetRounds, seed = seed + 1000 + levelNo, runId = runId,
+            level = levelNo, blockW0 = Some(balW.clone()))
+          r.copy(part = st.memory(r.part)._1)
+        } }
         else // fast preset: no JET — the balanced LP result carries through
           DistRefiner.JetResult(partW, 0L, balW, Metrics.isBalanced(balW, caps),
             improved = false)
@@ -336,13 +336,11 @@ final class Partitioner private (
       // supersteps.
       val polishW = new Array[Long](k)
       if (jet.improved && preset.polishIters > 0) {
-        partW = timed("polish") { DistRefiner.lpRefineCaps(
-          spark, ge, fineNodeW, jet.part, k, caps,
+        partW = timed("polish") { st.scope(in => st.memory(DistRefiner.lpRefineCaps(
+          in, spark, ge, jet.part, k, caps,
           maxIter = preset.polishIters, seed = seed + 2000 + levelNo, runId = runId,
           level = levelNo,
-          lastBlockW = Some(polishW), blockW0 = Some(jet.blockWeights.clone()),
-          weighted = true
-        ) }
+          lastBlockW = Some(polishW), blockW0 = Some(jet.blockWeights.clone())))._1) }
       } else {
         partW = jet.part
         System.arraycopy(jet.blockWeights, 0, polishW, 0, k)
@@ -352,9 +350,9 @@ final class Partitioner private (
       // LP/JET chain cannot reach; never worsens cut or feasibility
       if (preset.pairFmRounds > 0) {
         val (pf, pfW) = timed("pairfm") { DistRefiner.pairwiseFmDist(
-          spark, fe, fineNodeW, partW, k, caps, polishW.clone(),
+          spark, fe, partW, k, caps, polishW.clone(),
           rounds = preset.pairFmRounds, radius = preset.pairFmRadius,
-          seed = seed + 5000 + levelNo, weighted = true) }
+          seed = seed + 5000 + levelNo) }
         partW = pf
         System.arraycopy(pfW, 0, polishW, 0, k)
       }
@@ -364,7 +362,7 @@ final class Partitioner private (
       // it (`presets.cc:332-337`); a no-op unless min block weights are configured
       if (ctx.hasMinBlockWeights && groupsNow.forall(_._2 == 1)) {
         val (pulled, ubW) = DistRefiner.underloadBalance(
-          spark, fe, fineNodeW, part, k, ctx.minBlockWeight, ctx.maxBlockWeight,
+          st, spark, fe, fineNodeW, part, k, ctx.minBlockWeight, ctx.maxBlockWeight,
           seed = seed + 3000 + levelNo, blockW0 = Some(polishW.clone()))
         part = pulled
         System.arraycopy(ubW, 0, polishW, 0, k)
@@ -374,7 +372,7 @@ final class Partitioner private (
         part = r.saveNamed(s"part-level$levelNo", part)
         r.appendMetrics(200 + (levels.length - 1 - levelNo), Map("stage" -> s"part-level$levelNo"))
       }
-      fe.unpersist()
+      st.release(fe)
       Partitioner.failpoint(s"part-level$levelNo")
       levelNo -= 1
     }
@@ -388,11 +386,10 @@ final class Partitioner private (
       while (groupsNow.exists(_._2 > 1)) {
         val g0 = groupsNow
         doublings += 1
-        part = Ckpt(
+        part = st.memory(
           DistExtend.extendDoubling(
-            spark, feExt, nodeW, part, g0,
-            ctx.perfectBlockWeight, ctx.maxBlockWeight, seed + 4000 + doublings),
-          "proj-ext-final")
+            st, spark, feExt, nodeW, part, g0,
+            ctx.perfectBlockWeight, ctx.maxBlockWeight, seed + 4000 + doublings))._1
         graft.util.Log.info(s"extend finest (guard): k'=${groupsNow.size}")
       }
       lastBlockW = None // tracked weights predate the extension — force recompute
@@ -423,7 +420,7 @@ final class Partitioner private (
       }.forall(_ <= ctx.maxBlockWeight)
       while (cyc < preset.vcycles) {
         var improved = timed("vcycle") {
-          VCycle.improveOnce(spark, e, nodeW, part, ctx, targetN,
+          VCycle.improveOnce(st, spark, e, nodeW, part, ctx, targetN,
             Partitioner.DriverEdgeCap, seed + 7000L + 131L * cyc, cycle = cyc)
         }
         // stuck-seed escape (round 5): a fruitless cycle means THIS restricted
@@ -434,7 +431,7 @@ final class Partitioner private (
         var probeN = 0
         while (improved.isEmpty && probeN < Partitioner.VcRetryProbes) {
           improved = timed("vcycle") {
-            VCycle.improveOnce(spark, e, nodeW, part, ctx, targetN,
+            VCycle.improveOnce(st, spark, e, nodeW, part, ctx, targetN,
               Partitioner.DriverEdgeCap, seed + 9100L + 131L * cyc + 977L * probeN,
               cycle = cyc + probeN + 1)
           }
@@ -468,26 +465,26 @@ final class Partitioner private (
       // a fresh coarse re-partition only enforces Lmax; restore Lmin when min
       // block weights are configured (the per-level O18 runs predate the vcycle)
       if (anyImproved && ctx.hasMinBlockWeights) {
-        val feU = e.repartition(col("dst")).persist()
+        val feU = st.cache(e.repartition(col("dst")))
         val (pulled, ubW) = DistRefiner.underloadBalance(
-          spark, feU, nodeW, part, k, ctx.minBlockWeight, ctx.maxBlockWeight,
+          st, spark, feU, nodeW, part, k, ctx.minBlockWeight, ctx.maxBlockWeight,
           seed = seed + 7900L, blockW0 = lastBlockW.map(_.clone()))
         part = pulled
         lastBlockW = Some(ubW)
-        feU.unpersist()
+        st.release(feU)
       }
     }
 
     // pure driver path (no coarsening levels): the underload balancer still runs when
     // min block weights are configured — the seq partitioner only enforces Lmax
     if (levels.isEmpty && ctx.hasMinBlockWeights) {
-      val fe = e.repartition(col("dst")).persist()
+      val fe = st.cache(e.repartition(col("dst")))
       val (pulled, ubW) = DistRefiner.underloadBalance(
-        spark, fe, nodeW, part, k, ctx.minBlockWeight, ctx.maxBlockWeight,
+        st, spark, fe, nodeW, part, k, ctx.minBlockWeight, ctx.maxBlockWeight,
         seed = seed + 3000)
       part = pulled
       lastBlockW = Some(ubW)
-      fe.unpersist()
+      st.release(fe)
     }
 
     // the finest level's polish tracked its block weights exactly — reuse them; the
@@ -501,14 +498,14 @@ final class Partitioner private (
       // blocks — seed each with the cheapest boundary node of a heavy donor block
       // (one gather + bounded collect; a no-op on healthy runs)
       if (w.exists(_ == 0L) && n >= k)
-        part = Partitioner.fillEmptyBlocksDist(spark, e, nodeW, part, k, w, ctx.maxBlockWeight)
+        part = Partitioner.fillEmptyBlocksDist(st, spark, e, nodeW, part, k, w, ctx.maxBlockWeight)
       (w, Metrics.edgeCut(e, part))
     }
     // the one durable write of the call, when `part` reads staged blocks (released
     // as the staging scope closes); the driver path's assignment is a local table
     val assignment =
       if (part.queryExecution.analyzed.exists(_.isInstanceOf[LogicalRDD]))
-        Ckpt.durable(part, "assignment")
+        st.durable(part, "assignment")
       else part
     resume.foreach(_.markDone())
     Partitioner.Result(assignment, cut, blockW, Metrics.imbalance(blockW), ctx,
@@ -527,6 +524,7 @@ object Partitioner {
     * bounded ordered collect + one broadcast apply; mutates `blockW` in place.
     */
   private[partition] def fillEmptyBlocksDist(
+      st: Stage,
       spark: SparkSession,
       edges: DataFrame,
       nodeW: DataFrame,
@@ -569,10 +567,9 @@ object Partitioner {
     }
     graft.util.Log.info(s"fillEmptyBlocksDist: seeded ${moves.size}/${empties.size} empty blocks")
     if (moves.isEmpty) part0
-    else Ckpt(
+    else st.memory(
       part0.join(broadcast(moves.toSeq.toDF("node", "fb")), Seq("node"), "left")
-        .select(col("node"), coalesce(col("fb"), col("block")).cast("int").as("block")),
-      "fill-empty")
+        .select(col("node"), coalesce(col("fb"), col("block")).cast("int").as("block")))._1
   }
 
   /** Test-only failpoint: throws after the named resumable stage commits, simulating

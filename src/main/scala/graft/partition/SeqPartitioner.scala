@@ -584,7 +584,7 @@ object SeqPartitioner {
     while (cycle < cycles) {
       // alternate coarsening granularity across cycles for move diversity
       val cap = math.max(1L, g.totalNodeWeight / (math.max(4 * k, 64) >> (cycle % 2)))
-      val clustering = lpClusterRestricted(g, part, cap, rand)
+      val clustering = lpCluster(g, cap, rand, iterations = 3, sameBlock = Some(part))
       val (coarse, mapping) = contract(g, clustering)
       if (coarse.n < g.n) {
         // coarse partition: every member of a coarse node shares a block by construction
@@ -608,51 +608,6 @@ object SeqPartitioner {
       }
       cycle += 1
     }
-  }
-
-  /** LP clustering restricted to same-block merges (V-cycle coarsening). */
-  private def lpClusterRestricted(g: CsrGraph, part: Array[Int], maxClusterWeight: Long, rand: Random): Array[Int] = {
-    val cluster = Array.tabulate(g.n)(identity)
-    val cweight = g.vwgt.clone()
-    val order = rand.shuffle((0 until g.n).toVector).toArray
-    val ratings = new mutable.LongMap[Long](64)
-    var iter = 0
-    while (iter < 3) {
-      var oi = 0
-      while (oi < g.n) {
-        val u = order(oi)
-        if (g.degree(u) > 0) {
-          ratings.clear()
-          var i = g.xadj(u)
-          while (i < g.xadj(u + 1)) {
-            val v = g.adjncy(i)
-            if (part(v) == part(u)) { // same-block neighbors only
-              val c = cluster(v)
-              ratings(c.toLong) = ratings.getOrElse(c.toLong, 0L) + g.adjwgt(i)
-            }
-            i += 1
-          }
-          val cu = cluster(u)
-          var best = cu
-          var bestRating = ratings.getOrElse(cu.toLong, 0L)
-          ratings.foreachEntry { (cL, r) =>
-            val c = cL.toInt
-            if (c != cu && (r > bestRating || (r == bestRating && c < best)) &&
-              cweight(c) + g.vwgt(u) <= maxClusterWeight && part(c) == part(u)) {
-              best = c; bestRating = r
-            }
-          }
-          if (best != cu) {
-            cweight(cu) -= g.vwgt(u)
-            cweight(best) += g.vwgt(u)
-            cluster(u) = best
-          }
-        }
-        oi += 1
-      }
-      iter += 1
-    }
-    cluster
   }
 
   /** Sequential k-way FM with best-prefix rollback (the driver-side quality pass the
@@ -986,8 +941,19 @@ object SeqPartitioner {
   // sequential LP clustering + contraction (coarsening)
   // --------------------------------------------------------------------------
 
-  /** One LP clustering run: node -> cluster leader, cluster weights capped. */
-  private def lpCluster(g: CsrGraph, maxClusterWeight: Long, rand: Random, iterations: Int): Array[Int] = {
+  /** One LP clustering run: node -> cluster leader, cluster weights capped. With
+    * `sameBlock`, only neighbors in the node's own block are rated and joined, so no
+    * cluster straddles a block (V-cycle coarsening). `rand` is used only for the
+    * visit order, and a pass that moves nothing is a fixed point, so stopping there
+    * changes no result.
+    */
+  private def lpCluster(
+      g: CsrGraph,
+      maxClusterWeight: Long,
+      rand: Random,
+      iterations: Int,
+      sameBlock: Option[Array[Int]] = None): Array[Int] = {
+    val part = sameBlock.orNull
     val cluster = Array.tabulate(g.n)(identity)
     val cweight = g.vwgt.clone()
     val order = rand.shuffle((0 until g.n).toVector).toArray
@@ -1003,8 +969,11 @@ object SeqPartitioner {
           ratings.clear()
           var i = g.xadj(u)
           while (i < g.xadj(u + 1)) {
-            val c = cluster(g.adjncy(i))
-            ratings(c.toLong) = ratings.getOrElse(c.toLong, 0L) + g.adjwgt(i)
+            val v = g.adjncy(i)
+            if (part == null || part(v) == part(u)) {
+              val c = cluster(v)
+              ratings(c.toLong) = ratings.getOrElse(c.toLong, 0L) + g.adjwgt(i)
+            }
             i += 1
           }
           val cu = cluster(u)
@@ -1013,7 +982,7 @@ object SeqPartitioner {
           ratings.foreachEntry { (cL, r) =>
             val c = cL.toInt
             if (c != cu && (r > bestRating || (r == bestRating && c < best)) &&
-              cweight(c) + g.vwgt(u) <= maxClusterWeight) {
+              cweight(c) + g.vwgt(u) <= maxClusterWeight && (part == null || part(c) == part(u))) {
               best = c; bestRating = r
             }
           }

@@ -3,7 +3,7 @@ package graft.partition
 import graft.model.{CsrGraph, PartCtx}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.util.{Ckpt, Log}
+import graft.util.{Log, Stage}
 
 /** Distributed V-cycle (SURVEY O16's vcycle scheme, reference
   * `kaminpar-shm/partitioning/deep/vcycle_deep_multilevel.cc` +
@@ -55,9 +55,11 @@ object VCycle {
     * the driver caps) or found no strictly better coarse partition — a fruitless
     * cycle costs only the restricted-coarsening probe, never the uncoarsening leg.
     * On Some, the returned partition is already refined at the finest level with
-    * exact tracked block weights.
+    * exact tracked block weights, and staged in `st`; everything else the cycle
+    * stages lives in a child scope that closes when the cycle ends.
     */
   def improveOnce(
+      st: Stage,
       spark: SparkSession,
       edges: DataFrame, // finest symmetric (src, dst, w), checkpointed
       nodeW: DataFrame, // (node, weight)
@@ -67,6 +69,22 @@ object VCycle {
       targetM: Long,
       seed: Long,
       cycle: Int = 0
+  ): Option[CycleResult] =
+    st.scope(vc => cycleIn(st, vc, spark, edges, nodeW, part0, ctx, targetN, targetM, seed, cycle))
+
+  /** [[improveOnce]] with the cycle's own tables staged in `vc`. */
+  private def cycleIn(
+      st: Stage,
+      vc: Stage,
+      spark: SparkSession,
+      edges: DataFrame,
+      nodeW: DataFrame,
+      part0: DataFrame,
+      ctx: PartCtx,
+      targetN: Long,
+      targetM: Long,
+      seed: Long,
+      cycle: Int
   ): Option[CycleResult] = {
     val k = ctx.k
     // the per-block floor (2 coarse nodes per block, else the full-k re-search is
@@ -88,11 +106,10 @@ object VCycle {
     while ((n > vcN || m > targetM) && !converged) {
       val ps = curPart.select(col("node").as("src"), col("block").as("sb"))
       val pd = curPart.select(col("node").as("dst"), col("block").as("db"))
-      val eSame = Ckpt(
+      val (eSame, _) = vc.memory(
         curEdges.join(ps, "src").join(pd, "dst")
           .filter(col("sb") === col("db"))
-          .select(col("src"), col("dst"), col("w")),
-        "vc-esame")
+          .select(col("src"), col("dst"), col("w")))
       // same cluster-weight schedule as the main coarsener (EPSILON_BLOCK_WEIGHT);
       // odd cycles halve the cap for finer clusters — granularity diversity across
       // cycles, the SeqPartitioner.vcycle recipe
@@ -104,28 +121,25 @@ object VCycle {
       // nodes from DIFFERENT blocks, breaking the block-purity invariant the whole
       // cycle rests on. Those boundary singletons are exactly the nodes the coarse
       // search wants individually movable.
-      val lpStale = scala.collection.mutable.ArrayBuffer.empty[org.apache.spark.sql.DataFrame]
-      val clustering =
-        DistCoarsener.lpCluster(spark, eSame, curNodeW, cap, maxIter = 3, seed = seed + lvl,
-          staleOut = Some(lpStale))
-      // contract over the FULL edge set: cross-block edges survive as coarse edges
-      val level = DistCoarsener.contract(curEdges, curNodeW, clustering)
-      val ce = Ckpt(level.coarseEdges, "vc-cedges")
-      val cw = Ckpt(level.coarseNodeW, "vc-cnodew")
-      val mp = Ckpt(level.mapping, "vc-mapping")
-      // the three writes were the clustering's last consumers — release its
-      // staged blocks deterministically (r06 persist-hygiene fix)
-      lpStale.foreach(graft.util.Par.releaseLocalCkpt)
+      // the clustering lives in a child scope; the three level stages are its last
+      // consumers
+      val (ce, cw, mp) = vc.scope { lv =>
+        val clustering = DistCoarsener.lpCluster(
+          lv, spark, eSame, curNodeW, cap, maxIter = 3, seed = seed + lvl)
+        // contract over the FULL edge set: cross-block edges survive as coarse edges
+        val level = DistCoarsener.contract(curEdges, curNodeW, clustering)
+        (vc.memory(level.coarseEdges)._1, vc.memory(level.coarseNodeW)._1,
+          vc.memory(level.mapping)._1)
+      }
       val cn = cw.count()
       Log.info(s"vcycle restricted level $lvl: n=$n -> $cn")
       if (cn >= n * 0.95) converged = true
       if (cn < n) {
         // block-pure clusters: the coarse node's block is ANY member's block
-        curPart = Ckpt(
+        curPart = vc.memory(
           mp.join(curPart, "node")
             .groupBy(col("cnode")).agg(max(col("block")).as("block"))
-            .select(col("cnode").as("node"), col("block")),
-          "vc-part")
+            .select(col("cnode").as("node"), col("block")))._1
         stack += ((mp, curEdges, curNodeW))
         curEdges = ce
         curNodeW = cw
@@ -232,38 +246,39 @@ object VCycle {
         var li = stack.length - 1
         while (li >= 0) {
           val (mp, fe0, fw) = stack(li)
-          proj = Ckpt(
+          proj = vc.memory(
             mp.join(proj.withColumnRenamed("node", "cnode"), "cnode")
-              .select(col("node"), col("block")),
-            "vc-proj")
-          val ge = Gather.plain(
-            fe0.select(col("src"), col("dst"), col("w")).repartition(col("dst")).persist())
-          var pw = Ckpt(
-            proj.join(fw, "node").select(col("node"), col("block"), col("weight")),
-            "vc-pw")
+              .select(col("node"), col("block")))._1
+          val ge = Gather.plain(vc.cache(
+            fe0.select(col("src"), col("dst"), col("w")).repartition(col("dst"))))
+          var pw = vc.memory(
+            proj.join(fw, "node").select(col("node"), col("block"), col("weight")))._1
           val refW = new Array[Long](k)
-          pw = DistRefiner.lpRefineCaps(
-            spark, ge, fw, pw, k, capsFinal, maxIter = 3,
+          pw = vc.scope(in => vc.memory(DistRefiner.lpRefineCaps(
+            in, spark, ge, pw, k, capsFinal, maxIter = 3,
             seed = seed + 8000L + li, lastBlockW = Some(refW),
-            blockW0 = Some(blockW.clone()), weighted = true)
+            blockW0 = Some(blockW.clone())))._1)
           val (balanced, balW) = DistRefiner.balanceTrackedCaps(
-            spark, ge.e, fw, pw, k, capsFinal, seed = seed + 8100L + li,
-            blockW0 = Some(refW.clone()), weighted = true)
+            spark, ge.e, pw, k, capsFinal, seed = seed + 8100L + li,
+            blockW0 = Some(refW.clone()))
           // JET on the way down — the restructuring step: negative-gain bulk moves
           // redraw the boundaries the coarse basis could not express (best-snapshot
           // keeping makes it non-worsening, so the coarse win is preserved)
-          val jet = DistRefiner.jetRefineCaps(
-            spark, ge, fw, balanced, k, capsFinal, rounds = 3,
-            seed = seed + 8300L + li, blockW0 = Some(balW.clone()), weighted = true)
+          val jet = vc.scope { in =>
+            val r = DistRefiner.jetRefineCaps(
+              in, spark, ge, balanced, k, capsFinal, rounds = 3,
+              seed = seed + 8300L + li, blockW0 = Some(balW.clone()))
+            r.copy(part = vc.memory(r.part)._1)
+          }
           val (pf, pfW) = DistRefiner.pairwiseFmDist(
-            spark, ge.e, fw, jet.part, k, capsFinal, jet.blockWeights.clone(),
-            rounds = 1, seed = seed + 8200L + li, weighted = true)
+            spark, ge.e, jet.part, k, capsFinal, jet.blockWeights.clone(),
+            rounds = 1, seed = seed + 8200L + li)
           proj = pf.select(col("node"), col("block"))
           System.arraycopy(pfW, 0, blockW, 0, k)
-          ge.e.unpersist()
+          vc.release(ge.e)
           li -= 1
         }
-        Some(CycleResult(Ckpt(proj, "vc-final"), blockW, winCut))
+        Some(CycleResult(st.memory(proj)._1, blockW, winCut))
     }
   }
 }

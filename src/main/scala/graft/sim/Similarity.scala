@@ -115,27 +115,4 @@ object Similarity {
       .filter(col("rank") <= k)
       .select(col("qid"), col("rank"), col("nid"), col("cos"))
   }
-
-  /** Embedding-cosine near-duplicate pairs: all pairs above `threshold` found via the
-    * LSH tables (a near-dup detector for embedding space, complementing MinHash).
-    */
-  def cosineNearDups(vectors: DataFrame, threshold: Double, planes: Int = 12, tables: Int = 4, seed: Long = 42L): DataFrame = {
-    def keyed(df: DataFrame): DataFrame =
-      df.select(
-        col("id"),
-        explode(array((0 until tables).map(t =>
-          struct(lit(t).as("t"), lshKey(col("vec"), t, planes, seed).as("key"))): _*)).as("bk")
-      ).select(col("id"), col("bk.t").as("t"), col("bk.key").as("key"))
-    // id-only pair dedup first, vectors re-joined after (same shape as annLsh)
-    val kd = keyed(vectors)
-    kd.as("x").join(kd.as("y"),
-        col("x.t") === col("y.t") && col("x.key") === col("y.key") &&
-          col("x.id") < col("y.id"))
-      .select(col("x.id").as("a"), col("y.id").as("b"))
-      .distinct()
-      .join(vectors.select(col("id").as("a"), col("vec").as("va")), "a")
-      .join(vectors.select(col("id").as("b"), col("vec").as("vb")), "b")
-      .select(col("a"), col("b"), round(cosine(col("va"), col("vb")), 6).as("cos"))
-      .filter(col("cos") >= threshold)
-  }
 }

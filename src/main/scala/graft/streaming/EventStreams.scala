@@ -1,94 +1,19 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
-import java.sql.Timestamp
 
-/** Structured Streaming operators over the `events(event_id, ts, user_id, event_type,
-  * value, props)` stream shape: watermarked event-time windowed aggregation and
-  * stateful sessionization via flatMapGroupsWithState.
+/** Windowed aggregation over the `events(event_id, ts, user_id, event_type, value,
+  * props)` stream shape.
   *
   * The reference engine has no streaming surface (SURVEY §2.9) — this module is the
   * engine's ingestion companion: a crawl-event / page-update stream lands as an
-  * append-only table that the batch graph pipeline consumes per snapshot. readStream
-  * -> transforms -> writeStream; in production the sink is an Iceberg table whose
-  * snapshots gate the batch supersteps.
+  * append-only table that the batch graph pipeline consumes per snapshot.
   */
 object EventStreams {
 
-  final case class Event(event_id: Long, ts: Timestamp, user_id: Long, event_type: String, value: Double)
-
-  final case class Session(
-      user_id: Long,
-      start: Timestamp,
-      end: Timestamp,
-      events: Long,
-      totalValue: Double
-  )
-
-  /** Per-user session accumulator (top-level so an Encoder can be derived). */
-  final case class SessState(start: Long, last: Long, n: Long, total: Double)
-
-  /** Event-time tumbling-window counts per event type with a watermark for late data —
-    * the canonical streaming aggregation (state bounded by the watermark horizon).
-    */
-  def windowedCounts(events: DataFrame, windowDur: String = "1 minute", watermark: String = "2 minutes"): DataFrame =
-    events
-      .withWatermark("ts", watermark)
-      .groupBy(window(col("ts"), windowDur), col("event_type"))
-      .agg(count(lit(1)).as("events"), sum(col("value")).as("total_value"))
-      .select(
-        col("window.start").as("window_start"),
-        col("event_type"), col("events"), col("total_value")
-      )
-
-  /** Gap-based sessionization: a user's events belong to one session until a
-    * `gapSeconds` silence; emits closed sessions. Custom state via
-    * flatMapGroupsWithState with event-time timeout (the KeyValueGroupedDataset
-    * state-store path).
-    */
-  def sessionize(events: Dataset[Event], gapSeconds: Long = 300L): Dataset[Session] = {
-    val spark = events.sparkSession
-    import spark.implicits._
-
-    events
-      .withWatermark("ts", s"$gapSeconds seconds")
-      .groupByKey(_.user_id)
-      .flatMapGroupsWithState[SessState, Session](
-        OutputMode.Append(), GroupStateTimeout.EventTimeTimeout()
-      ) { (user: Long, it: Iterator[Event], state: GroupState[SessState]) =>
-        if (state.hasTimedOut) {
-          val s = state.get
-          state.remove()
-          Iterator.single(Session(user, new Timestamp(s.start), new Timestamp(s.last), s.n, s.total))
-        } else {
-          val evs = it.toSeq.sortBy(_.ts.getTime)
-          var closed = List.empty[Session]
-          var cur = state.getOption
-          evs.foreach { e =>
-            val t = e.ts.getTime
-            cur match {
-              case Some(s) if t - s.last <= gapSeconds * 1000L =>
-                cur = Some(SessState(s.start, math.max(s.last, t), s.n + 1, s.total + e.value))
-              case Some(s) =>
-                closed ::= Session(user, new Timestamp(s.start), new Timestamp(s.last), s.n, s.total)
-                cur = Some(SessState(t, t, 1L, e.value))
-              case None =>
-                cur = Some(SessState(t, t, 1L, e.value))
-            }
-          }
-          cur.foreach { s =>
-            state.update(s)
-            state.setTimeoutTimestamp(s.last + gapSeconds * 1000L)
-          }
-          closed.reverseIterator
-        }
-      }
-  }
-
-  /** Batch replay of the streaming window aggregation — identical logic over the
-    * static events table, for oracle checks (streaming/batch parity).
+  /** Event-time tumbling-window counts per event type over the static events table
+    * (the batch form of the canonical streaming aggregation).
     */
   def windowedCountsBatch(events: DataFrame, windowDur: String = "1 minute"): DataFrame =
     events

@@ -2,7 +2,7 @@ package graft.textops
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
-import graft.ops.ConnectedComponents
+import graft.util.Stage
 
 /** Deduplication operators for training-data pipelines: exact, MinHash+LSH, SimHash,
   * and exact n-gram Jaccard verification.
@@ -12,9 +12,7 @@ import graft.ops.ConnectedComponents
   *  - MinHash-LSH: shingle explode (map-side), signature = groupBy(doc) min-agg,
   *    band bucketing = one shuffle on (band, bandHash), candidate pairs only within
   *    buckets (never the n^2 cross join), exact-Jaccard verification only on
-  *    candidates;
-  *  - duplicate GROUPS come from connected components over the verified pair graph
-  *    (reusing the large-star/small-star operator).
+  *    candidates.
   * Giant buckets (boilerplate shingles) are capped — the same hub-splitting discipline
   * as the link graph.
   */
@@ -111,19 +109,16 @@ object Dedup {
     * shuffled and hashed orders of magnitude more than needed. Result-identical —
     * sizes and intersections are only ever consumed for pair members.
     */
-  def verifyJaccard(docs: DataFrame, pairs0: DataFrame, w: Int = 3, seed: Long = 42L): DataFrame = {
+  def verifyJaccard(
+      docs: DataFrame, pairs0: DataFrame, w: Int = 3, seed: Long = 42L): DataFrame = Stage.scope { st =>
     // the pair table is referenced four times below (member extraction x2, the two
     // set-attach joins) and is typically the OUTPUT of the full LSH candidate
-    // pipeline — materialize it once behind a LAZY localCheckpoint so that
-    // pipeline executes once, not four times (r06, guide §5); likewise the
-    // shingle sets feed both attach joins. localCheckpoint rather than persist():
-    // persist registers in the session CacheManager and nothing here could ever
-    // unpersist it (the function returns a lazy frame), so repeated calls would
-    // leak pinned blocks for the session lifetime — checkpoint blocks are
-    // reclaimed by the ContextCleaner once the returned frame is dropped. No
-    // distinct() on members: the left_semi join below dedups for free (one
-    // exchange + agg removed, guide §2.4).
-    val pairs = pairs0.localCheckpoint(false)
+    // pipeline — stage it once behind a LAZY local checkpoint so that pipeline
+    // executes once, not four times (r06, guide §5); likewise the shingle sets feed
+    // both attach joins. The result is written durably, so both are released when
+    // the call returns. No distinct() on members: the left_semi join below dedups
+    // for free (one exchange + agg removed, guide §2.4).
+    val pairs = st.local(pairs0)
     val members = pairs.select(col("a").as("doc_id"))
       .unionAll(pairs.select(col("b").as("doc_id")))
     // The shingle set is a per-document ARRAY at parse time — the explode/groupBy
@@ -134,10 +129,9 @@ object Dedup {
     // three joins; byte volume per pair is the same, the set travels once per pair
     // membership in both shapes). Result-identical: sizes and intersections are the
     // same integers (sets are array_distinct'd, never null, never empty).
-    val sets = docs.join(members, Seq("doc_id"), "left_semi")
-      .select(col("doc_id"), shingleSet(col("text"), w, seed).as("sh"))
-      .localCheckpoint(false)
-    pairs
+    val sets = st.local(docs.join(members, Seq("doc_id"), "left_semi")
+      .select(col("doc_id"), shingleSet(col("text"), w, seed).as("sh")))
+    st.durable(pairs
       .join(sets.select(col("doc_id").as("a"), col("sh").as("shA")), "a")
       .join(sets.select(col("doc_id").as("b"), col("sh").as("shB")), "b")
       .withColumn("inter", size(array_intersect(col("shA"), col("shB"))).cast("long"))
@@ -149,27 +143,8 @@ object Dedup {
               .cast("double"),
           8
         ).as("jaccard")
-      )
-  }
-
-  /** Full near-dup pipeline: LSH candidates -> exact-Jaccard verify -> threshold ->
-    * duplicate groups via connected components -> (doc_id, group keeper).
-    */
-  def nearDupGroups(
-      docs: DataFrame,
-      threshold: Double = 0.7,
-      numHashes: Int = 32,
-      bands: Int = 8,
-      w: Int = 3,
-      seed: Long = 42L
-  ): DataFrame = {
-    val cands = lshCandidates(docs, numHashes, bands, w = w, seed = seed)
-    val dupPairs = verifyJaccard(docs, cands, w, seed).filter(col("jaccard") >= threshold)
-    val spark = docs.sparkSession
-    val edges = dupPairs.select(col("a").as("src"), col("b").as("dst"), lit(1L).as("w"))
-    val sym = edges.unionAll(edges.select(col("dst").as("src"), col("src").as("dst"), col("w")))
-    ConnectedComponents.run(spark, sym)
-      .select(col("node").as("doc_id"), col("component").as("dup_group"))
+      ),
+      "jaccard")
   }
 
   /** 64-bit SimHash per document over word-level token hashes: bit b of the hash is

@@ -37,7 +37,7 @@ object PlanDump {
     dump("q01_edges", edges)
     dump("q07_pagerank5", graft.ops.PageRank.run(spark, edges, iterations = 5))
     dump("q06_triangles", {
-      // triangle plan without the mid-pipeline Ckpt side effect: orient + 3-way join
+      // triangle plan without the mid-pipeline durable write: orient + 3-way join
       val o = graft.ops.Triangles.orient(Graphs.copurchase(spark, sfDir))
       val e1 = o.as("e1"); val e2 = o.as("e2"); val e3 = o.as("e3")
       e1.join(e2, col("e1.dst") === col("e2.src"))

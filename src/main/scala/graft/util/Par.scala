@@ -1,12 +1,10 @@
 package graft.util
 
-import org.apache.spark.sql.{DataFrame, SparkSession, StagingShim}
+import org.apache.spark.sql.SparkSession
 import java.util.concurrent.{ExecutionException, ExecutorCompletionService, Executors}
 import java.util.concurrent.atomic.AtomicLong
 
-/** Small shared utilities for the r06 job-overlap and block-release patterns
-  * (previously inlined at each call site).
-  */
+/** Overlap of independent Spark jobs (the r06 job-overlap pattern). */
 object Par {
   private val groups = new AtomicLong(0L)
 
@@ -46,14 +44,4 @@ object Par {
       out.toSeq.asInstanceOf[Seq[A]]
     } finally pool.shutdownNow()
   }
-
-  /** Unpersist the RDD blocks behind a `localCheckpoint` staging table, quietly.
-    * Only call once nothing can re-execute a plan referencing them (their
-    * lineage is truncated, so an evicted block cannot be recomputed).
-    */
-  def releaseLocalCkpt(df: DataFrame): Unit =
-    df.queryExecution.analyzed match {
-      case lr: org.apache.spark.sql.execution.LogicalRDD => StagingShim.release(lr.rdd)
-      case _ =>
-    }
 }

@@ -11,7 +11,7 @@ object StagingShim {
     * partitioning and ordering) with `Statistics(sizeInBytes)` and no inherited
     * constraints — what a parquet scan of the same rows would report. A checkpoint
     * otherwise carries its ORIGIN plan's statistics, which in an iterative pipeline
-    * are products over every earlier stage (see [[graft.util.Ckpt]]).
+    * are products over every earlier stage (see [[graft.util.Stage]]).
     */
   def withStats(checkpointed: DataFrame, sizeInBytes: BigInt): DataFrame =
     checkpointed.queryExecution.analyzed match {

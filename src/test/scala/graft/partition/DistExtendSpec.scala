@@ -2,6 +2,7 @@ package graft.partition
 
 import graft.SparkFunSuite
 import graft.graph.SyntheticGraph
+import graft.util.Stage
 import org.apache.spark.sql.functions._
 
 /** Deep-MGP extend-k'->k (SURVEY O15/O16 distributed, round-2 judge item #10): large
@@ -52,17 +53,19 @@ class DistExtendSpec extends SparkFunSuite {
     }
 
     // trip the PER-BLOCK cap: both 200-member blocks route to distributed bisection
-    contract(DistExtend.extendDoubling(
-      spark, edges, nodeW, part0, groups, perfect = 100L, lmax = lmax, seed = 5L,
-      perBlockCap = 100L), "distributed")
-    // trip the BATCH cap: blocks fit individually (cap 1000) but not together (250)
-    contract(DistExtend.extendDoubling(
-      spark, edges, nodeW, part0, groups, perfect = 100L, lmax = lmax, seed = 5L,
-      perBlockCap = 1000L, batchCap = 250L), "batched")
-    // default path for reference
-    contract(DistExtend.extendDoubling(
-      spark, edges, nodeW, part0, groups, perfect = 100L, lmax = lmax, seed = 5L),
-      "default")
+    Stage.scope { st =>
+      contract(DistExtend.extendDoubling(
+        st, spark, edges, nodeW, part0, groups, perfect = 100L, lmax = lmax, seed = 5L,
+        perBlockCap = 100L), "distributed")
+      // trip the BATCH cap: blocks fit individually (cap 1000) but not together (250)
+      contract(DistExtend.extendDoubling(
+        st, spark, edges, nodeW, part0, groups, perfect = 100L, lmax = lmax, seed = 5L,
+        perBlockCap = 1000L, batchCap = 250L), "batched")
+      // default path for reference
+      contract(DistExtend.extendDoubling(
+        st, spark, edges, nodeW, part0, groups, perfect = 100L, lmax = lmax, seed = 5L),
+        "default")
+    }
   }
 
   test("k=64 deep extension: feasible, within 1.2x of the straight-to-k cut") {

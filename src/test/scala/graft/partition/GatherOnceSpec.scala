@@ -1,6 +1,7 @@
 package graft.partition
 
 import graft.SparkFunSuite
+import graft.util.Stage
 import org.apache.spark.sql.catalyst.expressions.aggregate.MaxBy
 import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, LogicalPlan}
 import org.apache.spark.sql.execution.QueryExecution
@@ -62,12 +63,10 @@ class GatherOnceSpec extends SparkFunSuite {
     val s = spark
     import s.implicits._
     val nodeW = (0 until n).map(i => (i.toLong, 1L)).toDF("node", "weight")
-    val stale = scala.collection.mutable.ArrayBuffer.empty[org.apache.spark.sql.DataFrame]
     assertOnce(plansOf {
-      DistCoarsener.lpCluster(spark, edges, nodeW, cap = 8L, maxIter = 1, seed = 3L,
-        staleOut = Some(stale))
+      Stage.scope(st =>
+        DistCoarsener.lpCluster(st, spark, edges, nodeW, cap = 8L, maxIter = 1, seed = 3L))
     })
-    stale.foreach(graft.util.Par.releaseLocalCkpt)
   }
 
   test("one lpRefineCaps superstep plans the argmax aggregate exactly once") {
@@ -78,8 +77,8 @@ class GatherOnceSpec extends SparkFunSuite {
     val part = (0 until n).map(i => (i.toLong, (i * 7) % 4)).toDF("node", "block")
     val ge = Gather.plain(edges.repartition(org.apache.spark.sql.functions.col("dst")))
     assertOnce(plansOf {
-      DistRefiner.lpRefineCaps(spark, ge, nodeW, part, 4, Array.fill(4)(40L),
-        maxIter = 1, seed = 3L)
+      Stage.scope(st => st.memory(DistRefiner.lpRefineCaps(st, spark, ge,
+        st.local(part.join(nodeW, "node")), 4, Array.fill(4)(40L), maxIter = 1, seed = 3L)))
     })
   }
 }

@@ -2,6 +2,7 @@ package graft.partition
 
 import org.apache.spark.sql.functions._
 import graft.SparkFunSuite
+import graft.util.Stage
 
 /** SURVEY P4 — high-degree LP clustering filters (reference
   * `label_propagation.h:106-118`, skip at `:1470`): nodes above
@@ -20,10 +21,10 @@ class HighDegreeFilterSpec extends SparkFunSuite {
   test("hub above largeDegThreshold never moves (keeps its own label)") {
     val edges = starGraph()
     val nodeW = graft.graph.Graphs.vertices(edges)
-    val labels = DistCoarsener
-      .lpCluster(spark, edges, nodeW, cap = 1000L, maxIter = 5, seed = 7L,
+    val labels = Stage.scope(st => DistCoarsener
+      .lpCluster(st, spark, edges, nodeW, cap = 1000L, maxIter = 5, seed = 7L,
         largeDegThreshold = 10L)
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap)
     assert(labels(0L) === 0L, "degree-40 hub must be skipped as a mover")
     // the filter must not break the clustering contract for everyone else
     assert(labels.size === 41)
@@ -34,9 +35,9 @@ class HighDegreeFilterSpec extends SparkFunSuite {
   test("without the filter the hub is allowed to move") {
     val edges = starGraph()
     val nodeW = graft.graph.Graphs.vertices(edges)
-    val labels = DistCoarsener
-      .lpCluster(spark, edges, nodeW, cap = 1000L, maxIter = 5, seed = 7L)
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    val labels = Stage.scope(st => DistCoarsener
+      .lpCluster(st, spark, edges, nodeW, cap = 1000L, maxIter = 5, seed = 7L)
+      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap)
     // the hub's strongest rating is a leaf cluster — unfiltered LP merges it
     assert(labels(0L) != 0L || labels.values.count(_ == 0L) > 1,
       "unfiltered run should involve the hub in some merge")
@@ -45,20 +46,20 @@ class HighDegreeFilterSpec extends SparkFunSuite {
   test("maxNumNeighbors >= max degree is a no-op (identical labels)") {
     val edges = starGraph()
     val nodeW = graft.graph.Graphs.vertices(edges)
-    def run(maxN: Long) = DistCoarsener
-      .lpCluster(spark, edges, nodeW, cap = 6L, maxIter = 5, seed = 11L,
+    def run(maxN: Long) = Stage.scope(st => DistCoarsener
+      .lpCluster(st, spark, edges, nodeW, cap = 6L, maxIter = 5, seed = 11L,
         maxNumNeighbors = maxN)
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap)
     assert(run(Long.MaxValue) === run(1000L))
   }
 
   test("neighbor sampling yields a valid, repartition-deterministic clustering") {
     val edges = graft.graph.SyntheticGraph.zipfEdges(spark, 500L, avgDeg = 8, seed = 3L)
     val nodeW = graft.graph.Graphs.vertices(edges)
-    def run(e: org.apache.spark.sql.DataFrame) = DistCoarsener
-      .lpCluster(spark, e, nodeW, cap = 40L, maxIter = 5, seed = 13L,
+    def run(e: org.apache.spark.sql.DataFrame) = Stage.scope(st => DistCoarsener
+      .lpCluster(st, spark, e, nodeW, cap = 40L, maxIter = 5, seed = 13L,
         maxNumNeighbors = 4L)
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap)
     val a = run(edges)
     val b = run(edges.repartition(7))
     assert(a === b, "seeded-hash sampling must be partition-independent")

@@ -1,6 +1,7 @@
 package graft.partition
 
 import graft.SparkFunSuite
+import graft.util.Stage
 import org.apache.spark.sql.functions._
 
 /** Hub splitting (SURVEY P1 wired into the gather path, round-2 judge item #8): the
@@ -24,19 +25,22 @@ class HubSplitSpec extends SparkFunSuite {
     val plain = Gather.joinLabels(Gather.plain(edges), labels)
       .select(col("src"), col("nb"), col("w"))
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).sorted
-    val salted = Gather.joinLabels(Gather.prepare(edges, hubDegThreshold = 10L, nSalt = 4), labels)
-      .select(col("src"), col("nb"), col("w"))
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).sorted
+    val salted = Stage.scope(st =>
+      Gather.joinLabels(Gather.prepare(st, edges, hubDegThreshold = 10L, nSalt = 4), labels)
+        .select(col("src"), col("nb"), col("w"))
+        .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).sorted)
     assert(salted === plain)
   }
 
   test("prepare salts hub edges across shards and leaves non-hubs at salt 0") {
-    val ge = Gather.prepare(skewed, hubDegThreshold = 10L, nSalt = 4)
-    assert(ge.hubs.get.collect().map(_.getLong(0)).toSet === Set(0L))
-    val hubSalts = ge.e.filter(col("dst") === 0L).select(col("salt")).distinct().count()
-    assert(hubSalts > 1, "hub edges should spread over multiple salt shards")
-    val nonHub = ge.e.filter(col("dst") =!= 0L && col("salt") =!= 0L).count()
-    assert(nonHub === 0L)
+    Stage.scope { st =>
+      val ge = Gather.prepare(st, skewed, hubDegThreshold = 10L, nSalt = 4)
+      assert(ge.hubs.get.collect().map(_.getLong(0)).toSet === Set(0L))
+      val hubSalts = ge.e.filter(col("dst") === 0L).select(col("salt")).distinct().count()
+      assert(hubSalts > 1, "hub edges should spread over multiple salt shards")
+      val nonHub = ge.e.filter(col("dst") =!= 0L && col("salt") =!= 0L).count()
+      assert(nonHub === 0L)
+    }
   }
 
   test("lpRefine is bit-identical with hub splitting on and off") {
@@ -45,12 +49,13 @@ class HubSplitSpec extends SparkFunSuite {
     val edges = skewed
     val nodeW = (0L to 40L).map((_, 1L)).toDF("node", "weight")
     val part0 = (0L to 40L).map(n => (n, (n % 4).toInt)).toDF("node", "block")
-    def run(ge: GatherEdges): Seq[(Long, Int)] =
-      DistRefiner.lpRefineCaps(spark, ge, nodeW, part0, 4, Array.fill(4)(12L),
-        maxIter = 4, seed = 11L)
+    def run(ge: Stage => GatherEdges): Seq[(Long, Int)] = Stage.scope { st =>
+      DistRefiner.lpRefineCaps(st, spark, ge(st), part0.join(nodeW, "node"), 4,
+        Array.fill(4)(12L), maxIter = 4, seed = 11L)
         .collect().map(r => (r.getLong(0), r.getInt(1))).sortBy(_._1).toSeq
-    val plain = run(Gather.plain(edges.repartition(col("dst"))))
-    val split = run(Gather.prepare(edges, hubDegThreshold = 10L, nSalt = 4))
+    }
+    val plain = run(_ => Gather.plain(edges.repartition(col("dst"))))
+    val split = run(st => Gather.prepare(st, edges, hubDegThreshold = 10L, nSalt = 4))
     assert(split === plain)
   }
 }

@@ -24,8 +24,9 @@ class PairFmDistSpec extends SparkFunSuite {
     val bw0 = Metrics.blockWeights(part0, nodeW, 2)
     val caps = Array(7L, 7L)
     val before = Metrics.edgeCut(edges, part0)
-    val (part, bw) = DistRefiner.pairwiseFmDist(
-      spark, edges, nodeW, part0, 2, caps, bw0, rounds = 2, seed = 3L)
+    val (partW, bw) = DistRefiner.pairwiseFmDist(
+      spark, edges, part0.join(nodeW, "node"), 2, caps, bw0, rounds = 2, seed = 3L)
+    val part = partW.select(col("node"), col("block"))
     val after = Metrics.edgeCut(edges, part)
     assert(after < before, s"expected improvement from $before, got $after")
     assert(after === 1L, s"optimal cut is the bridge alone, got $after")
@@ -47,8 +48,10 @@ class PairFmDistSpec extends SparkFunSuite {
     val bw0 = Metrics.blockWeights(part0, nodeW, 2)
     val caps = Array(7L, 7L)
     val before = Metrics.edgeCut(edges, part0)
-    val (part, bw) = DistRefiner.pairwiseFmDist(
-      spark, edges, nodeW, part0, 2, caps, bw0, rounds = 1, regionCap = 20L, seed = 3L)
+    val (partW, bw) = DistRefiner.pairwiseFmDist(
+      spark, edges, part0.join(nodeW, "node"), 2, caps, bw0, rounds = 1,
+      regionCap = 20L, seed = 3L)
+    val part = partW.select(col("node"), col("block"))
     val after = Metrics.edgeCut(edges, part)
     assert(after <= before, s"edge-bound path must never worsen the cut: $before -> $after")
     assert(bw.forall(_ <= 7L), s"over-cap block: ${bw.mkString(",")}")

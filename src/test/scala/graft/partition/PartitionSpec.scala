@@ -5,6 +5,7 @@ import scala.jdk.CollectionConverters._
 import graft.SparkFunSuite
 import graft.graph.MetisIO
 import graft.model.CsrGraph
+import graft.util.Stage
 import org.apache.spark.sql.functions._
 
 /** Mirrors the reference's e2e quality-bound tests
@@ -223,7 +224,7 @@ class PersistHygieneSpec extends SparkFunSuite {
     }
     // not cached by the caller, so the edge table is staged inside the call too
     val edges = undirectedUnit(edgeSet.toSeq)
-    val dir = java.nio.file.Paths.get(graft.util.Ckpt.baseDir)
+    val dir = java.nio.file.Paths.get(Stage.baseDir)
     def written: Set[String] =
       if (!java.nio.file.Files.isDirectory(dir)) Set.empty
       else {
@@ -249,6 +250,64 @@ class PersistHygieneSpec extends SparkFunSuite {
       graft.util.RunCheckpoint("hygiene", root))
     assert(spark.sparkContext.getPersistentRDDs.keySet === before)
     assert(math.abs(ranks.agg(sum(col("pr"))).first().getDouble(0) - 1.0) < 1e-9)
+  }
+
+  /** Runs `call`, reads its result with `use`, then asserts no RDD stayed persisted. */
+  private def noPinned[A](call: => A)(use: A => Unit): Unit = {
+    val before = spark.sparkContext.getPersistentRDDs.keySet
+    use(call)
+    val leaked = spark.sparkContext.getPersistentRDDs.keySet -- before
+    assert(leaked.isEmpty, s"leaked persisted RDDs: $leaked")
+  }
+
+  private def ringWithChord =
+    undirectedUnit((0L until 40L).map(i => (i, (i + 1) % 40)) ++ Seq((0L, 20L), (5L, 7L)))
+
+  test("PageRank.run leaves no pinned RDDs behind") {
+    noPinned(graft.ops.PageRank.run(spark, ringWithChord, iterations = 5)) { ranks =>
+      assert(math.abs(ranks.agg(sum(col("pr"))).first().getDouble(0) - 1.0) < 1e-9)
+    }
+  }
+
+  test("ConnectedComponents.run leaves no pinned RDDs behind") {
+    noPinned(graft.ops.ConnectedComponents.run(spark, ringWithChord)) { cc =>
+      assert(cc.select(col("component")).distinct().collect().map(_.getLong(0)).toSeq === Seq(0L))
+    }
+  }
+
+  test("LabelPropagation.run leaves no pinned RDDs behind") {
+    noPinned(graft.ops.LabelPropagation.run(spark, ringWithChord, maxIter = 4)) { lp =>
+      assert(lp.count() === 40L)
+    }
+  }
+
+  test("Triangles.count leaves no pinned RDDs behind") {
+    noPinned(graft.ops.Triangles.count(spark, ringWithChord)) { t =>
+      assert(t.first().getLong(0) === 1L) // 5-6-7
+    }
+  }
+
+  test("HtmlExtract.edgeTable leaves no pinned RDDs once the caller unpersists its result") {
+    val pages = graft.extract.PageGen.generateDf(spark, hosts = 4, pagesPerHost = 6, seed = 11L)
+    noPinned(graft.extract.HtmlExtract.edgeTable(pages)._1.persist()) { edges =>
+      assert(edges.count() > 0L)
+      edges.unpersist(blocking = true)
+    }
+  }
+
+  test("Dedup.verifyJaccard leaves no pinned RDDs behind") {
+    val s = spark
+    import s.implicits._
+    val docs = Seq(
+      (0L, "the quick brown fox jumps over the lazy dog near the river bank"),
+      (1L, "the quick brown fox jumps over the lazy dog near the river bend"),
+      (2L, "an unrelated sentence about cooking pasta with tomato sauce tonight"))
+      .toDF("doc_id", "text")
+    val pairs = Seq((0L, 1L), (0L, 2L)).toDF("a", "b")
+    noPinned(graft.textops.Dedup.verifyJaccard(docs, pairs)) { j =>
+      val byPair = j.collect().map(r => (r.getLong(0), r.getLong(1)) -> r.getDouble(2)).toMap
+      assert(byPair((0L, 1L)) > 0.5 && byPair((0L, 2L)) < 0.1)
+    }
   }
 }
 
@@ -444,13 +503,15 @@ class UnderloadBalancerSpec extends SparkFunSuite {
       .map(nn => (nn, if (nn < 30) 0 else if (nn < 59) 1 else 2))
       .toDF("node", "block")
     val fe = edges.repartition(col("dst"))
-    val (part, bw) = DistRefiner.underloadBalance(
-      spark, fe, nodeW, part0, 3, lmin = 15L, lmax = 40L, seed = 1L)
-    assert(bw.forall(_ >= 15L), s"blocks below min: ${bw.mkString(",")}")
-    assert(bw.sum === n.toLong)
-    val counts = part.groupBy(col("block")).agg(count(lit(1))).collect()
-      .map(r => r.getInt(0) -> r.getLong(1)).toMap
-    (0 until 3).foreach(b => assert(counts.getOrElse(b, 0L) === bw(b), s"block $b"))
+    Stage.scope { st =>
+      val (part, bw) = DistRefiner.underloadBalance(
+        st, spark, fe, nodeW, part0, 3, lmin = 15L, lmax = 40L, seed = 1L)
+      assert(bw.forall(_ >= 15L), s"blocks below min: ${bw.mkString(",")}")
+      assert(bw.sum === n.toLong)
+      val counts = part.groupBy(col("block")).agg(count(lit(1))).collect()
+        .map(r => r.getInt(0) -> r.getLong(1)).toMap
+      (0 until 3).foreach(b => assert(counts.getOrElse(b, 0L) === bw(b), s"block $b"))
+    }
   }
 
   test("computePartition with min weights: every block within [Lmin, Lmax], both paths") {
@@ -534,9 +595,11 @@ class ClusterCapSpec extends SparkFunSuite {
     val star = undirectedUnit((1L to 40L).map(l => (0L, l)))
     val nodeW = (0L to 40L).map((_, 1L)).toDF("node", "weight")
     for (cap <- Seq(3L, 5L, 9L)) {
-      val labels = DistCoarsener.lpCluster(spark, star, nodeW, cap = cap, seed = 2L)
-      val w = labels.join(nodeW, "node").groupBy(col("label"))
-        .agg(sum(col("weight")).as("cw")).collect().map(_.getLong(1))
+      val w = Stage.scope { st =>
+        val labels = DistCoarsener.lpCluster(st, spark, star, nodeW, cap = cap, seed = 2L)
+        labels.join(nodeW, "node").groupBy(col("label"))
+          .agg(sum(col("weight")).as("cw")).collect().map(_.getLong(1))
+      }
       assert(w.forall(_ <= cap), s"cap=$cap cluster weights ${w.sorted.mkString(",")}")
       assert(w.sum === 41L, "no node may be lost")
     }
@@ -547,10 +610,11 @@ class ClusterCapSpec extends SparkFunSuite {
     import s.implicits._
     val star = undirectedUnit((1L to 40L).map(l => (0L, l)) ++ (1L to 39L).map(l => (l, l + 1)))
     val nodeW = (0L to 40L).map((_, 1L)).toDF("node", "weight")
-    val a = DistCoarsener.lpCluster(spark, star, nodeW, cap = 5L, seed = 2L)
-      .collect().map(r => (r.getLong(0), r.getLong(1))).sortBy(_._1).toSeq
-    val b = DistCoarsener.lpCluster(spark, star.repartition(7), nodeW, cap = 5L, seed = 2L)
-      .collect().map(r => (r.getLong(0), r.getLong(1))).sortBy(_._1).toSeq
+    def run(e: org.apache.spark.sql.DataFrame) = Stage.scope(st =>
+      DistCoarsener.lpCluster(st, spark, e, nodeW, cap = 5L, seed = 2L)
+        .collect().map(r => (r.getLong(0), r.getLong(1))).sortBy(_._1).toSeq)
+    val a = run(star)
+    val b = run(star.repartition(7))
     assert(a === b)
   }
 }

@@ -80,14 +80,6 @@ class DedupSpec extends SparkFunSuite {
     assert(!pairs.exists { case (a, b) => a == 4L || b == 4L || a == 5L || b == 5L })
   }
 
-  test("near-dup groups cluster the duplicate family via connected components") {
-    val groups = Dedup.nearDupGroups(corpus, threshold = 0.5)
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    // 0,1,2,3 all connect (possibly transitively) into group 0
-    assert(Set(0L, 1L, 2L).map(groups) === Set(0L))
-    assert(!groups.contains(4L) && !groups.contains(5L)) // singletons: no dup edges
-  }
-
   test("simhash: identical docs hash equal; near-dups within hamming 3; unrelated far") {
     val sh = Dedup.simhash(corpus).collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(sh(0L) === sh(1L))
@@ -141,14 +133,6 @@ class SimilaritySpec extends SparkFunSuite {
       .collect().map(r => (r.getLong(0), r.getLong(2))).toSet
     val recall = (brute & ann).size.toDouble / brute.size
     assert(recall >= 0.4, s"ANN recall@5 too low: $recall")
-  }
-
-  test("cosine near-dup detector finds same-label planted structure deterministically") {
-    val v = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
-      .select(col("vec_id").as("id"), col("embedding").as("vec"))
-    val a = Similarity.cosineNearDups(v, threshold = 0.95).collect().map(_.toSeq).toSet
-    val b = Similarity.cosineNearDups(v.repartition(7), threshold = 0.95).collect().map(_.toSeq).toSet
-    assert(a === b) // deterministic under repartition
   }
 }
 

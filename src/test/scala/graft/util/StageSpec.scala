@@ -6,51 +6,93 @@ import org.apache.spark.sql.functions._
 /** In-memory staging: results equal the unstaged plan, the statistics of a long
   * chain of self-joining stages stay bounded (a plain local checkpoint carries the
   * origin plan's statistics, whose size estimate squares at every self-join), and a
-  * scope releases what it staged.
+  * scope releases what it staged — a child scope before its parent, and on a throw.
   */
 class StageSpec extends SparkFunSuite {
 
+  private def persisted = spark.sparkContext.getPersistentRDDs.keySet
+
   test("25 chained self-joining stages keep the optimized plan's sizeInBytes bounded") {
-    var df = spark.range(200).select(col("id"), (col("id") % 7).as("v"))
-    val staged = scala.collection.mutable.ArrayBuffer.empty[org.apache.spark.sql.DataFrame]
-    var expected = (0L until 200L).map(i => i -> i % 7).toMap
-    for (_ <- 0 until 25) {
-      // each step joins the previous stage with itself: without the reset, the
-      // join's size estimate is the product of its two children's
-      val next = df.join(df.select(col("id"), col("v").as("v2")), "id")
-        .select(col("id"), ((col("v") + col("v2")) % 1000003L).as("v"))
-      val (s, rows) = Stage.memory(next)
-      assert(rows === 200L)
-      staged += s
-      df = s
-      expected = expected.map { case (i, v) => i -> (v + v) % 1000003L }
+    val before = persisted
+    Stage.scope { st =>
+      var df = spark.range(200).select(col("id"), (col("id") % 7).as("v"))
+      var expected = (0L until 200L).map(i => i -> i % 7).toMap
+      for (_ <- 0 until 25) {
+        // each step joins the previous stage with itself: without the reset, the
+        // join's size estimate is the product of its two children's
+        val next = df.join(df.select(col("id"), col("v").as("v2")), "id")
+          .select(col("id"), ((col("v") + col("v2")) % 1000003L).as("v"))
+        val (s, rows) = st.memory(next)
+        assert(rows === 200L)
+        df = s
+        expected = expected.map { case (i, v) => i -> (v + v) % 1000003L }
+      }
+      val size = df.join(df.select(col("id"), col("v").as("v2")), "id")
+        .queryExecution.optimizedPlan.stats.sizeInBytes
+      assert(size < BigInt(1L << 40), s"sizeInBytes $size")
+      val got = df.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+      assert(got === expected)
     }
-    val size = df.join(df.select(col("id"), col("v").as("v2")), "id")
-      .queryExecution.optimizedPlan.stats.sizeInBytes
-    assert(size < BigInt(1L << 40), s"sizeInBytes $size")
-    val got = df.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    assert(got === expected)
-    staged.foreach(Par.releaseLocalCkpt)
+    assert((persisted -- before).isEmpty)
   }
 
-  test("inside a scope Ckpt stages in memory and the scope releases it") {
-    val before = spark.sparkContext.getPersistentRDDs.keySet
-    val dir = java.nio.file.Paths.get(Ckpt.baseDir)
+  test("a scope stages in memory, from pool threads too, and releases it on close") {
+    val before = persisted
+    val dir = java.nio.file.Paths.get(Stage.baseDir)
     def written = if (java.nio.file.Files.isDirectory(dir)) {
       val ls = java.nio.file.Files.list(dir)
       try ls.count() finally ls.close()
     } else 0L
     val filesBefore = written
-    val total = Stage.scoped {
-      val (c, n) = Ckpt.counted(spark.range(50).toDF("x"), "t")
+    val total = Stage.scope { st =>
+      val (c, n) = st.memory(spark.range(50).toDF("x"))
       assert(n === 50L)
-      // a thread the scope starts stages in memory too
-      val Seq(d) = Par.awaitAll(Seq(() => Ckpt(c.filter(col("x") < 10), "t")))
-      assert((spark.sparkContext.getPersistentRDDs.keySet -- before).size === 2)
+      // a thread the scope's owner starts stages into the same scope
+      val Seq(d) = Par.awaitAll(Seq(() => st.memory(c.filter(col("x") < 10))._1))
+      assert((persisted -- before).size === 2)
       d.agg(sum(col("x"))).first().getLong(0)
     }
     assert(total === 45L)
-    assert(written === filesBefore, "a scoped Ckpt wrote to parquet")
-    assert((spark.sparkContext.getPersistentRDDs.keySet -- before).isEmpty)
+    assert(written === filesBefore, "a memory stage wrote to parquet")
+    assert((persisted -- before).isEmpty)
+  }
+
+  test("a child scope releases its blocks while the parent's survive") {
+    val before = persisted
+    Stage.scope { st =>
+      val (outer, _) = st.memory(spark.range(30).toDF("x"))
+      val cached = st.cache(spark.range(40).toDF("y").filter(col("y") > 3))
+      cached.count()
+      val parentOwned = persisted -- before
+      assert(parentOwned.size === 2)
+      val inner = st.scope { in =>
+        val l = in.local(outer.filter(col("x") % 2 === 0))
+        val (m, _) = in.memory(l.select((col("x") * 10).as("x")))
+        assert((persisted -- before -- parentOwned).size === 2)
+        st.memory(m)._1 // staged in the parent: outlives the child
+      }
+      // the child's two tables are gone; the parent's two and its new stage remain
+      assert(parentOwned.subsetOf(persisted))
+      assert((persisted -- before).size === 3)
+      assert(inner.agg(sum(col("x"))).first().getLong(0) === (0L until 30L by 2L).sum * 10L)
+      assert(outer.count() === 30L && cached.count() === 36L)
+    }
+    assert((persisted -- before).isEmpty)
+  }
+
+  test("a throwing body still releases everything") {
+    val before = persisted
+    val err = intercept[IllegalStateException] {
+      Stage.scope { st =>
+        st.memory(spark.range(20).toDF("x"))
+        st.cache(spark.range(25).toDF("y")).count()
+        st.scope { in =>
+          in.local(spark.range(5).toDF("z")).count()
+          throw new IllegalStateException("boom")
+        }
+      }
+    }
+    assert(err.getMessage === "boom")
+    assert((persisted -- before).isEmpty)
   }
 }
