@@ -96,9 +96,9 @@ object ScalingBench {
           def timeRefineHub(iters: Int, seed: Long): Double = {
             val t0 = System.nanoTime()
             st.scope { in =>
-              val part = in.local(part0.join(nodeW, "node"))
               in.durable(graft.partition.DistRefiner.lpRefineCaps(
-                in, spark, geHub, part, k, Array.fill(k)(lmax), maxIter = iters, seed = seed
+                in, spark, geHub, part0.join(nodeW, "node"), k, Array.fill(k)(lmax),
+                maxIter = iters, seed = seed
               ).select(col("node"), col("block")), "ref-part-out").count()
             }
             (System.nanoTime() - t0) / 1e9

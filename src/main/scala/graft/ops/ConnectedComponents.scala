@@ -3,6 +3,8 @@ package graft.ops
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.util.Stage
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.XXH64
 
 /** Connected components via alternating large-star / small-star (Kiveris et al.,
   * "Connected Components in MapReduce and Beyond", SoCC'14) — the north-star-mandated
@@ -12,8 +14,8 @@ import graft.util.Stage
   * Each phase is one shuffle: group the current edge set by node, compute the min of
   * the neighborhood, re-emit star edges. The edge set only shrinks toward the final
   * star forest, so per-superstep cost decreases. Deterministic: pure min/grouping, no
-  * randomness. Fixpoint detection compares (count, xor-of-hashes) between rounds — two
-  * scalar aggregates, no expensive except().
+  * randomness. Fixpoint detection compares (count, xor-of-hashes) between rounds —
+  * folded by each round's staging job, no expensive except().
   *
   * The reference ships a sequential CC tool (`/root/reference/apps/tools/
   * ConnectedComponentsTool.cc`) as a companion utility; this operator supersedes it
@@ -26,23 +28,15 @@ object ConnectedComponents {
     *         connected component (exact labels at convergence).
     */
   def run(spark: SparkSession, edges: DataFrame, maxIter: Int = 50): DataFrame = Stage.scope { st =>
-    // Per-round state staging is a LAZY local checkpoint materialized by the fixpoint-
-    // signature aggregate (count, xor-of-pair-hashes — order-independent, overflow-
-    // free under ANSI mode): still ONE job per round, but no parquet round-trip
-    // (optimization r06, the lpRefine staging pattern — the plan truncation is what
-    // matters, and the lazy local checkpoint provides it without a storage write).
-    // A local checkpoint keeps origin stats (see graft.util.Stage), so the state is
-    // reset to a parquet checkpoint every `statsResetEvery` rounds on LONG runs;
-    // typical runs (O(log n) rounds) never pay a mid-loop write.
-    val statsResetEvery = 8
-    // a round's staged pairs are dead as soon as the next round's staging aggregate
-    // has run: a slow convergence must not pin O(rounds) copies of the pair table
+    // Per-round state staging is one in-memory stage whose job also folds the
+    // fixpoint signature (count, xor of xxhash64(u, v) — order-independent,
+    // overflow-free): ONE job per round, no parquet round trip, and fresh statistics
+    // however many rounds run. A round's staged pairs are dead as soon as the next
+    // round is staged: a slow convergence must not pin O(rounds) copies of the pair
+    // table.
     def stageWithSig(df: DataFrame): (DataFrame, (Long, Long)) = {
-      val staged = st.local(df)
-      val r = staged.agg(
-        count(lit(1)).as("c"),
-        coalesce(expr("bit_xor(xxhash64(u, v))"), lit(0L)).as("h")).first()
-      (staged, (r.getLong(0), r.getLong(1)))
+      val (staged, n, h) = st.memory(df, pairHashFold(df))
+      (staged, (n, h))
     }
 
     // undirected edges as canonical pairs u > v (self-loops impossible downstream)
@@ -100,11 +94,6 @@ object ConnectedComponents {
       sig = newSig
       pairs = rewired
       it += 1
-      if (it % statsResetEvery == 0 && !converged) {
-        val ck = st.durable(pairs, "cc-pairs")
-        st.release(pairs)
-        pairs = ck
-      }
     }
 
     // final star forest written once (flat scan + fresh leaf stats for the caller);
@@ -113,5 +102,18 @@ object ConnectedComponents {
     allNodes
       .join(finalPairs.select(col("u").as("node"), col("v").as("root")), Seq("node"), "left")
       .select(col("node"), coalesce(col("root"), col("node")).as("component"))
+  }
+
+  /** bit_xor of xxhash64(u, v) over the staged pairs: Spark's xxhash64 with its
+    * default seed 42, hashing u and then v.
+    */
+  private def pairHashFold(df: DataFrame): Stage.Fold[Long] = {
+    val (u, v) = (Stage.field(df, "u"), Stage.field(df, "v"))
+    new Stage.Fold[Long] {
+      def zero: Long = 0L
+      def add(acc: Long, row: InternalRow): Long =
+        acc ^ XXH64.hashLong(v(row), XXH64.hashLong(u(row), 42L))
+      def merge(a: Long, b: Long): Long = a ^ b
+    }
   }
 }

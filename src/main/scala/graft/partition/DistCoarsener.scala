@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, Observation, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import graft.util.{Log, Stage}
+import org.apache.spark.sql.catalyst.InternalRow
 
 /** Distributed LP clustering + contraction — the coarsening half of the partitioner.
   *
@@ -16,12 +17,13 @@ import graft.util.{Log, Stage}
   * gross-inflow rollback aggregate.
   *
   * Scale shape per superstep: 2 shuffle joins (gather), 1 hash agg (ratings),
-  * 1 max_by agg (argmax), 1 demand agg + broadcast-ish joins (admission), 1 inflow
-  * agg (rollback). NO per-target-cluster sort window (round-4 judge fix #2): a viral
-  * page's label in a web graph can attract ~n movers, and a capacity-prefix window
-  * would sort them all in ONE task; the proportional coin costs the same per row for
-  * 10 movers or 10^8. All keys are node/cluster ids — co-partitioning the edge table
-  * by src makes the big join shuffle-free on a real cluster.
+  * 1 max_by agg (argmax), 1 demand agg + joins (admission; the target's allowance
+  * rides with the argmax winner), 1 inflow agg (rollback, only when contended). NO
+  * per-target-cluster sort window (round-4 judge fix #2): a viral page's label in a
+  * web graph can attract ~n movers, and a capacity-prefix window would sort them all
+  * in ONE task; the proportional coin costs the same per row for 10 movers or 10^8.
+  * All keys are node/cluster ids — co-partitioning the edge table by src makes the
+  * big join shuffle-free on a real cluster.
   */
 object DistCoarsener {
 
@@ -83,23 +85,26 @@ object DistCoarsener {
         Gather.plain(st.cache(
           gatherInput.repartition(col("dst")).sortWithinPartitions(col("dst"))))
     val e = ge.e
-    // entry labels as a LAZY local checkpoint (r06: was a parquet write+read) —
-    // superstep 0's staging job materializes it and its several superstep-0
-    // consumers (cluster weights, payload join, gather labels, active state) read
-    // the shared blocks
-    var labels = st.local(nodeW.select(col("node"), col("node").as("label"), col("weight")))
+    // The superstep state is one staged table (node, label, weight, cand, D, allow,
+    // it): the labels entering the superstep, each node's committed move (null if
+    // none), the admission's demand and allowance, and the superstep index. Every
+    // superstep reads its labels through the same projection of the same schema,
+    // and the index rides as a column rather than a literal, so every superstep
+    // plans the same text and compiles no new classes. The entry state moves nobody.
+    var state = st.memory(nodeW.select(
+      col("node"), col("node").as("label"), col("weight"), lit(null).cast("long").as("cand"),
+      lit(null).cast("long").as("D"), lit(null).cast("long").as("allow"), lit(-1).as("it")))._1
+    def labelsOf(state: DataFrame): DataFrame = state.select(col("node"),
+      coalesce(col("cand"), col("label")).as("label"), col("weight"), (col("it") + 1).as("it"))
 
     var it = 0
     var quiet = 0
-    // the staged tables of the previous superstep, released once this superstep's
-    // staged blocks land (a rolling window of one superstep)
-    var previous: Seq[DataFrame] = Seq(labels)
     while (it < maxIter && quiet < 2) {
+      val labels = labelsOf(state)
       // alternating deterministic halves (same rationale as community LP: decorrelate
       // simultaneous neighbor moves, reproducibly)
-      val parity = pmod(xxhash64(col("node"), lit(seed)) + lit(it), lit(2))
+      val parity = pmod(xxhash64(col("node"), lit(seed)) + col("it"), lit(2))
       val active = labels.filter(parity === 0)
-      val inactive = labels.filter(parity =!= 0)
 
       // cluster weights BEFORE the round (capacity base, conservative: departures
       // during the round don't free capacity — mirrors the reference's cap check
@@ -122,33 +127,34 @@ object DistCoarsener {
         .groupBy(col("src"), col("nl"))
         .agg(sum(col("w")).as("rating"), max(col("cw")).as("cw")) // cw constant per nl
         .join(
-          active.select(col("node").as("src"), col("label").as("cur"), col("weight").as("nw")),
+          active.select(col("node").as("src"), col("label").as("cur"), col("weight").as("nw"),
+            col("it")),
           "src"
         )
 
       // argmax per node among labels whose CURRENT weight + node weight fits the cap
       // (pre-filter; the post-protocol below guarantees the cap against concurrent
-      // arrivals). Moving to own label is a no-op, filter it late so `cur` rating is
-      // still available for gain.
+      // arrivals). The own label `cur` stays a candidate, so a node whose own label
+      // rates best does not move; movers are filtered after the argmax. The winner's
+      // cluster weight comes along: its residual `allow` is the target's capacity in
+      // the admission below, so no second aggregate by cluster id is needed.
       val candidates = ratings
         .filter(col("nl") === col("cur") || (col("cw") + col("nw")) <= cap)
         .withColumn("tb", xxhash64(col("nl"), lit(seed)))
-        .groupBy(col("src"), col("cur"), col("nw"))
+        .groupBy(col("src"), col("cur"), col("nw"), col("it")) // one `it` per superstep
         .agg(
           max_by(
-            struct(col("nl"), col("rating")),
+            struct(col("nl"), col("cw")),
             struct(col("rating"), (-col("tb")).as("h"), (-col("nl")).as("n"))
           ).as("bestS")
         )
         .select(
-          col("src").as("node"), col("cur"), col("nw"),
-          col("bestS.nl").as("cand"), col("bestS.rating").as("gain")
+          col("src"), col("cur"), col("nw"), col("it"), col("bestS.nl").as("cand"),
+          greatest(lit(0L), lit(cap) - col("bestS.cw")).as("allow")
         )
 
-      // staged behind a lazy localCheckpoint: the admission below reads the movers
-      // twice (demand aggregate + join), and without the cut Spark plans the whole
-      // gather -> argmax subtree once per read. The staging job materializes it.
-      val movers = st.local(candidates.filter(col("cand") =!= col("cur")))
+      // staged: the admission below reads the movers twice (demand aggregate + join)
+      val (movers, _) = st.memory(candidates.filter(col("cand") =!= col("cur")))
 
       // O23 capacity protocol, proportional form (round-4 judge fix #2): per target
       // cluster, aggregate the movers' weight demand D and admit each mover with a
@@ -157,70 +163,41 @@ object DistCoarsener {
       // reference's own tentative-move + rollback protocol
       // (`global_lp_clusterer.cc:537-583`). Reuses the JET admission kernel
       // (PlanAudit asserts the no-window, no-sort property on both).
-      val capacity = clusterW.select(
-        col("label").as("cand"), greatest(lit(0L), lit(cap) - col("cw")).as("allow"))
-      val tentative = DistRefiner.admitProportional(
-        movers.withColumnRenamed("node", "src"), capacity, seed + it)
+      val tentative = DistRefiner.admitProportional(movers, lit(seed) + col("it"))
 
-      // job 1 (the heavy one — ends the gather): stage (old label, weight, tentative
-      // cand, D, allow) behind a LAZY localCheckpoint (r06: was a parquet write);
-      // the tentative-move count AND the admission contention (max D - allow over
-      // admitted rows) come from the materializing aggregate — still one job, no
-      // second scan, no storage round-trip. D/allow ride in the blocks solely for
-      // that aggregate; every downstream projection drops them.
-      val staged = st.local(labels
+      // stage the next state; its staging job also folds the tentative-move count
+      // and the admission contention (max D - allow over admitted rows). D rides in
+      // the blocks solely for that fold; allow also serves the rollback.
+      val tentativeState = labels
         .join(tentative, Seq("node"), "left")
         .select(col("node"), col("label"), col("weight"), col("cand"),
-          col("D"), col("allow")))
-      val mRow = staged.agg(
-        sum(when(col("cand").isNotNull, 1L).otherwise(0L)).as("moves"),
-        max(when(col("cand").isNotNull, col("D") - col("allow"))
-          .otherwise(Long.MinValue)).as("contention")).first()
-      val moves = if (mRow.isNullAt(0)) 0L else mRow.getLong(0)
-      val contention = if (mRow.isNullAt(1)) Long.MinValue else mRow.getLong(1)
+          col("D"), col("allow"), col("it"))
+      val (staged, _, (moves, contention)) =
+        st.memory(tentativeState, admissionFold(tentativeState))
       // per-cluster rollback only when some target was OVERSUBSCRIBED (D > allow
       // somewhere): otherwise every coin ran at p = 1 and the admitted inflow
-      // provably fits, so the commit is a free projection of the staged blocks —
-      // the common case after the first supersteps. The contended commit is a
-      // MATERIALIZED rollback (r06: lazy localCheckpoint fired by the committed-move
-      // count, was a parquet checkpoint — same single job and same flat-plan
-      // truncation for the next superstep's 3 consumers, no storage round-trip; an
-      // UNtruncated lazy-projection commit was tried earlier and cost ~+14 s/run at
-      // sf0.1 because the rollback subplan re-executes ~4x inside the next
-      // superstep's write).
-      var committed = moves
-      var newCommitBlocks: Option[DataFrame] = None
-      val newLabels =
-        if (contention <= 0L)
-          staged.select(
-            col("node"), coalesce(col("cand"), col("label")).as("label"), col("weight"))
+      // provably fits, so the staged table is the next state — the common case
+      // after the first supersteps. The contended commit is staged too (an unstaged
+      // commit re-executes the rollback subplan inside each of the next superstep's
+      // reads), and its staging job counts the moves that survive.
+      val (next, committed) =
+        if (contention <= 0L) (staged, moves)
         else {
-          // the commit keeps BOTH labels through the checkpoint so the committed-
-          // move count comes from the materializing aggregate itself (an
-          // Observation would not survive the checkpoint boundary — metrics
-          // attached below a lazy localCheckpoint are not delivered when a later
-          // query materializes the RDD); the old-label column is dropped by the
-          // lazy projection below, which reads the flat blocks
-          val committedFull = st.local(commitWithRollbackFull(staged, capacity))
-          newCommitBlocks = Some(committedFull)
-          committed = committedFull
-            .agg(sum(when(col("nl") =!= col("label"), 1L).otherwise(0L)).as("c"))
-            .first().getLong(0)
-          committedFull.select(col("node"), col("nl").as("label"), col("weight"))
+          val commit = commitWithRollback(staged)
+          val (full, _, (c, _)) = st.memory(commit, admissionFold(commit))
+          st.release(staged)
+          (full, c)
         }
-      // every job reading the previous superstep's tables has run (this superstep's
-      // staging aggregate AND its rollback count, whose `capacity` subplan re-reads
-      // the previous labels)
-      previous.foreach(st.release)
-      previous = Seq(movers, staged) ++ newCommitBlocks
-      labels = newLabels
+      // nothing reads the movers or the previous state any more
+      Seq(movers, state).foreach(st.release)
+      state = next
       Log.info(
         s"lpCluster superstep $it: tentativeMoves=$moves committed=$committed contention=$contention")
       quiet = if (committed == 0L) quiet + 1 else 0
       it += 1
     }
     st.release(e)
-    labels.select(col("node"), col("label"))
+    labelsOf(state).select(col("node"), col("label"))
   }
 
   /** Isolated-node pair chaining (SURVEY O4, reference `label_propagation.h:884-917`):
@@ -263,42 +240,40 @@ object DistCoarsener {
   }
 
   /** Per-cluster rollback commit (the second half of the O23 protocol): given the
-    * staged superstep table (node, label, weight, cand nullable) and per-target
-    * capacities (cand, allow), drop the moves of every target cluster whose admitted
-    * GROSS inflow exceeds its allowance and apply the rest. One hash aggregation +
-    * two joins — no sort, no window (PlanAudit-asserted), so a hub cluster with 10^8
-    * admitted movers costs the same per row as one with 10.
+    * staged superstep state (node, label, weight, cand nullable, D, allow, it), where
+    * each admitted mover carries its target's allowance, drop the moves of every
+    * target cluster whose admitted GROSS inflow exceeds its allowance and keep the
+    * rest: the same state with the dropped moves' `cand` set to null. One hash
+    * aggregation + one join — no sort, no window (PlanAudit-asserted), so a hub
+    * cluster with 10^8 admitted movers costs the same per row as one with 10.
     */
-  private[graft] def commitWithRollback(
-      staged: DataFrame,
-      capacity: DataFrame,
-      obs: Option[org.apache.spark.sql.Observation] = None): DataFrame = {
-    val withNew = commitWithRollbackFull(staged, capacity)
-    val observed = obs.fold(withNew)(o =>
-      withNew.observe(o,
-        sum(when(col("nl") =!= col("label"), 1L).otherwise(0L)).as("committed")))
-    observed.select(col("node"), col("nl").as("label"), col("weight"))
-  }
-
-  /** [[commitWithRollback]] keeping the old label column: (node, label, weight, nl)
-    * — the lpCluster superstep checkpoints this and derives both the committed-move
-    * count and the new label table from the flat blocks.
-    */
-  private[graft] def commitWithRollbackFull(
-      staged: DataFrame,
-      capacity: DataFrame): DataFrame = {
+  private[graft] def commitWithRollback(staged: DataFrame): DataFrame = {
     val rolledBack = staged.filter(col("cand").isNotNull)
-      .groupBy(col("cand")).agg(sum(col("weight")).as("inW"))
-      .join(capacity, "cand")
+      .groupBy(col("cand"))
+      .agg(sum(col("weight")).as("inW"), max(col("allow")).as("allow")) // allow: one per cand
       .filter(col("inW") > col("allow"))
       .select(col("cand"), lit(true).as("rb"))
     staged
       .join(rolledBack, Seq("cand"), "left")
-      .withColumn(
-        "nl",
-        when(col("cand").isNotNull && col("rb").isNull, col("cand"))
-          .otherwise(col("label")))
-      .select(col("node"), col("label"), col("weight"), col("nl"))
+      .select(col("node"), col("label"), col("weight"),
+        when(col("rb").isNull, col("cand")).as("cand"), col("D"), col("allow"), col("it"))
+  }
+
+  /** (moves, contention) of a staged superstep state: the rows with a target
+    * `cand`, and the largest demand `D` over allowance among them (Long.MinValue
+    * when there are none).
+    */
+  private def admissionFold(df: DataFrame): Stage.Fold[(Long, Long)] = {
+    val (cand, demand, allow) =
+      (Stage.field(df, "cand"), Stage.field(df, "D"), Stage.field(df, "allow"))
+    new Stage.Fold[(Long, Long)] {
+      def zero: (Long, Long) = (0L, Long.MinValue)
+      def add(acc: (Long, Long), row: InternalRow): (Long, Long) =
+        if (cand.isNull(row)) acc
+        else (acc._1 + 1L, math.max(acc._2, demand(row) - allow(row)))
+      def merge(a: (Long, Long), b: (Long, Long)): (Long, Long) =
+        (a._1 + b._1, math.max(a._2, b._2))
+    }
   }
 
   /** Sparsification (SURVEY O11, reference `sparsification_cluster_coarsener.cc`

@@ -3,6 +3,7 @@ package graft.partition
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.util.{Log, Par, Stage}
+import org.apache.spark.sql.catalyst.InternalRow
 
 /** Distributed balanced refinement — the uncoarsening half of the partitioner.
   *
@@ -46,10 +47,7 @@ object DistRefiner {
       lastBlockW: Option[Array[Long]] = None
   ): DataFrame =
     Stage.scope { st =>
-      // the entry join is a LAZY local checkpoint (r06: flat plan, no upfront write
-      // job) — superstep 0's staged job materializes it and its three per-superstep
-      // consumers then read the cached blocks
-      val part = st.local(part0.join(nodeW, "node").select(col("node"), col("block"), col("weight")))
+      val part = part0.join(nodeW, "node").select(col("node"), col("block"), col("weight"))
       st.durable(
         lpRefineCaps(st, spark, Gather.plain(edges), part, k, Array.fill(k)(lmax), maxIter,
           seed, runId, level, lastBlockW).select(col("node"), col("block")),
@@ -74,46 +72,51 @@ object DistRefiner {
       seed: Long,
       runId: String = "",
       level: Int = -1,
-      lastBlockW: Option[Array[Long]] = None,
-      blockW0: Option[Array[Long]] = None
+      lastBlockW: Option[Array[Long]] = None
   ): DataFrame = {
     // `lastBlockW`: caller-supplied k-slot array that receives the exact tracked
     // block weights at return (avoids a full re-aggregation after a polish pass).
     // The weight rides in `part0`, so the nodeW join happens once per LEVEL, not per
-    // stage.
+    // stage; the entry block weights are folded by the entry state's staging job.
     // PRECONDITION (co-partitioning contract): callers hash-partition the gather
     // edges by the gather key once per level and cache them — see Partitioner/
     // ScalingBench/Gather.prepare — so supersteps reuse that layout and only the
     // n-row state shuffles.
-    var part = part0.select(col("node"), col("block"), col("weight"))
-
     // Superstep shape (scales like the PageRank gather — no k-key windows, no
-    // duplicated subplans, no per-round full-plan recomputation): ONE job per
-    // superstep — the staged (node, old block, weight, tentative cand) table is a
-    // LAZY localCheckpoint (flat LogicalRDD plan; materialized by the k^2-row delta
-    // collect, the reference's allreduce). Optimization r06: this was a parquet
-    // write + a separate re-scan aggregate (2 jobs/superstep); the plan truncation
-    // is what matters (each superstep references the previous state 3x, so an
-    // untruncated chain grows the analyzed plan 3^it — measured: superstep walls
-    // 3 s, 3 s, 11 s, 77 s), and the lazy local checkpoint provides it without a
-    // storage round trip or an extra job. The caller stages the RETURN value, so
-    // the next stage reads a flat leaf with fresh statistics (a local checkpoint
-    // keeps origin stats — products over <= maxIter supersteps are bounded; the
-    // caller's cut resets them, see graft.util.Stage).
+    // duplicated subplans, no per-round full-plan recomputation): two staged tables
+    // per superstep, the move candidates and the state (node, block, weight, cand,
+    // it) — each node's block entering the superstep, its tentative move (null if
+    // none) and the superstep index. The state's staging job folds the k^2 move
+    // deltas (the reference's allreduce), and the next superstep's partition is a
+    // projection of its blocks. The staging cuts the plan (each superstep
+    // references the previous state 3x, so an untruncated chain grows the analyzed
+    // plan 3^it — measured: superstep walls 3 s, 3 s, 11 s, 77 s) and gives the next
+    // superstep fresh statistics (see graft.util.Stage). The entry state has the
+    // same schema and moves nobody, and the index rides as an INT column rather
+    // than a literal, so every superstep plans the same text.
     // Violating TARGET blocks roll back all their moves this round (per-block
     // rollback, `lp_refiner.cc:296-333` made finer-grained). Block weights are
     // maintained driver-side from the deltas (k values), so the balance invariant
     // holds exactly at every superstep end.
-    val blockW: Array[Long] = blockW0.getOrElse(Metrics.blockWeightsW(part, k))
+    val entry = part0.select(col("node"), col("block").cast("int").as("block"), col("weight"),
+      lit(null).cast("int").as("cand"), lit(-1).as("it"))
+    val (entryState, _, blockW) = st.memory(entry, Metrics.blockWeightFold(entry, k))
+    var state = entryState
+    // the moves of the state that apply: those into blocks that were not rolled back
+    var okBlocks = (0 until k).toSet
+    def partOf(state: DataFrame): DataFrame = state.select(col("node"),
+      coalesce(candIn(okBlocks), col("block")).cast("int").as("block"), col("weight"),
+      (col("it") + 1).as("it"))
 
     var it = 0
     var quiet = 0
     while (it < maxIter && quiet < 2) {
+      val part = partOf(state)
       import spark.implicits._
       val residualDf = broadcast(
         (0 until k).map(b => (b, math.max(0L, caps(b) - blockW(b)))).toDF("cand", "residual"))
 
-      val parity = pmod(xxhash64(col("node"), lit(seed)) + lit(it), lit(2))
+      val parity = pmod(xxhash64(col("node"), lit(seed)) + col("it"), lit(2))
       val active = part.filter(parity === 0)
 
       // gather: per (active node, adjacent block) summed edge weight (agg-then-join:
@@ -132,13 +135,14 @@ object DistRefiner {
         .groupBy(col("src"), col("nb"))
         .agg(sum(col("w")).as("rating"))
         .join(
-          active.select(col("node").as("src"), col("block").as("cur"), col("weight").as("nw")),
+          active.select(col("node").as("src"), col("block").as("cur"), col("weight").as("nw"),
+            col("it")),
           "src"
         )
 
       val perNode = ratings
         .withColumn("tb", xxhash64(col("nb"), lit(seed)))
-        .groupBy(col("src"), col("cur"), col("nw"))
+        .groupBy(col("src"), col("cur"), col("nw"), col("it")) // one `it` per superstep
         .agg(
           sum(when(col("nb") === col("cur"), col("rating")).otherwise(0L)).as("internalW"),
           max_by(
@@ -150,22 +154,20 @@ object DistRefiner {
           ).as("bestS")
         )
         .select(
-          col("src").as("node"), col("cur"), col("nw"),
+          col("src").as("node"), col("cur"), col("nw"), col("it"),
           col("bestS.nb").as("cand"),
           (col("bestS.rating") - col("internalW")).as("gain")
         )
         .filter(col("cand") =!= col("cur") && col("gain") > 0)
 
-      // staged behind a lazy local checkpoint: gainDf and accepted below both read
-      // it, and without the cut Spark plans the whole gather -> argmax subtree
-      // twice. The staging job below materializes it.
-      val candidates = st.local(perNode
+      // staged: gainDf and accepted below both read it
+      val (candidates, _) = st.memory(perNode
         .join(residualDf, "cand")
         .filter(col("nw") <= col("residual")))
 
       // O24 probabilistic acceptance: p = (gain/G_b) * (R_b/w) — expected admitted
       // weight per target <= residual; G_b folded in as an agg+join, coin is a seeded
-      // hash (deterministic, partition-independent)
+      // hash of (node, seed, it) with `it` an INT (deterministic, partition-independent)
       val gainDf = candidates.groupBy(col("cand")).agg(sum(col("gain")).as("G"))
       val accepted = candidates
         .join(gainDf, "cand")
@@ -175,53 +177,37 @@ object DistRefiner {
         )
         .withColumn(
           "coin",
-          pmod(xxhash64(col("node"), lit(seed), lit(it)), lit(1000000000L)).cast("double") / 1e9
+          pmod(xxhash64(col("node"), lit(seed), col("it")), lit(1000000000L)).cast("double") / 1e9
         )
         .filter(col("coin") < col("p"))
         .select(col("node"), col("cand"))
 
-      // ONE heavy job per superstep: stage (old block, tentative cand) behind a lazy
-      // local checkpoint; the k^2-row delta aggregate (the allreduce analog)
-      // materializes it, and the rollback is a lazy projection over the flat plan
-      val staged = st.local(part
+      // stage (old block, tentative cand); the staging job folds the k^2 move deltas
+      val tentativeState = part
         .join(accepted, Seq("node"), "left")
-        .select(col("node"), col("block"), col("weight"), col("cand")))
-      val deltas = staged.filter(col("cand").isNotNull)
-        .groupBy(col("block").as("cur"), col("cand")).agg(sum(col("weight")).as("mw"))
-        .collect()
-        .map(r => (r.getAs[Number]("cur").intValue(), r.getAs[Number]("cand").intValue(), r.getAs[Long]("mw")))
-      val inW = new Array[Long](k)
-      deltas.foreach { case (_, to, mw) => inW(to) += mw }
-      val okBlocks = (0 until k).filter(b => blockW(b) + inW(b) <= caps(b)).toSet
-
+        .select(col("node"), col("block"), col("weight"), col("cand"), col("it"))
+      val (staged, _, deltas) = st.memory(tentativeState, deltaFold(tentativeState, k))
+      val inW = deltas.inflow
       // apply with per-target-block rollback (violating TARGET blocks drop all their
       // moves this round) — a projection over the staged blocks, no extra write
-      val applyCand =
-        if (okBlocks.size == k) col("cand")
-        else when(col("cand").isin(okBlocks.toSeq.map(Int.box): _*), col("cand"))
-      part = staged.select(
-        col("node"),
-        coalesce(applyCand, col("block")).cast("int").as("block"),
-        col("weight")
-      )
+      okBlocks = (0 until k).filter(b => blockW(b) + inW(b) <= caps(b)).toSet
+      Seq(candidates, state).foreach(st.release)
+      state = staged
 
-      deltas.foreach { case (from, to, mw) =>
-        if (okBlocks(to)) { blockW(from) -= mw; blockW(to) += mw }
-      }
-      val movedW = deltas.collect { case (_, to, mw) if okBlocks(to) => mw }.sum
+      val movedW = deltas.apply(blockW, okBlocks)
       // two consecutive quiet rounds = both parity halves PROPOSED nothing —
       // converged (the alternating-halves analog of "no moves"). Quiet counts
       // proposals (deltas), not applied weight: two rounds whose moves were all
       // rolled back (residuals ~0 right after balancing) are still making proposals
       // later rounds could admit, so they must not terminate the loop early.
-      quiet = if (deltas.isEmpty) quiet + 1 else 0
+      quiet = if (deltas.movers == 0L) quiet + 1 else 0
       Log.info(s"lpRefine iter $it: moves=$movedW rolledBackBlocks=${k - okBlocks.size}")
       if (runId.nonEmpty)
         graft.util.IterMetricsCollector.add(runId, level, it, movedW)
       it += 1
     }
     lastBlockW.foreach(out => System.arraycopy(blockW, 0, out, 0, k))
-    part
+    partOf(state).select(col("node"), col("block"), col("weight"))
   }
 
   /** JET refiner (SURVEY O20, reference `refinement/jet/jet_refiner.cc` — a
@@ -294,9 +280,6 @@ object DistRefiner {
     val e = ge.e // precondition: hash-partitioned by the gather key + cached
     var part = part0.select(col("node"), col("block"), col("weight"))
     val blockW: Array[Long] = blockW0.getOrElse(Metrics.blockWeightsW(part, k))
-    // staged tables are lazy local checkpoints instead of parquet checkpoints (r06:
-    // halves the per-round job count — the delta collect materializes the flat
-    // LogicalRDD)
 
     var best: DataFrame = null
     var bestCut = Long.MaxValue
@@ -325,8 +308,7 @@ object DistRefiner {
       val c = 0.75 * math.max(0, annealSpan - 1 - r).toDouble / math.max(1, annealSpan - 1)
 
       // phase 1: ONE gather pass -> per-node table with internal/external weight and
-      // the best external block; checkpointed so the cut aggregate and the tentative
-      // filter below both read the (n-row) staged blocks, not the full plan twice.
+      // the best external block, staged below.
       // Plan shape: aggregate FIRST (ratings keyed by (src, nb) need no per-src
       // state), join the n-row part table after — the m-row stream shuffles once
       // (map-side partial agg), never a second time for the src-side join.
@@ -337,14 +319,10 @@ object DistRefiner {
         .join(
           part.select(col("node").as("src"), col("block").as("cur"), col("weight").as("nw")),
           "src")
-      // r06: the per-round parquet checkpoint became a lazy localCheckpoint — same
-      // flat-plan truncation (the cut aggregate and the tentative filter below read
-      // the staged n-row blocks, not the full gather plan twice), no storage
-      // round-trip per round. The entering cut comes from the MATERIALIZING
-      // aggregate itself (still one job; an Observation would not survive the
-      // checkpoint boundary — metrics attached below a lazy localCheckpoint are not
-      // delivered when a later query materializes the RDD).
-      val perNode = st.local(ratings
+      // staged: the tentative filter and the afterwards-filter read the n-row
+      // blocks, not the full gather plan twice. The cut of the partition ENTERING
+      // this round is folded by the staging job (sum of external weight / 2).
+      val perNodePlan = ratings
         .withColumn("tb", xxhash64(col("nb"), lit(seed + r)))
         .groupBy(col("src"), col("cur"), col("nw"))
         .agg(
@@ -363,12 +341,9 @@ object DistRefiner {
           col("bestS.nb").as("cand"),
           (col("bestS.rating") - col("internalW")).as("gain"),
           col("internalW"), col("extW")
-        ))
-      // the cut of the partition ENTERING this round, from the one materializing
-      // aggregate (the job the parquet write used to be)
-      val cutNow = perNode
-        .agg(coalesce(sum(col("extW")), lit(0L)).as("extSum"))
-        .first().getLong(0) / 2
+        )
+      val (perNode, _, extSum) = st.memory(perNodePlan, sumFold(perNodePlan, "extW"))
+      val cutNow = extSum / 2
       val feasibleNow = Metrics.isBalanced(blockW, caps)
       consider(part, cutNow, feasibleNow)
       Log.info(s"jet round $r: c=$c enteringCut=$cutNow feasible=$feasibleNow")
@@ -424,38 +399,30 @@ object DistRefiner {
         (0 until k).map(b => (b, math.max(0L, caps(b) - blockW(b)) + slackArr(b)))
           .toDF("cand", "allow"))
       // staged like lpRefineCaps' candidates: the admission reads it twice
-      val positives = st.local(recomputed.filter(col("toCand") - col("toCur") > 0))
-      val accepted = admitProportional(positives, allowDf, seed + r)
+      val (positives, _) = st.memory(
+        recomputed.filter(col("toCand") - col("toCur") > 0).join(allowDf, "cand"))
+      val accepted = admitProportional(positives, lit(seed + r))
 
-      // phase 3: ONE staged lazy local checkpoint (old block + accepted cand); the
-      // k^2-row deltas materialize it, the applied partition is a projection of it
-      val staged = st.local(part
+      // phase 3: stage (old block + accepted cand); the staging job folds the k^2
+      // move deltas, the applied partition is a projection of it
+      val tentativeState = part
         .join(accepted, Seq("node"), "left")
-        .select(col("node"), col("block"), col("weight"), col("cand")))
-      val deltas = staged.filter(col("cand").isNotNull)
-        .groupBy(col("block").as("cur"), col("cand")).agg(sum(col("weight")).as("mw"))
-        .collect()
-        .map(row => (row.getAs[Number]("cur").intValue(), row.getAs[Number]("cand").intValue(), row.getAs[Long]("mw")))
+        .select(col("node"), col("block"), col("weight"), col("cand"))
+      val (staged, _, deltas) = st.memory(tentativeState, deltaFold(tentativeState, k))
       // per-target rollback (variance backstop of the proportional coin): a target
       // whose GROSS inflow exceeds its allowance (residual + slack) drops its moves;
       // the bounded <= slack overload that remains is what the one-round rebalance
       // below repairs — JET's apply-then-repair semantics (a net-flow rollback was
       // tried and cascades: with every block near cap it cancels the bulk moves
       // JET exists to make)
-      val inW = new Array[Long](k)
-      deltas.foreach { case (_, to, mw) => inW(to) += mw }
+      val inW = deltas.inflow
       val okBlocks = (0 until k).filter(b => blockW(b) + inW(b) <= caps(b) + slackArr(b)).toSet
-      val applyCand =
-        if (okBlocks.size == k) col("cand")
-        else when(col("cand").isin(okBlocks.toSeq.map(Int.box): _*), col("cand"))
       part = staged.select(
         col("node"),
-        coalesce(applyCand, col("block")).cast("int").as("block"),
+        coalesce(candIn(okBlocks), col("block")).cast("int").as("block"),
         col("weight")
       )
-      deltas.foreach { case (from, to, mw) =>
-        if (okBlocks(to)) { blockW(from) -= mw; blockW(to) += mw }
-      }
+      deltas.apply(blockW, okBlocks)
       if (okBlocks.size < k)
         Log.info(s"jet round $r: rolled back in-moves of ${k - okBlocks.size} blocks")
 
@@ -483,26 +450,93 @@ object DistRefiner {
     JetResult(best, bestCut, bestBlockW, bestFeasible, improved)
   }
 
+  /** `cand` when it is one of the `ok` blocks, else null. The set rides as an array
+    * literal, which generated code reads by reference, so every set plans the same
+    * text (an IN list would inline its values and compile anew per set).
+    */
+  private def candIn(ok: Set[Int]): Column =
+    when(array_contains(lit(ok.toArray.sorted), col("cand")), col("cand"))
+
+  /** Weight moved per (from, to) block pair by the tentative moves of a staged
+    * (node, block, weight, cand) table, and the number of movers: the k^2-row
+    * allreduce analog, folded by the table's staging job.
+    */
+  private[partition] final class MoveDeltas(k: Int) extends Serializable {
+    val weight = new Array[Long](k * k)
+    var movers = 0L
+
+    /** Gross weight moving into each block. */
+    def inflow: Array[Long] = {
+      val in = new Array[Long](k)
+      var i = 0
+      while (i < k * k) { in(i % k) += weight(i); i += 1 }
+      in
+    }
+
+    /** Apply the moves into the `ok` blocks to `blockW`; returns the weight moved. */
+    def apply(blockW: Array[Long], ok: Set[Int]): Long = {
+      var moved = 0L
+      var i = 0
+      while (i < k * k) {
+        val (from, to) = (i / k, i % k)
+        if (weight(i) != 0L && ok(to)) {
+          blockW(from) -= weight(i); blockW(to) += weight(i); moved += weight(i)
+        }
+        i += 1
+      }
+      moved
+    }
+  }
+
+  /** Sum of a column over the staged rows (nulls count 0). */
+  private def sumFold(df: DataFrame, name: String): Stage.Fold[Long] = {
+    val f = Stage.field(df, name)
+    new Stage.Fold[Long] {
+      def zero: Long = 0L
+      def add(acc: Long, row: InternalRow): Long = if (f.isNull(row)) acc else acc + f(row)
+      def merge(a: Long, b: Long): Long = a + b
+    }
+  }
+
+  private def deltaFold(df: DataFrame, k: Int): Stage.Fold[MoveDeltas] = {
+    val (block, cand, weight) =
+      (Stage.field(df, "block"), Stage.field(df, "cand"), Stage.field(df, "weight"))
+    new Stage.Fold[MoveDeltas] {
+      def zero: MoveDeltas = new MoveDeltas(k)
+      def add(d: MoveDeltas, row: InternalRow): MoveDeltas = {
+        if (!cand.isNull(row)) {
+          d.weight(block(row).toInt * k + cand(row).toInt) += weight(row)
+          d.movers += 1L
+        }
+        d
+      }
+      def merge(a: MoveDeltas, b: MoveDeltas): MoveDeltas = {
+        var i = 0
+        while (i < k * k) { a.weight(i) += b.weight(i); i += 1 }
+        a.movers += b.movers
+        a
+      }
+    }
+  }
+
   /** Proportional move admission (the JET capacity stage): given positive movers
-    * (src, cand, nw, ...) and per-target allowances (cand, allow), admit each mover
-    * with p = allow / demand(cand) on a seeded coin. Shape: one hash aggregation +
-    * two joins (one broadcast) — NO per-target sort window, so a target with 10^8
+    * (src, cand, nw, allow, ...), each carrying its target's allowance, admit each
+    * mover with p = allow / demand(cand) on a coin seeded by `seed`. Shape: one hash
+    * aggregation + one join — NO per-target sort window, so a target with 10^8
     * movers costs the same per row as one with 10 (PlanAudit asserts the no-window,
     * no-sort property).
     */
-  private[graft] def admitProportional(
-      positives: DataFrame, allowDf: DataFrame, seed: Long): DataFrame = {
+  private[graft] def admitProportional(positives: DataFrame, seed: Column): DataFrame = {
     val demand = positives.groupBy(col("cand")).agg(sum(col("nw")).as("D"))
     positives
       .join(demand, "cand")
-      .join(allowDf, "cand")
       .withColumn("p", col("allow").cast("double") / col("D").cast("double"))
       .withColumn(
         "coin",
-        pmod(xxhash64(col("src"), lit(seed), lit(77L)), lit(1000000000L)).cast("double") / 1e9)
+        pmod(xxhash64(col("src"), seed, lit(77L)), lit(1000000000L)).cast("double") / 1e9)
       .filter(col("coin") < col("p"))
-      // (D, allow) ride along so callers can OBSERVE contention on their staging
-      // write (D > allow somewhere = a rollback check is needed); explicit selects
+      // (D, allow) ride along so callers can fold contention over their staging job
+      // (D > allow somewhere = a rollback check is needed); explicit selects
       // downstream drop them
       .select(col("src").as("node"), col("cand"), col("D"), col("allow"))
   }
@@ -926,7 +960,7 @@ object DistRefiner {
           // join + projection. Safe to leave lazy — each round's plan references the
           // previous state exactly ONCE (the apply chain is linear, unlike the
           // refine/JET staging, which embeds its predecessor 3x and needs the
-          // localCheckpoint truncation), and rounds are bounded by maxRounds.
+          // staging's plan truncation), and rounds are bounded by maxRounds.
           val movesDf = moves.toSeq.toDF("node", "cand")
           part = part
             .join(broadcast(movesDf), Seq("node"), "left")

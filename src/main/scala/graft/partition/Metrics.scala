@@ -2,6 +2,8 @@ package graft.partition
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.catalyst.InternalRow
+import graft.util.Stage
 
 /** Partition metrics M1-M6 (reference `/root/reference/kaminpar-shm/metrics.cc` and
   * the distributed variants `kaminpar-dist/metrics.cc:19-60`).
@@ -48,6 +50,25 @@ object Metrics {
     val w = new Array[Long](k)
     rows.foreach(r => w(r.getAs[Number]("block").intValue()) = r.getAs[Long]("weight"))
     w
+  }
+
+  /** [[blockWeightsW]] of a (node, block, weight) table, folded by the job that
+    * stages it.
+    */
+  def blockWeightFold(partW: DataFrame, k: Int): Stage.Fold[Array[Long]] = {
+    val (block, weight) = (Stage.field(partW, "block"), Stage.field(partW, "weight"))
+    new Stage.Fold[Array[Long]] {
+      def zero: Array[Long] = new Array[Long](k)
+      def add(w: Array[Long], row: InternalRow): Array[Long] = {
+        w(block(row).toInt) += weight(row)
+        w
+      }
+      def merge(a: Array[Long], b: Array[Long]): Array[Long] = {
+        var i = 0
+        while (i < k) { a(i) += b(i); i += 1 }
+        a
+      }
+    }
   }
 
   /** M2: max_b weight(b) / ceil(W/k) - 1. */

@@ -2,6 +2,7 @@ package graft.partition
 
 import graft.model.{CsrGraph, PartCtx}
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.functions._
 import graft.util.Stage
@@ -126,14 +127,12 @@ final class Partitioner private (
     val e =
       if (edges.storageLevel.useDisk) eIn
       else st.memory(eIn)._1
-    val nodeW = st.memory(
-      nodeWeights.getOrElse(
-        e.select(col("src").as("node")).distinct().withColumn("weight", lit(1L))
-      ))._1
-
-    val stats = nodeW.agg(sum(col("weight")), max(col("weight")), count(lit(1))).first()
-    val ctx = PartCtx(k, epsilon, stats.getLong(0), stats.getLong(1), minEpsilon)
-    val n = stats.getLong(2)
+    // the staging job also folds the total and the largest node weight
+    val nodeWPlan = nodeWeights.getOrElse(
+      e.select(col("src").as("node")).distinct().withColumn("weight", lit(1L)))
+    val (nodeW, n, (totalW, maxW)) = st.memory(nodeWPlan, Partitioner.weightStats(nodeWPlan))
+    require(n > 0L, "the graph has no nodes")
+    val ctx = PartCtx(k, epsilon, totalW, maxW, minEpsilon)
 
     // scale-aware driver handoff (round-2 fix): an explicit threshold wins; otherwise
     // clamp(n/4, 512, 100k) so any graph big enough to benefit runs >=1 distributed
@@ -299,17 +298,14 @@ final class Partitioner private (
       val fe = ge.e
       // the level's partition rides through the whole chain as ONE weighted table
       // (node, block, weight): the nodeW join happens here once, and every stage
-      // below both skips its entry join+checkpoint and passes its exact
-      // driver-tracked block weights to the next (no n-row re-aggregations)
-      var partW = st.memory(
-        projected.join(fineNodeW, "node")
-          .select(col("node"), col("block"), col("weight")))._1
+      // below passes its exact driver-tracked block weights to the next (no n-row
+      // re-aggregations)
       val refW = new Array[Long](k)
-      // each refiner stages its supersteps in a child scope; its result is staged
-      // here, after which the child's blocks are released
-      partW = timed("refine") { st.scope(in => st.memory(DistRefiner.lpRefineCaps(
-        in, spark, ge, partW, k, caps,
-        maxIter = refineIters, seed = seed + levelNo, runId = runId, level = levelNo,
+      // each refiner stages its supersteps (its entry table too) in a child scope;
+      // its result is staged here, after which the child's blocks are released
+      var partW = timed("refine") { st.scope(in => st.memory(DistRefiner.lpRefineCaps(
+        in, spark, ge,
+        projected.join(fineNodeW, "node").select(col("node"), col("block"), col("weight")), k, caps, maxIter = refineIters, seed = seed + levelNo, runId = runId, level = levelNo,
         lastBlockW = Some(refW)))._1) }
       val (balanced, balW) = timed("balance") { DistRefiner.balanceTrackedCaps(
         spark, fe, partW, k, caps, seed = seed + levelNo,
@@ -340,7 +336,7 @@ final class Partitioner private (
           in, spark, ge, jet.part, k, caps,
           maxIter = preset.polishIters, seed = seed + 2000 + levelNo, runId = runId,
           level = levelNo,
-          lastBlockW = Some(polishW), blockW0 = Some(jet.blockWeights.clone())))._1) }
+          lastBlockW = Some(polishW)))._1) }
       } else {
         partW = jet.part
         System.arraycopy(jet.blockWeights, 0, polishW, 0, k)
@@ -514,6 +510,20 @@ final class Partitioner private (
 }
 
 object Partitioner {
+
+  /** (total, largest) node weight of a (node, weight) table, folded by the job that
+    * stages it.
+    */
+  private def weightStats(nodeW: DataFrame): Stage.Fold[(Long, Long)] = {
+    val weight = Stage.field(nodeW, "weight")
+    new Stage.Fold[(Long, Long)] {
+      def zero: (Long, Long) = (0L, Long.MinValue)
+      def add(acc: (Long, Long), row: InternalRow): (Long, Long) =
+        (acc._1 + weight(row), math.max(acc._2, weight(row)))
+      def merge(a: (Long, Long), b: (Long, Long)): (Long, Long) =
+        (a._1 + b._1, math.max(a._2, b._2))
+    }
+  }
 
   private[partition] def ceilLog2(x: Long): Int =
     if (x <= 1) 0 else 64 - java.lang.Long.numberOfLeadingZeros(x - 1)

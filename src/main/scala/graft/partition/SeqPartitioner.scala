@@ -99,14 +99,15 @@ object SeqPartitioner {
     */
   def partitionKway(
       g: CsrGraph, k: Int, eps: Double, seed: Long,
-      boundsOverride: Option[(Long, Long)] = None
+      boundsOverride: Option[(Long, Long)] = None,
+      fruitless: FruitlessPairs = new FruitlessPairs
   ): Result = {
     require(k >= 1)
     val part = new Array[Int](g.n)
     if (k == 1) return Result(part, 0L)
     val (perfect, lmax) = bounds(g, k, eps, boundsOverride)
     val rand = new Random(seed)
-    extendAndRefine(g, k, eps, seed, perfect, lmax, rand, part, Int.MaxValue)
+    extendAndRefine(g, k, eps, seed, perfect, lmax, rand, part, Int.MaxValue, fruitless)
     Result(part, cut(g, part))
   }
 
@@ -123,7 +124,8 @@ object SeqPartitioner {
     val part = new Array[Int](g.n)
     val (perfect, lmax) = bounds(g, k, eps, boundsOverride)
     val rand = new Random(seed)
-    val groups = extendAndRefine(g, k, eps, seed, perfect, lmax, rand, part, maxDoublings)
+    val groups = extendAndRefine(g, k, eps, seed, perfect, lmax, rand, part, maxDoublings,
+      new FruitlessPairs)
     (part, groups)
   }
 
@@ -136,7 +138,7 @@ object SeqPartitioner {
   private def extendAndRefine(
       g: CsrGraph, k: Int, eps: Double, seed: Long,
       perfect: Long, lmax: Long, rand: Random, part: Array[Int],
-      maxDoublings: Int
+      maxDoublings: Int, fruitless: FruitlessPairs
   ): List[(Int, Int)] = {
     // groups: (blockId = final-range start, #final blocks in the group)
     // Balance anneals across the doublings: intermediate levels get a RELAXED cap
@@ -228,7 +230,7 @@ object SeqPartitioner {
     val pairSweeps = if (g.n > 8192) 4 else 8
     while (curCut < lastCut && polishIters < maxPolish) {
       lastCut = curCut
-      pairwiseFmRefine(g, part, k, lmax, maxSweeps = pairSweeps)
+      pairwiseFmRefine(g, part, k, lmax, maxSweeps = pairSweeps, fruitless)
       kwayFmRefine(g, part, k, capsFinal, slack)
       kwayLpRefine(g, part, k, capsFinal, rand, rounds = 2)
       curCut = cut(g, part)
@@ -238,7 +240,7 @@ object SeqPartitioner {
     // when LP eviction finds no adjacent room), then one more pairwise polish
     if (blockWeights(g, part, k).zip(capsFinal).exists { case (w0, c) => w0 > c }) {
       forceFeasible(g, part, k, capsFinal)
-      pairwiseFmRefine(g, part, k, lmax)
+      pairwiseFmRefine(g, part, k, lmax, fruitless = fruitless)
     }
     // V-cycle count scales down with size: on large coarse handoffs (inside the deep
     // pipeline) the distributed JET/LP levels above recover the quality, so one cycle
@@ -268,7 +270,8 @@ object SeqPartitioner {
     * block-restricted basis cannot express.
     */
   def ilsRefine(
-      g: CsrGraph, part: Array[Int], k: Int, lmax: Long, seed: Long, kicks: Int): Unit = {
+      g: CsrGraph, part: Array[Int], k: Int, lmax: Long, seed: Long, kicks: Int,
+      fruitless: FruitlessPairs = new FruitlessPairs): Unit = {
     if (kicks <= 0 || k < 2) return
     val rand = new Random(seed ^ 0x11571c5aL)
     val capsFinal = Array.fill(k)(lmax)
@@ -310,7 +313,7 @@ object SeqPartitioner {
       }
       kwayFmRefine(g, cand, k, capsFinal, slack)
       kwayLpRefine(g, cand, k, capsFinal, rand, rounds = 2)
-      pairwiseFmRefine(g, cand, k, lmax, maxSweeps = 4)
+      pairwiseFmRefine(g, cand, k, lmax, maxSweeps = 4, fruitless)
       if (blockWeights(g, cand, k).max > lmax) forceFeasible(g, cand, k, capsFinal)
       // refinement on a kicked state can strand empty blocks — restore the full-k
       // contract before scoring (the incumbent entered with all k populated)
@@ -423,19 +426,14 @@ object SeqPartitioner {
     * refining the pair-induced subgraph with plain 2-way FM is exact for the global
     * objective — and 2-way FM's tentative-move rollback performs the balanced SWAPS
     * that per-move k-way caps freeze at tight eps. Sweeps pairs by descending
-    * boundary weight until a sweep finds no improvement.
+    * boundary weight until a sweep finds no improvement, skipping every pair that
+    * `fruitless` has already seen fail on identical membership (on dense coarse
+    * handoffs the large majority of the O(k^2 * sweeps) FM+flow runs). The memo lives
+    * for this call unless the caller passes one that spans its own repeated polish.
     */
-  def pairwiseFmRefine(g: CsrGraph, part: Array[Int], k: Int, lmax: Long, maxSweeps: Int = 6): Unit = {
-    // Fruitless-pair memoization (optimization r06, result-identical): fmRefine and
-    // FlowRefine are DETERMINISTIC functions of the pair-induced subgraph, which is
-    // fully determined by the membership sets of blocks a and b. A pair that found
-    // no improvement is re-attempted only after one of its two blocks changed
-    // membership (per-block version counters, bumped on every applied pair move) —
-    // re-running it on identical membership provably re-derives the identical
-    // no-improvement, so skipping cannot change the final partition. On dense coarse
-    // handoffs this removes the large majority of the O(k^2 * sweeps) FM+flow runs.
-    val blockVer = new Array[Long](k)
-    val fruitlessAt = new mutable.LongMap[(Long, Long)](64)
+  def pairwiseFmRefine(
+      g: CsrGraph, part: Array[Int], k: Int, lmax: Long, maxSweeps: Int = 6,
+      fruitless: FruitlessPairs = new FruitlessPairs): Unit = {
     // pair extraction works from per-block member lists (ascending node ids), not a
     // whole-graph scan (optimization r06, result-identical): extracting pair (a, b)
     // costs O(|a| + |b| + incident edges) instead of O(n + m) — an ~k/2-fold cut of
@@ -444,6 +442,11 @@ object SeqPartitioner {
     val remap = new Array[Int](g.n)
     java.util.Arrays.fill(remap, -1)
     val mem = new Array[Array[Int]](k)
+    val memHash = new Array[Int](k)
+    def setMembers(b: Int, members: Array[Int]): Unit = {
+      mem(b) = members
+      memHash(b) = java.util.Arrays.hashCode(members)
+    }
     var sweep = 0
     var improvedSweep = true
     while (sweep < maxSweeps && improvedSweep) {
@@ -467,15 +470,13 @@ object SeqPartitioner {
         u += 1
       }
       var bi = 0
-      while (bi < k) { mem(bi) = memB(bi).result(); bi += 1 }
+      while (bi < k) { setMembers(bi, memB(bi).result()); bi += 1 }
       val pairs = pairW.toSeq.sortBy { case (key, w) => (-w, key) }
       for ((key, _) <- pairs) {
         val a = (key >>> 32).toInt
         val b = (key & 0xffffffffL).toInt
-        val memoFresh = fruitlessAt.get(key).exists {
-          case (va, vb) => va == blockVer(a) && vb == blockVer(b)
-        }
-        if (!memoFresh) {
+        val pairKey = new FruitlessPairs.Key(g, lmax, mem(a), mem(b), memHash(a), memHash(b))
+        if (!fruitless.contains(pairKey)) {
           // induced subgraph over blocks {a, b} from the member lists — identical
           // (sub, ids) to a whole-graph inducedSubgraph scan: ids ascend (merge of
           // two ascending disjoint lists) and neighbors keep adjacency order
@@ -501,16 +502,47 @@ object SeqPartitioner {
                 else { part(ids(j)) = a; na += ids(j) }
                 j += 1
               }
-              mem(a) = na.result()
-              mem(b) = nb.result()
-              blockVer(a) += 1
-              blockVer(b) += 1
+              setMembers(a, na.result())
+              setMembers(b, nb.result())
             }
           }
-          if (!improvedPair) fruitlessAt(key) = (blockVer(a), blockVer(b))
+          if (!improvedPair) fruitless.add(pairKey)
         }
       }
       sweep += 1
+    }
+  }
+
+  /** Block pairs whose pairwise 2-way FM + flow step found nothing, keyed by their
+    * exact membership (looked up by hash, confirmed by full array equality). Exact:
+    * [[fmRefine]] and `FlowRefine.refineRegion` are deterministic functions of the
+    * pair-induced subgraph — fixed by the graph and the two member arrays — and
+    * `lmax`, and a fruitless pair leaves `part` untouched, so a pair with recorded
+    * membership would re-derive the same nothing. One memo serves one driver call on
+    * one graph (a [[partitionKway]] attempt, an [[ilsRefine]] call, a V-cycle
+    * polish) and one thread; the graph and `lmax` are part of the key.
+    */
+  private[partition] class FruitlessPairs {
+    private val seen = mutable.HashSet.empty[FruitlessPairs.Key]
+    def contains(key: FruitlessPairs.Key): Boolean = seen.contains(key)
+    def add(key: FruitlessPairs.Key): Unit = seen += key
+  }
+
+  private[partition] object FruitlessPairs {
+    /** Pair membership: side 0 holds `a`, side 1 holds `b`. The arrays are not copied;
+      * their owners never mutate them.
+      */
+    final class Key(
+        val g: CsrGraph, val lmax: Long, val a: Array[Int], val b: Array[Int],
+        hashA: Int, hashB: Int) {
+      override val hashCode: Int = java.util.Arrays.hashCode(
+        Array(System.identityHashCode(g), java.lang.Long.hashCode(lmax), hashA, hashB))
+      override def equals(o: Any): Boolean = o match {
+        case that: Key =>
+          (that.g eq g) && that.lmax == lmax && that.hashCode == hashCode &&
+            java.util.Arrays.equals(that.a, a) && java.util.Arrays.equals(that.b, b)
+        case _ => false
+      }
     }
   }
 

@@ -186,9 +186,10 @@ object VCycle {
     var lastCut = Long.MaxValue
     var curCut = SeqPartitioner.cut(csr, refined)
     var polishIters = 0
+    val fruitless = new SeqPartitioner.FruitlessPairs
     while (curCut < lastCut && polishIters < 4) {
       lastCut = curCut
-      SeqPartitioner.pairwiseFmRefine(csr, refined, k, lmax, maxSweeps = 4)
+      SeqPartitioner.pairwiseFmRefine(csr, refined, k, lmax, maxSweeps = 4, fruitless)
       SeqPartitioner.kwayFmRefine(csr, refined, k, capsFinal, slack)
       SeqPartitioner.kwayLpRefine(csr, refined, k, capsFinal, rand, rounds = 2)
       curCut = SeqPartitioner.cut(csr, refined)
@@ -251,13 +252,10 @@ object VCycle {
               .select(col("node"), col("block")))._1
           val ge = Gather.plain(vc.cache(
             fe0.select(col("src"), col("dst"), col("w")).repartition(col("dst"))))
-          var pw = vc.memory(
-            proj.join(fw, "node").select(col("node"), col("block"), col("weight")))._1
           val refW = new Array[Long](k)
-          pw = vc.scope(in => vc.memory(DistRefiner.lpRefineCaps(
-            in, spark, ge, pw, k, capsFinal, maxIter = 3,
-            seed = seed + 8000L + li, lastBlockW = Some(refW),
-            blockW0 = Some(blockW.clone())))._1)
+          val pw = vc.scope(in => vc.memory(DistRefiner.lpRefineCaps(
+            in, spark, ge, proj.join(fw, "node").select(col("node"), col("block"), col("weight")),
+            k, capsFinal, maxIter = 3, seed = seed + 8000L + li, lastBlockW = Some(refW)))._1)
           val (balanced, balW) = DistRefiner.balanceTrackedCaps(
             spark, ge.e, pw, k, capsFinal, seed = seed + 8100L + li,
             blockW0 = Some(refW.clone()))

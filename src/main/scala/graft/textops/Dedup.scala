@@ -113,12 +113,12 @@ object Dedup {
       docs: DataFrame, pairs0: DataFrame, w: Int = 3, seed: Long = 42L): DataFrame = Stage.scope { st =>
     // the pair table is referenced four times below (member extraction x2, the two
     // set-attach joins) and is typically the OUTPUT of the full LSH candidate
-    // pipeline — stage it once behind a LAZY local checkpoint so that pipeline
-    // executes once, not four times (r06, guide §5); likewise the shingle sets feed
-    // both attach joins. The result is written durably, so both are released when
-    // the call returns. No distinct() on members: the left_semi join below dedups
+    // pipeline — stage it once in memory so that pipeline executes once, not four
+    // times (r06, guide §5); likewise the shingle sets feed both attach joins. The
+    // result is written durably, so both are released when the call returns. No
+    // distinct() on members: the left_semi join below dedups
     // for free (one exchange + agg removed, guide §2.4).
-    val pairs = st.local(pairs0)
+    val (pairs, _) = st.memory(pairs0)
     val members = pairs.select(col("a").as("doc_id"))
       .unionAll(pairs.select(col("b").as("doc_id")))
     // The shingle set is a per-document ARRAY at parse time — the explode/groupBy
@@ -129,7 +129,7 @@ object Dedup {
     // three joins; byte volume per pair is the same, the set travels once per pair
     // membership in both shapes). Result-identical: sizes and intersections are the
     // same integers (sets are array_distinct'd, never null, never empty).
-    val sets = st.local(docs.join(members, Seq("doc_id"), "left_semi")
+    val (sets, _) = st.memory(docs.join(members, Seq("doc_id"), "left_semi")
       .select(col("doc_id"), shingleSet(col("text"), w, seed).as("sh")))
     st.durable(pairs
       .join(sets.select(col("doc_id").as("a"), col("sh").as("shA")), "a")

@@ -126,10 +126,9 @@ object PlanAudit {
       import org.apache.spark.sql.execution.window.WindowExec
       import org.apache.spark.sql.execution.SortExec
       import spark.implicits._
-      val movers = Seq((1L, 0, 1L), (2L, 0, 1L), (3L, 1, 1L))
-        .toDF("src", "cand", "nw")
-      val allow = Seq((0, 5L), (1, 2L)).toDF("cand", "allow")
-      val plan = graft.partition.DistRefiner.admitProportional(movers, allow, 7L)
+      val movers = Seq((1L, 0, 1L, 5L), (2L, 0, 1L, 5L), (3L, 1, 1L, 2L))
+        .toDF("src", "cand", "nw", "allow")
+      val plan = graft.partition.DistRefiner.admitProportional(movers, lit(7L))
         .queryExecution.executedPlan
       val wins = plan.collectWithSubqueries { case w: WindowExec => w }
       val sorts = plan.collectWithSubqueries { case s: SortExec => s }
@@ -147,10 +146,11 @@ object PlanAudit {
       import org.apache.spark.sql.execution.SortExec
       import spark.implicits._
       val staged = Seq(
-        (1L, 10L, 1L, Option(20L)), (2L, 20L, 1L, Option(10L)), (3L, 10L, 1L, Option.empty[Long]))
-        .toDF("node", "label", "weight", "cand")
-      val capacity = Seq((10L, 5L), (20L, 0L)).toDF("cand", "allow")
-      val plan = graft.partition.DistCoarsener.commitWithRollback(staged, capacity)
+        (1L, 10L, 1L, Option(20L), Option(1L), Option(0L), 0),
+        (2L, 20L, 1L, Option(10L), Option(1L), Option(5L), 0),
+        (3L, 10L, 1L, Option.empty[Long], Option.empty[Long], Option.empty[Long], 0))
+        .toDF("node", "label", "weight", "cand", "D", "allow", "it")
+      val plan = graft.partition.DistCoarsener.commitWithRollback(staged)
         .queryExecution.executedPlan
       val wins = plan.collectWithSubqueries { case w: WindowExec => w }
       val sorts = plan.collectWithSubqueries { case s: SortExec => s }

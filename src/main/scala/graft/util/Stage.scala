@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, StagingShim}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.UnsafeRow
 import org.apache.spark.sql.execution.LogicalRDD
+import org.apache.spark.sql.types.{IntegerType, LongType}
 import org.apache.spark.storage.StorageLevel
 import java.nio.file.Files
 import java.util.concurrent.atomic.AtomicInteger
@@ -12,9 +13,9 @@ import scala.collection.mutable
 /** The one way the engine cuts a plan and frees what it staged: a staging scope.
   *
   * `Stage.scope { st => … }` opens a scope; inside it
-  *  - [[local]] is a lazy local checkpoint: the first job that reads it fills its blocks;
   *  - [[memory]] materializes a table now, in one job, as a flat leaf with fresh
-  *    statistics, and returns its row count;
+  *    statistics, and returns its row count — and, given a [[Stage.Fold]], a value
+  *    folded over the staged rows by that same job;
   *  - [[durable]] writes parquet and reads it back — the only table that outlives the
   *    scope;
   *  - [[cache]] persists a table for the scope (a table some caller already cached is
@@ -25,48 +26,56 @@ import scala.collection.mutable
   * registered with it, so a frame that reads a scope's blocks must not leave it. A
   * scope may be used from several threads (e.g. the pool of [[Par.awaitAll]]).
   *
-  * Why the statistics must be fresh: a local checkpoint keeps its ORIGIN plan's
-  * statistics. In an iterative loop each round's are a product over the previous
-  * round's, so the sizeInBytes BigInt grows exponentially in digit count and the
-  * optimizer's statistics walks (join selection, runtime filters) slow from
-  * microseconds to minutes after ~15 stages. [[memory]] rebuilds the leaf with the
-  * bytes it stored; a [[durable]] table gets its file sizes. A [[local]] is for
-  * short chains only (one superstep's staging).
+  * Why staging is eager and the statistics fresh: a local checkpoint keeps its ORIGIN
+  * plan's statistics. In an iterative loop each round's are a product over the
+  * previous round's, so the sizeInBytes BigInt grows exponentially in digit count and
+  * the optimizer's statistics walks slow from microseconds to minutes after ~15
+  * stages. Long before that, the inflated estimates change the plans: Catalyst
+  * injects runtime bloom filters (1 MiB each, shipped in every task binary) into joins
+  * whose sides it believes huge, and AQE shuffles join sides and then re-plans them as
+  * broadcasts once it sees their real size. [[memory]] rebuilds the leaf with the bytes
+  * it stored, so a superstep's next query is planned from true sizes; a [[durable]]
+  * table gets its file sizes. Staging eagerly also means a superstep's counters (moves,
+  * deltas, contention) come from the staging job itself through a [[Stage.Fold]], not
+  * from one more aggregate over the staged table.
   */
 final class Stage private () {
   private val owned = mutable.ArrayBuffer.empty[(DataFrame, () => Unit)]
   private var open = true
 
-  /** Lazy local checkpoint of `df`, owned by this scope. */
-  def local(df: DataFrame): DataFrame = {
-    val staged = df.localCheckpoint(false)
-    val rdd = Stage.leafRdd(staged)
-    own(staged, () => StagingShim.release(rdd))
+  /** Stage `df` in memory: (flat frame with fresh statistics, row count). */
+  def memory(df: DataFrame): (DataFrame, Long) = {
+    val (staged, rows, _) = memory(df, Stage.NoFold)
+    (staged, rows)
   }
 
-  /** Stage `df` in memory: (flat frame with fresh statistics, row count). One job:
-    * computing each partition caches it (the checkpoint's storage level) and counts
-    * its rows and stored bytes on the way.
+  /** Stage `df` in memory: (flat frame with fresh statistics, row count, `fold`'s
+    * value over the rows). One job: computing each partition caches it (the
+    * checkpoint's storage level) and counts its rows and stored bytes and folds them
+    * on the way; the driver merges the partitions' folds.
     */
-  def memory(df: DataFrame): (DataFrame, Long) = {
+  def memory[A](df: DataFrame, fold: Stage.Fold[A]): (DataFrame, Long, A) = {
     val checkpointed = df.localCheckpoint(false)
     val rdd = Stage.leafRdd(checkpointed)
     val otherRowBytes = df.schema.defaultSize.toLong
     val perPartition = df.sparkSession.sparkContext.runJob(rdd, (rows: Iterator[InternalRow]) => {
       var n = 0L
       var bytes = 0L
+      var acc = fold.zero
       rows.foreach { r =>
         n += 1
         bytes += (r match {
           case u: UnsafeRow => u.getSizeInBytes.toLong
           case _ => otherRowBytes
         })
+        acc = fold.add(acc, r)
       }
-      (n, bytes)
+      (n, bytes, acc)
     })
     val bytes = math.max(1L, perPartition.map(_._2).sum)
     val staged = own(StagingShim.withStats(checkpointed, BigInt(bytes)), () => StagingShim.release(rdd))
-    (staged, perPartition.map(_._1).sum)
+    val folded = perPartition.iterator.map(_._3).foldLeft(fold.zero)(fold.merge)
+    (staged, perPartition.map(_._1).sum, folded)
   }
 
   /** Write `df` to parquet under [[Stage.baseDir]] and read it back. */
@@ -76,7 +85,9 @@ final class Stage private () {
     df.sparkSession.read.parquet(path)
   }
 
-  /** Persist `df` for this scope. Use it where a [[local]] would change the plan. */
+  /** Persist `df` for this scope. Unlike [[memory]] it runs no job of its own: the
+    * first job that reads the table fills its blocks.
+    */
   def cache(df: DataFrame): DataFrame =
     if (df.storageLevel != StorageLevel.NONE) df
     else {
@@ -122,6 +133,39 @@ object Stage {
 
   private def leafRdd(checkpointed: DataFrame) =
     checkpointed.queryExecution.analyzed.asInstanceOf[LogicalRDD].rdd
+
+  /** A fold of staged rows into a small driver-side value: [[add]] runs over each
+    * partition's rows on the executors as the staging job caches them, and [[merge]]
+    * combines the partitions' values on the driver in no fixed order, so it must be
+    * commutative and associative (sums and maxima of longs are).
+    */
+  abstract class Fold[A] extends Serializable {
+    def zero: A
+    def add(acc: A, row: InternalRow): A
+    def merge(a: A, b: A): A
+  }
+
+  private object NoFold extends Fold[Unit] {
+    def zero: Unit = ()
+    def add(acc: Unit, row: InternalRow): Unit = ()
+    def merge(a: Unit, b: Unit): Unit = ()
+  }
+
+  /** A nullable INT or BIGINT column of the rows `df` stages, read as a long. */
+  final case class LongField(ordinal: Int, isInt: Boolean) {
+    def isNull(row: InternalRow): Boolean = row.isNullAt(ordinal)
+    def apply(row: InternalRow): Long =
+      if (isInt) row.getInt(ordinal).toLong else row.getLong(ordinal)
+  }
+
+  def field(df: DataFrame, name: String): LongField = {
+    val i = df.schema.fieldIndex(name)
+    df.schema(i).dataType match {
+      case IntegerType => LongField(i, isInt = true)
+      case LongType => LongField(i, isInt = false)
+      case t => throw new IllegalArgumentException(s"column $name is $t, not INT or BIGINT")
+    }
+  }
 
   /** Run `body` in a fresh scope and release everything it staged at the end. */
   def scope[A](body: Stage => A): A = {

@@ -66,7 +66,7 @@ class StageSpec extends SparkFunSuite {
       val parentOwned = persisted -- before
       assert(parentOwned.size === 2)
       val inner = st.scope { in =>
-        val l = in.local(outer.filter(col("x") % 2 === 0))
+        val (l, _) = in.memory(outer.filter(col("x") % 2 === 0))
         val (m, _) = in.memory(l.select((col("x") * 10).as("x")))
         assert((persisted -- before -- parentOwned).size === 2)
         st.memory(m)._1 // staged in the parent: outlives the child
@@ -87,7 +87,7 @@ class StageSpec extends SparkFunSuite {
         st.memory(spark.range(20).toDF("x"))
         st.cache(spark.range(25).toDF("y")).count()
         st.scope { in =>
-          in.local(spark.range(5).toDF("z")).count()
+          in.memory(spark.range(5).toDF("z"))._1.count()
           throw new IllegalStateException("boom")
         }
       }
