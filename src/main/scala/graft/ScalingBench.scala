@@ -99,7 +99,7 @@ object ScalingBench {
               in.durable(graft.partition.DistRefiner.lpRefineCaps(
                 in, spark, geHub, part0.join(nodeW, "node"), k, Array.fill(k)(lmax),
                 maxIter = iters, seed = seed
-              ).select(col("node"), col("block")), "ref-part-out").count()
+              ).out.part.select(col("node"), col("block")), "ref-part-out").count()
             }
             (System.nanoTime() - t0) / 1e9
           }

@@ -33,15 +33,18 @@ final case class Assign(node: Long, block: Int)
   */
 final case class BlockWeight(block: Int, weight: Long)
 
-/** Per-iteration metrics row, checkpointed for resumable convergence (north star M6). */
+/** One refinement superstep of one partitioning call (north star M6). A refiner
+  * returns its rows with its result, at level -1; the partitioner tags them with the
+  * coarsening level they ran at and collects them into its result, in run order.
+  * LP supersteps record the weight they moved; JET rounds record the cut and
+  * imbalance of the partition entering the round, and moved -1.
+  */
 final case class IterMetrics(
-    runId: String,
     level: Int,
     superstep: Int,
     moved: Long,
-    cut: Long,
-    imbalance: Double,
-    wallMs: Long
+    cut: Long = -1L,
+    imbalance: Double = -1.0
 )
 
 /** Partition context: k, imbalance epsilon and the derived block-weight bounds.

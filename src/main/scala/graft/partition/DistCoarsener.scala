@@ -1,6 +1,6 @@
 package graft.partition
 
-import org.apache.spark.sql.{DataFrame, Observation, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import graft.util.{Log, Stage}
@@ -376,9 +376,9 @@ object DistCoarsener {
   }
 
   /** Coarsening driver loop (SURVEY O9): repeat LP+contract while the graph is larger
-    * than `targetN` and each level shrinks >=5%. Every level's artifacts are written
-    * to parquet, so they outlive the call. Returns the stack of levels, finest first,
-    * plus the final coarse (edges, nodeW).
+    * than `targetN` and each level shrinks >=5%. Runs in memory in its own scope and
+    * writes to parquet only the tables it returns, so they outlive the call. Returns
+    * the stack of levels, finest first, plus the final coarse (edges, nodeW).
     */
   def coarsen(
       spark: SparkSession,
@@ -390,16 +390,23 @@ object DistCoarsener {
       seed: Long,
       targetM: Long = Long.MaxValue
   ): (Seq[DistCoarsener.Level], DataFrame, DataFrame) =
-    Stage.scope(st =>
-      coarsenIn(st, durable = true, spark, edges0, nodeW0, k, eps, targetN, seed, targetM))
+    Stage.scope { st =>
+      val (levels, edges, nodeW) =
+        coarsenIn(st, spark, edges0, nodeW0, k, eps, targetN, seed, targetM)
+      // the coarsest level's tables are also the returned graph: write each table once
+      val written = new java.util.IdentityHashMap[DataFrame, DataFrame]
+      def out(df: DataFrame, tag: String): DataFrame =
+        if ((df eq edges0) || (df eq nodeW0)) df
+        else written.computeIfAbsent(df, _ => st.durable(df, tag))
+      (levels.map(l => Level(out(l.mapping, "mapping"), out(l.coarseEdges, "cedges"),
+        out(l.coarseNodeW, "cnodew"))), out(edges, "cedges"), out(nodeW, "cnodew"))
+    }
 
-  /** [[coarsen]] with the level artifacts staged in `st` (in memory), or written to
-    * parquet when `durable`. Each level's clustering runs in a child scope that
-    * closes once the level's artifacts are staged.
+  /** [[coarsen]] with the level artifacts staged in `st`. Each level's clustering
+    * runs in a child scope that closes once the level's artifacts are staged.
     */
   private[partition] def coarsenIn(
       st: Stage,
-      durable: Boolean,
       spark: SparkSession,
       edges0: DataFrame,
       nodeW0: DataFrame,
@@ -436,22 +443,14 @@ object DistCoarsener {
     var n = n0
     var m = if (targetM == Long.MaxValue) 0L else edges.count()
     val levels = scala.collection.mutable.ArrayBuffer.empty[Level]
-    // a level artifact and its row count, from the one job that stages it
-    def keep(df: DataFrame, tag: String): (DataFrame, Long) =
-      if (!durable) st.memory(df)
-      else {
-        val obs = Observation()
-        val out = st.durable(df.observe(obs, count(lit(1)).as("c")), tag)
-        (out, obs.get("c").asInstanceOf[Number].longValue)
-      }
     // the three level-artifact stages are independent actions over the same
     // clustering blocks — submit them concurrently so their fixed job costs overlap
     // (guide §2.6). The coarse node and edge counts come from the stages themselves
     def keepLevel(lv: Level): ((DataFrame, Long), (DataFrame, Long), DataFrame) = {
       val rs = graft.util.Par.awaitAll(Seq(
-        () => keep(lv.coarseEdges, "cedges"),
-        () => keep(lv.coarseNodeW, "cnodew"),
-        () => keep(lv.mapping, "mapping")))
+        () => st.memory(lv.coarseEdges),
+        () => st.memory(lv.coarseNodeW),
+        () => st.memory(lv.mapping)))
       (rs(0), rs(1), rs(2)._1)
     }
     var converged = false
@@ -497,11 +496,10 @@ object DistCoarsener {
           // Judged from the CONTRACTED node count — the common good-shrink case
           // skips the extra distinct() job; a poor shrink pays one re-contraction.
           if (cnNow >= (n + 1) / 2) {
-            val (rescued, _) = keep(
+            val (rescued, _) = st.memory(
               twoHopMerge(spark, edges,
                 mp.select(col("node"), col("cnode").as("label")), nodeW, cap,
-                seed + levels.length),
-              "twohop")
+                seed + levels.length))
             val ((ce2, cm2), (cw2, cn2), mp2) = keepLevel(contract(edges, nodeW, rescued))
             ce = ce2
             cmNow = cm2
@@ -539,7 +537,7 @@ object DistCoarsener {
       // how dense the coarse graph got. Only the IP input is sparsified; every
       // level's true edge set still drives the refinement above.
       Log.info(s"coarsen: converged with m=$m > edge cap $targetM — sparsifying the handoff")
-      edges = keep(sparsify(spark, edges, targetM), "sparsified")._1
+      edges = st.memory(sparsify(spark, edges, targetM))._1
     }
     (levels.toSeq, edges, nodeW)
   }

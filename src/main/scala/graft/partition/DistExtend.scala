@@ -221,7 +221,7 @@ object DistExtend {
         .filter(col("sb") === lit(lo) && col("db") === lit(lo))
         .select(col("src"), col("dst"), col("w")))
     val (lvls, cE, cW) = DistCoarsener.coarsenIn(
-      st, durable = false, spark, blockEdges, memberW, k = 2, eps = 0.03,
+      st, spark, blockEdges, memberW, k = 2, eps = 0.03,
       targetN = 2 * CExt, seed = seed, targetM = Partitioner.DriverEdgeCap)
     // driver bisect of the coarse graph
     val coarseNodes = cW.collect().map(r => (r.getLong(0), r.getLong(1))).sortBy(_._1)

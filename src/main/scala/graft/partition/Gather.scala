@@ -17,9 +17,11 @@ import graft.util.Stage
   * one extra replicated row per hub per superstep, nothing else changes. The join
   * decomposition is exact: same (src, label, w) stream, asserted by HubSplitSpec.
   *
-  * `prepare` is called once per level (one degree aggregation); the salted table is
-  * hash-partitioned by (dst, salt) and pinned, preserving the
-  * partition-once-per-level contract of the refiners.
+  * `level` prepares a level's gather edges once (with salting, one degree
+  * aggregation); the salted table is hash-partitioned by (dst, salt) and pinned,
+  * preserving the partition-once-per-level contract of the refiners. Every rating
+  * aggregate of the refiners (LP, JET, both balancers, the empty-block fill) is
+  * [[Gather.ratings]] over these edges, so each of them gets the salting.
   */
 final case class GatherEdges(e: DataFrame, hubs: Option[DataFrame], nSalt: Int)
 
@@ -27,6 +29,18 @@ object Gather {
 
   /** No hub splitting: the plain dst-keyed gather (callers pre-partition by dst). */
   def plain(edges: DataFrame): GatherEdges = GatherEdges(edges, None, 1)
+
+  /** One level's gather edges, partitioned by the gather key once and cached in `st`
+    * (hub-salted when `hubDegThreshold` > 0): every refiner of the level reuses the
+    * layout, so a superstep shuffles only its n-row vertex state. The plain table is
+    * also sorted within partitions, so each superstep's sort-merge join on dst skips
+    * re-sorting the m-row edge side (r06).
+    */
+  def level(st: Stage, edges: DataFrame, hubDegThreshold: Long): GatherEdges = {
+    val e = edges.select(col("src"), col("dst"), col("w"))
+    if (hubDegThreshold > 0L) prepare(st, e, hubDegThreshold)
+    else plain(st.cache(e.repartition(col("dst")).sortWithinPartitions(col("dst"))))
+  }
 
   /** Salt edges whose dst has degree >= `hubDegThreshold` into `nSalt` shards.
     * Returns a (dst, salt)-partitioned table cached in `st` plus the (small) hub set.
@@ -66,4 +80,23 @@ object Gather {
         .withColumnRenamed("node", "dst")
       ge.e.join(replicated, Seq("dst", "salt"))
   }
+
+  /** The rating gather of every refiner: per (src, neighbour block nb) the summed
+    * weight of src's edges into nb, as (src, nb, rating). `blocks` is a table with
+    * (node, block) columns; callers join their n-row per-src state on `src`.
+    *
+    * Aggregate first, then join: the m-row stream is partially aggregated map-side
+    * down to at most k rows per (partition, src) (nb is a block id, so the combine is
+    * dense) before any exchange; the (src, nb) exchange then carries ~n*k rows and
+    * spreads a hub src's aggregation over at most k partitions, and only the
+    * aggregate meets the n-row state. An explicit repartition(src) before the
+    * aggregation was A/B'd in r06 (one exchange instead of two, faster at bench
+    * scale) and reverted: it shuffles the raw m-row stream and lands a hub's whole
+    * neighbourhood in one partition with no map-side combine. Aggregating before the
+    * shuffle wins here because nb < k makes the partial aggregation dense.
+    */
+  def ratings(ge: GatherEdges, blocks: DataFrame): DataFrame =
+    joinLabels(ge, blocks.select(col("node"), col("block").as("nb")))
+      .groupBy(col("src"), col("nb"))
+      .agg(sum(col("w")).as("rating"))
 }

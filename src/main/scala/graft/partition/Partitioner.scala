@@ -1,6 +1,6 @@
 package graft.partition
 
-import graft.model.{CsrGraph, PartCtx}
+import graft.model.{CsrGraph, IterMetrics, PartCtx}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.execution.LogicalRDD
@@ -101,7 +101,6 @@ final class Partitioner private (
 
   private def computeStaged(
       st: Stage, spark: SparkSession, resume: Option[graft.util.RunCheckpoint]): Partitioner.Result = {
-    val runId = "partition-" + seed + "-" + System.identityHashCode(this)
     // per-stage wall clock, accumulated across levels (all stages are eager — they
     // end in checkpoints/collects); surfaces in Result.stageTimes for the bench's
     // per-stage medians (round-3 judge fix #1a)
@@ -112,6 +111,9 @@ final class Partitioner private (
       stageT.update(stage, stageT.getOrElse(stage, 0.0) + (System.nanoTime() - t0) / 1e9)
       a
     }
+    // the refiners' superstep rows, tagged with their level, in run order
+    val steps = scala.collection.mutable.ArrayBuffer.empty[IterMetrics]
+    def record(level: Int, rows: Seq[IterMetrics]): Unit = steps ++= rows.map(_.copy(level = level))
     // entry stage: flat lineage + leaf stats for everything downstream. When the
     // caller already persisted the edge table at a DISK-backed level (the bench
     // materializes and counts a MEMORY_AND_DISK cache), that cache serves every
@@ -144,7 +146,7 @@ final class Partitioner private (
     // 1. distributed coarsening (node target + edge cap: the driver collect below is
     // bounded by EDGES too, since coarsening densifies graphs)
     val (levels, cEdges, cNodeW) = timed("coarsen") {
-      DistCoarsener.coarsenIn(st, durable = false, spark, e, nodeW, k, epsilon, targetN, seed,
+      DistCoarsener.coarsenIn(st, spark, e, nodeW, k, epsilon, targetN, seed,
         targetM = Partitioner.DriverEdgeCap, resume = resume,
         hubDegThreshold = hubThreshold,
         largeDegThreshold = preset.lpLargeDegreeThreshold,
@@ -231,14 +233,15 @@ final class Partitioner private (
     } }
     def groupsNow: List[(Int, Int)] = DistExtend.splitGroups(k, doublings)
 
-    // 3. uncoarsen: project up + refine per level (finest level last)
-    var lastBlockW: Option[Array[Long]] = None
+    // 3. uncoarsen: project up + refine per level (finest level last). `refinedW`
+    // holds the exact block weights of `part` when the level chain computed them;
+    // a loaded or extended partition has its weights aggregated once, below
+    var refinedW: Option[Array[Long]] = None
     var levelNo = levels.length - 1
     var lastResumedLevel = -1
     while (levelNo >= 0 && resume.exists(_.hasNamed(s"part-level$levelNo"))) {
       // resumable run: this level's refined partition is already committed
       part = resume.get.loadNamed(spark, s"part-level$levelNo")
-      lastBlockW = None // recomputed below if this was the finest level
       lastResumedLevel = levelNo
       levelNo -= 1
     }
@@ -255,9 +258,9 @@ final class Partitioner private (
         if (levelNo == 0) e
         else levels(levelNo - 1).coarseEdges
       // the projection stays LAZY here (r06: was its own checkpoint write) — the
-      // common full-k path folds it into the weighted-part checkpoint below (one
-      // write per level instead of two); the extension path, which re-reads it per
-      // doubling, checkpoints it first
+      // common full-k path folds it into the LP entry stage below (one write per
+      // level instead of two); the extension path, which re-reads it per doubling,
+      // stages it first
       var projected = level.mapping
         .join(part.withColumnRenamed("node", "cnode"), "cnode")
         .select(col("node"), col("block"))
@@ -282,93 +285,62 @@ final class Partitioner private (
       }
       val caps = new Array[Long](k)
       groupsNow.foreach { case (lo, fk) => caps(lo) = fk * ctx.maxBlockWeight }
-      // hash-partition this level's edges by the gather key ONCE (hub-salted when
-      // configured); every refinement stage below reuses the layout (only vertex
-      // state shuffles per superstep)
-      val ge =
-        if (hubThreshold > 0L)
-          Gather.prepare(st, fineEdges.select(col("src"), col("dst"), col("w")), hubThreshold)
-        else
-          // sorted-within-partitions cache: every superstep's sort-merge gather join
-          // on dst skips re-sorting the m-row edge side (r06; one sort per level,
-          // reused by ~16 superstep joins across refine/jet/polish/pairFM)
-          Gather.plain(st.cache(
-            fineEdges.select(col("src"), col("dst"), col("w"))
-              .repartition(col("dst")).sortWithinPartitions(col("dst"))))
-      val fe = ge.e
-      // the level's partition rides through the whole chain as ONE weighted table
-      // (node, block, weight): the nodeW join happens here once, and every stage
-      // below passes its exact driver-tracked block weights to the next (no n-row
-      // re-aggregations)
-      val refW = new Array[Long](k)
-      // each refiner stages its supersteps (its entry table too) in a child scope;
-      // its result is staged here, after which the child's blocks are released
-      var partW = timed("refine") { st.scope(in => st.memory(DistRefiner.lpRefineCaps(
-        in, spark, ge,
-        projected.join(fineNodeW, "node").select(col("node"), col("block"), col("weight")), k, caps, maxIter = refineIters, seed = seed + levelNo, runId = runId, level = levelNo,
-        lastBlockW = Some(refW)))._1) }
-      val (balanced, balW) = timed("balance") { DistRefiner.balanceTrackedCaps(
-        spark, fe, partW, k, caps, seed = seed + levelNo,
-        blockW0 = Some(refW.clone())) }
-      partW = balanced
+      val ge = Gather.level(st, fineEdges, hubThreshold)
+      // the level's partition rides through the whole chain as ONE PartW: the nodeW
+      // join happens here once, and every refiner hands its exact block weights to
+      // the next (no n-row re-aggregations). Each LP/JET refiner stages its
+      // supersteps (its entry table too) in a child scope; its result is staged
+      // here, after which the child's blocks are released
+      val entry = projected.join(fineNodeW, "node").select(col("node"), col("block"), col("weight"))
+      val lp = timed("refine") { st.scope(in => DistRefiner.lpRefineCaps(
+        in, spark, ge, entry, k, caps, maxIter = refineIters, seed = seed + levelNo).stagedIn(st)) }
+      record(levelNo, lp.steps)
+      var cur = timed("balance") {
+        DistRefiner.balanceTrackedCaps(spark, ge, lp.out, k, caps, seed = seed + levelNo) }
       // JET pass (O20): negative-gain-tolerant bulk moves with an afterwards-filter —
       // recovers cut quality that positive-gain LP cannot reach from a projected
-      // partition; keeps the best (feasible, cut) snapshot, so it never regresses
-      val jet =
-        if (preset.jetRounds > 0) timed("jet") { st.scope { in =>
-          val r = DistRefiner.jetRefineCaps(
-            in, spark, ge, partW, k, caps,
-            rounds = preset.jetRounds, seed = seed + 1000 + levelNo, runId = runId,
-            level = levelNo, blockW0 = Some(balW.clone()))
-          r.copy(part = st.memory(r.part)._1)
-        } }
-        else // fast preset: no JET — the balanced LP result carries through
-          DistRefiner.JetResult(partW, 0L, balW, Metrics.isBalanced(balW, caps),
-            improved = false)
-      // positive-gain LP polish over JET's winner: strictly non-worsening (gain > 0
-      // with per-target rollback), picks up the stragglers JET's bulk rounds leave.
-      // Skipped when JET's winner IS the entering partition (round-3 judge fix #1b):
-      // that partition just came out of lpRefineCaps, so re-polishing it is 3 no-op
-      // supersteps.
-      val polishW = new Array[Long](k)
-      if (jet.improved && preset.polishIters > 0) {
-        partW = timed("polish") { st.scope(in => st.memory(DistRefiner.lpRefineCaps(
-          in, spark, ge, jet.part, k, caps,
-          maxIter = preset.polishIters, seed = seed + 2000 + levelNo, runId = runId,
-          level = levelNo,
-          lastBlockW = Some(polishW)))._1) }
-      } else {
-        partW = jet.part
-        System.arraycopy(jet.blockWeights, 0, polishW, 0, k)
+      // partition; keeps the best (feasible, cut) snapshot, so it never regresses.
+      // The fast preset skips it: the balanced LP result carries through
+      if (preset.jetRounds > 0) {
+        val jet = timed("jet") { st.scope(in => DistRefiner.jetRefineCaps(
+          in, spark, ge, cur, k, caps, rounds = preset.jetRounds,
+          seed = seed + 1000 + levelNo).stagedIn(st)) }
+        record(levelNo, jet.steps)
+        cur = jet.out
+        // positive-gain LP polish over JET's winner: strictly non-worsening (gain > 0
+        // with per-target rollback), picks up the stragglers JET's bulk rounds leave.
+        // Skipped when JET's winner IS the entering partition (round-3 judge fix
+        // #1b): that partition just came out of lpRefineCaps, so re-polishing it is 3
+        // no-op supersteps.
+        if (jet.improved && preset.polishIters > 0) {
+          val polish = timed("polish") { st.scope(in => DistRefiner.lpRefineCaps(
+            in, spark, ge, cur.part, k, caps, maxIter = preset.polishIters,
+            seed = seed + 2000 + levelNo).stagedIn(st)) }
+          record(levelNo, polish.steps)
+          cur = polish.out
+        }
       }
       // distributed pairwise FM (round-3 judge fix #3): block-pair border regions
       // refined with driver 2-way FM — the hill-climbing swaps the per-move-capped
       // LP/JET chain cannot reach; never worsens cut or feasibility
-      if (preset.pairFmRounds > 0) {
-        val (pf, pfW) = timed("pairfm") { DistRefiner.pairwiseFmDist(
-          spark, fe, partW, k, caps, polishW.clone(),
-          rounds = preset.pairFmRounds, radius = preset.pairFmRadius,
+      if (preset.pairFmRounds > 0)
+        cur = timed("pairfm") { DistRefiner.pairwiseFmDist(
+          spark, ge, cur, k, caps, rounds = preset.pairFmRounds, radius = preset.pairFmRadius,
           seed = seed + 5000 + levelNo) }
-        partW = pf
-        System.arraycopy(pfW, 0, polishW, 0, k)
-      }
-      part = partW.select(col("node"), col("block"))
-      lastBlockW = Some(polishW)
       // underload balancer (O18): the reference default chain ends each level with
       // it (`presets.cc:332-337`); a no-op unless min block weights are configured
-      if (ctx.hasMinBlockWeights && groupsNow.forall(_._2 == 1)) {
-        val (pulled, ubW) = DistRefiner.underloadBalance(
-          st, spark, fe, fineNodeW, part, k, ctx.minBlockWeight, ctx.maxBlockWeight,
-          seed = seed + 3000 + levelNo, blockW0 = Some(polishW.clone()))
-        part = pulled
-        System.arraycopy(ubW, 0, polishW, 0, k)
-      }
+      if (ctx.hasMinBlockWeights && groupsNow.forall(_._2 == 1))
+        cur = DistRefiner.underloadBalance(
+          st, spark, ge, cur, k, ctx.minBlockWeight, ctx.maxBlockWeight,
+          seed = seed + 3000 + levelNo)
+      part = cur.part.select(col("node"), col("block"))
+      refinedW = Some(cur.blockW)
       resume.foreach { r =>
         r.putMeta(s"doublings-part-level$levelNo", doublings.toString)
         part = r.saveNamed(s"part-level$levelNo", part)
         r.appendMetrics(200 + (levels.length - 1 - levelNo), Map("stage" -> s"part-level$levelNo"))
       }
-      st.release(fe)
+      st.release(ge.e)
       Partitioner.failpoint(s"part-level$levelNo")
       levelNo -= 1
     }
@@ -388,8 +360,13 @@ final class Partitioner private (
             ctx.perfectBlockWeight, ctx.maxBlockWeight, seed + 4000 + doublings))._1
         graft.util.Log.info(s"extend finest (guard): k'=${groupsNow.size}")
       }
-      lastBlockW = None // tracked weights predate the extension — force recompute
+      refinedW = None // tracked weights predate the extension
     }
+    var blockW = refinedW.getOrElse(timed("final_metrics")(Metrics.blockWeights(part, nodeW, k)))
+    // the finest gather edges for the refiners that run after the level chain
+    lazy val finestGe = Gather.level(st, e, hubThreshold)
+    def weighted(p: DataFrame, w: Array[Long]) =
+      PartW(p.join(nodeW, "node").select(col("node"), col("block"), col("weight")), w)
 
     // distributed V-cycles (SURVEY O16 vcycle scheme, round-4 headline): re-coarsen
     // restricted to same-block merges, re-search the coarse graph at full k on the
@@ -398,7 +375,6 @@ final class Partitioner private (
     // (the driver path has its own vcycle inside SeqPartitioner); a fruitless cycle
     // (no strict coarse improvement) skips the polish entirely.
     if (levels.nonEmpty && preset.vcycles > 0) {
-      var anyImproved = false
       var cyc = 0
       // the descent chain is not strictly non-worsening (simultaneous positive-gain
       // LP moves by adjacent same-parity nodes can raise the cut), so a coarse win
@@ -408,12 +384,10 @@ final class Partitioner private (
       // the seed-5 1378 plateau), but the RETURNED partition is the best measured
       // (feasible, fine cut) state over the whole run, so the final result can
       // never regress below the pre-cycle partition.
-      var bestPart = part
-      var bestW = lastBlockW
+      val entering = part
+      var best: Option[PartW] = None
       var bestCut = timed("vcycle")(Metrics.edgeCut(e, part))
-      var bestFeasible = timed("vcycle") {
-        lastBlockW.getOrElse(Metrics.blockWeights(part, nodeW, k))
-      }.forall(_ <= ctx.maxBlockWeight)
+      var bestFeasible = blockW.forall(_ <= ctx.maxBlockWeight)
       while (cyc < preset.vcycles) {
         var improved = timed("vcycle") {
           VCycle.improveOnce(st, spark, e, nodeW, part, ctx, targetN,
@@ -436,18 +410,15 @@ final class Partitioner private (
         improved.foreach { cr =>
           // working state: always the cycle's result (exploration); best state:
           // only on measured fine improvement
-          part = cr.part
-          lastBlockW = Some(cr.blockWeights)
-          val candCut = timed("vcycle")(Metrics.edgeCut(e, cr.part))
-          val candFeasible = cr.blockWeights.forall(_ <= ctx.maxBlockWeight)
+          part = cr.out.part
+          val candCut = timed("vcycle")(Metrics.edgeCut(e, cr.out.part))
+          val candFeasible = cr.out.blockW.forall(_ <= ctx.maxBlockWeight)
           val betterThanBest = (candFeasible && !bestFeasible) ||
             (candFeasible == bestFeasible && candCut <= bestCut)
           if (betterThanBest) {
-            bestPart = cr.part
-            bestW = Some(cr.blockWeights)
+            best = Some(cr.out)
             bestCut = candCut
             bestFeasible = candFeasible
-            anyImproved = true
           } else {
             graft.util.Log.info(
               s"vcycle: fine cut $candCut (feasible $candFeasible) below best " +
@@ -456,46 +427,42 @@ final class Partitioner private (
         }
         cyc += 1
       }
-      part = bestPart
-      lastBlockW = bestW
-      // a fresh coarse re-partition only enforces Lmax; restore Lmin when min
-      // block weights are configured (the per-level O18 runs predate the vcycle)
-      if (anyImproved && ctx.hasMinBlockWeights) {
-        val feU = st.cache(e.repartition(col("dst")))
-        val (pulled, ubW) = DistRefiner.underloadBalance(
-          st, spark, feU, nodeW, part, k, ctx.minBlockWeight, ctx.maxBlockWeight,
-          seed = seed + 7900L, blockW0 = lastBlockW.map(_.clone()))
-        part = pulled
-        lastBlockW = Some(ubW)
-        st.release(feU)
+      part = entering
+      best.foreach { b =>
+        // a fresh coarse re-partition only enforces Lmax; restore Lmin when min
+        // block weights are configured (the per-level O18 runs predate the vcycle)
+        val out =
+          if (ctx.hasMinBlockWeights)
+            DistRefiner.underloadBalance(st, spark, finestGe, b, k, ctx.minBlockWeight,
+              ctx.maxBlockWeight, seed = seed + 7900L)
+          else b
+        part = out.part.select(col("node"), col("block"))
+        blockW = out.blockW
       }
     }
 
     // pure driver path (no coarsening levels): the underload balancer still runs when
     // min block weights are configured — the seq partitioner only enforces Lmax
     if (levels.isEmpty && ctx.hasMinBlockWeights) {
-      val fe = st.cache(e.repartition(col("dst")))
-      val (pulled, ubW) = DistRefiner.underloadBalance(
-        st, spark, fe, nodeW, part, k, ctx.minBlockWeight, ctx.maxBlockWeight,
+      val out = DistRefiner.underloadBalance(
+        st, spark, finestGe, weighted(part, blockW), k, ctx.minBlockWeight, ctx.maxBlockWeight,
         seed = seed + 3000)
-      part = pulled
-      lastBlockW = Some(ubW)
-      st.release(fe)
+      part = out.part.select(col("node"), col("block"))
+      blockW = out.blockW
     }
 
-    // the finest level's polish tracked its block weights exactly — reuse them; the
-    // cut needs one final aggregation (exact, asserted self-consistent in tests)
-    val (blockW, cut) = timed("final_metrics") {
-      val w = lastBlockW match {
-        case Some(w0) if levels.nonEmpty => w0
-        case _ => Metrics.blockWeights(part, nodeW, k)
-      }
+    // the cut needs one final aggregation (exact, asserted self-consistent in tests)
+    val cut = timed("final_metrics") {
       // full-k contract: refinement/extension on tight instances can strand empty
       // blocks — seed each with the cheapest boundary node of a heavy donor block
       // (one gather + bounded collect; a no-op on healthy runs)
-      if (w.exists(_ == 0L) && n >= k)
-        part = Partitioner.fillEmptyBlocksDist(st, spark, e, nodeW, part, k, w, ctx.maxBlockWeight)
-      (w, Metrics.edgeCut(e, part))
+      if (blockW.exists(_ == 0L) && n >= k) {
+        val filled = Partitioner.fillEmptyBlocksDist(
+          st, spark, finestGe, weighted(part, blockW), k, ctx.maxBlockWeight)
+        part = filled.part.select(col("node"), col("block"))
+        blockW = filled.blockW
+      }
+      Metrics.edgeCut(e, part)
     }
     // the one durable write of the call, when `part` reads staged blocks (released
     // as the staging scope closes); the driver path's assignment is a local table
@@ -505,7 +472,7 @@ final class Partitioner private (
       else part
     resume.foreach(_.markDone())
     Partitioner.Result(assignment, cut, blockW, Metrics.imbalance(blockW), ctx,
-      graft.util.IterMetricsCollector.drain(runId), stageT.toMap)
+      steps.toSeq, stageT.toMap)
   }
 }
 
@@ -531,35 +498,30 @@ object Partitioner {
   /** Distributed analog of [[SeqPartitioner.fillEmptyBlocks]]: for each empty block,
     * move in the donor-block member with the LEAST internal connectivity (usually a
     * boundary or isolated node, so the cut damage is minimal). One gather + one
-    * bounded ordered collect + one broadcast apply; mutates `blockW` in place.
+    * bounded ordered collect + one broadcast apply.
     */
   private[partition] def fillEmptyBlocksDist(
       st: Stage,
       spark: SparkSession,
-      edges: DataFrame,
-      nodeW: DataFrame,
-      part0: DataFrame,
+      ge: GatherEdges,
+      in: PartW,
       k: Int,
-      blockW: Array[Long],
       lmax: Long
-  ): DataFrame = {
+  ): PartW = {
     import spark.implicits._
+    val blockW = in.tracked
     val empties = (0 until k).filter(b => blockW(b) == 0L)
-    if (empties.isEmpty) return part0
+    if (empties.isEmpty) return in
     val donors = (0 until k).filter(b => blockW(b) > 1L).sortBy(b => (-blockW(b), b))
       .take(math.max(empties.size, 4))
-    if (donors.isEmpty) return part0
-    val members = part0.filter(col("block").isin(donors.map(Int.box): _*))
-      .join(nodeW, "node").select(col("node"), col("block"), col("weight"))
+    if (donors.isEmpty) return in
+    val members = in.part.filter(col("block").isin(donors.map(Int.box): _*))
+      .select(col("node").as("src"), col("block").as("cur"), col("weight").as("nw"))
     val rated = members
-      .join(
-        edges.join(part0.select(col("node").as("dst"), col("block").as("db")), "dst")
-          .select(col("src").as("node"), col("db"), col("w")),
-        Seq("node"), "left")
-      .groupBy(col("node"), col("block"), col("weight"))
-      .agg(coalesce(
-        sum(when(col("db") === col("block"), col("w")).otherwise(0L)), lit(0L)).as("internal"))
-      .orderBy(asc("internal"), asc("node"))
+      .join(Gather.ratings(ge, in.part), Seq("src"), "left")
+      .groupBy(col("src"), col("cur"), col("nw"))
+      .agg(sum(when(col("nb") === col("cur"), col("rating")).otherwise(0L)).as("internal"))
+      .orderBy(asc("internal"), asc("src"))
       .limit(empties.size * 8 + 8)
       .collect()
       .map(r => (r.getLong(0), r.getAs[Number](1).intValue(), r.getLong(2), r.getLong(3)))
@@ -576,10 +538,11 @@ object Partitioner {
       }
     }
     graft.util.Log.info(s"fillEmptyBlocksDist: seeded ${moves.size}/${empties.size} empty blocks")
-    if (moves.isEmpty) part0
-    else st.memory(
-      part0.join(broadcast(moves.toSeq.toDF("node", "fb")), Seq("node"), "left")
-        .select(col("node"), coalesce(col("fb"), col("block")).cast("int").as("block")))._1
+    if (moves.isEmpty) in
+    else PartW(st.memory(
+      in.part.join(broadcast(moves.toSeq.toDF("node", "fb")), Seq("node"), "left")
+        .select(col("node"), coalesce(col("fb"), col("block")).cast("int").as("block"),
+          col("weight")))._1, blockW)
   }
 
   /** Test-only failpoint: throws after the named resumable stage commits, simulating

@@ -1,6 +1,7 @@
 package graft.partition
 
 import graft.model.CsrGraph
+import graft.util.Par
 import scala.collection.mutable
 import scala.util.Random
 
@@ -50,27 +51,17 @@ object SeqPartitioner {
       boundsOverride: Option[(Long, Long)] = None
   ): Result = {
     val (_, lmax) = bounds(g, k, eps, boundsOverride)
-    import scala.concurrent.{Await, Future, ExecutionContext}
-    import scala.concurrent.duration.Duration
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(
-      math.max(1, math.min(attempts, Runtime.getRuntime.availableProcessors())))
-    implicit val ec: ExecutionContext = ExecutionContext.fromExecutorService(pool)
-    try {
-      val runs = Future.sequence((0 until attempts).toList.map { a =>
-        Future {
-          val r = partitionKway(g, k, eps, seed + a * 0x9e3779b9L, boundsOverride)
-          (blockWeights(g, r.part, k).max <= lmax, r)
-        }
-      })
-      val results = Await.result(runs, Duration.Inf)
-      var best: Result = null
-      var bestKey = (false, Long.MaxValue)
-      results.foreach { case (feasible, r) =>
-        val better = if (feasible != bestKey._1) feasible else r.cut < bestKey._2
-        if (best == null || better) { best = r; bestKey = (feasible, r.cut) }
-      }
-      best
-    } finally pool.shutdown()
+    val results = Par.awaitAll((0 until attempts).map { a => () =>
+      val r = partitionKway(g, k, eps, seed + a * 0x9e3779b9L, boundsOverride)
+      (blockWeights(g, r.part, k).max <= lmax, r)
+    })
+    var best: Result = null
+    var bestKey = (false, Long.MaxValue)
+    results.foreach { case (feasible, r) =>
+      val better = if (feasible != bestKey._1) feasible else r.cut < bestKey._2
+      if (best == null || better) { best = r; bestKey = (feasible, r.cut) }
+    }
+    best
   }
 
   /** (perfect, Lmax) — derived from g unless the caller supplies the FINE-level bounds
@@ -162,31 +153,19 @@ object SeqPartitioner {
       // INDEPENDENT (each touches only its own members — disjoint `part` slots), so
       // they run on a local pool with per-group seeded Randoms (deterministic, and
       // the driver IP stage no longer serializes a 32-core box at 8+ groups).
-      val splitJobs = groups.filter(_._2 > 1)
-      if (splitJobs.nonEmpty) {
-        import scala.concurrent.{Await, Future, ExecutionContext}
-        import scala.concurrent.duration.Duration
-        val pool = java.util.concurrent.Executors.newFixedThreadPool(
-          math.max(1, math.min(splitJobs.size, Runtime.getRuntime.availableProcessors())))
-        implicit val ec: ExecutionContext = ExecutionContext.fromExecutorService(pool)
-        try {
-          Await.result(
-            Future.sequence(splitJobs.map { case (lo, fk) => Future {
-              val k0 = (fk + 1) / 2
-              val k1 = fk - k0
-              val (sub, ids) = inducedByBlock(g, part, lo)
-              val total = sub.totalNodeWeight
-              var t0 = math.ceil(total.toDouble * k0 / fk).toLong
-              if (total - t0 > k1 * lmax) t0 = total - k1 * lmax
-              if (t0 > k0 * lmax) t0 = k0 * lmax
-              val side = multilevelBisect(sub, t0, total - t0, k0 * lmax, k1 * lmax,
-                new Random(seed ^ (lo.toLong * 0x9e3779b97f4a7c15L) ^ (doublings.toLong << 32)))
-              var i = 0
-              while (i < sub.n) { if (side(i) == 1) part(ids(i)) = lo + k0; i += 1 }
-            } }),
-            Duration.Inf)
-        } finally pool.shutdown()
-      }
+      Par.awaitAll(groups.filter(_._2 > 1).map { case (lo, fk) => () =>
+        val k0 = (fk + 1) / 2
+        val k1 = fk - k0
+        val (sub, ids) = inducedByBlock(g, part, lo)
+        val total = sub.totalNodeWeight
+        var t0 = math.ceil(total.toDouble * k0 / fk).toLong
+        if (total - t0 > k1 * lmax) t0 = total - k1 * lmax
+        if (t0 > k0 * lmax) t0 = k0 * lmax
+        val side = multilevelBisect(sub, t0, total - t0, k0 * lmax, k1 * lmax,
+          new Random(seed ^ (lo.toLong * 0x9e3779b97f4a7c15L) ^ (doublings.toLong << 32)))
+        var i = 0
+        while (i < sub.n) { if (side(i) == 1) part(ids(i)) = lo + k0; i += 1 }
+      })
       groups = groups.flatMap { case (lo, fk) =>
         if (fk == 1) List((lo, 1))
         else { val k0 = (fk + 1) / 2; List((lo, k0), (lo + k0, fk - k0)) }

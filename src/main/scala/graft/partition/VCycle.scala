@@ -49,14 +49,14 @@ object VCycle {
     */
   val VcTargetN = 8192L
 
-  final case class CycleResult(part: DataFrame, blockWeights: Array[Long], coarseCut: Long)
+  final case class CycleResult(out: PartW, coarseCut: Long)
 
   /** One V-cycle. Returns None when the cycle could not run (coarse graph never fit
     * the driver caps) or found no strictly better coarse partition — a fruitless
     * cycle costs only the restricted-coarsening probe, never the uncoarsening leg.
-    * On Some, the returned partition is already refined at the finest level with
-    * exact tracked block weights, and staged in `st`; everything else the cycle
-    * stages lives in a child scope that closes when the cycle ends.
+    * On Some, the returned partition is already refined at the finest level, with
+    * its exact block weights, and staged in `st`; everything else the cycle stages
+    * lives in a child scope that closes when the cycle ends.
     */
   def improveOnce(
       st: Stage,
@@ -234,49 +234,40 @@ object VCycle {
         // would strand fine blocks empty after projection
         if (SeqPartitioner.blockWeights(csr, win, k).exists(_ == 0L) && csr.n >= k)
           SeqPartitioner.fillEmptyBlocks(csr, win, k, capsFinal)
-        val bw = SeqPartitioner.blockWeights(csr, win, k)
         import spark.implicits._
-        var proj: DataFrame = coarseNodes.indices
-          .map(i => (coarseNodes(i)._1, win(i)))
-          .toDF("node", "block")
+        var out = PartW(
+          coarseNodes.indices.map(i => (coarseNodes(i)._1, win(i), coarseNodes(i)._2))
+            .toDF("node", "block", "weight"),
+          SeqPartitioner.blockWeights(csr, win, k))
         // uncoarsening leg: project one level and REFINE at that granularity
         // (positive-gain LP + balance safety + one pairwise-FM round) before
         // projecting further — multilevel all the way down, the standard recipe;
         // every stage is non-worsening, so the coarse win only grows
-        val blockW = bw.clone()
         var li = stack.length - 1
         while (li >= 0) {
           val (mp, fe0, fw) = stack(li)
-          proj = vc.memory(
-            mp.join(proj.withColumnRenamed("node", "cnode"), "cnode")
+          val proj = vc.memory(
+            mp.join(out.part.select(col("node").as("cnode"), col("block")), "cnode")
               .select(col("node"), col("block")))._1
           val ge = Gather.plain(vc.cache(
             fe0.select(col("src"), col("dst"), col("w")).repartition(col("dst"))))
-          val refW = new Array[Long](k)
-          val pw = vc.scope(in => vc.memory(DistRefiner.lpRefineCaps(
+          val lp = vc.scope(in => DistRefiner.lpRefineCaps(
             in, spark, ge, proj.join(fw, "node").select(col("node"), col("block"), col("weight")),
-            k, capsFinal, maxIter = 3, seed = seed + 8000L + li, lastBlockW = Some(refW)))._1)
-          val (balanced, balW) = DistRefiner.balanceTrackedCaps(
-            spark, ge.e, pw, k, capsFinal, seed = seed + 8100L + li,
-            blockW0 = Some(refW.clone()))
+            k, capsFinal, maxIter = 3, seed = seed + 8000L + li).out.stagedIn(vc))
+          val balanced = DistRefiner.balanceTrackedCaps(
+            spark, ge, lp, k, capsFinal, seed = seed + 8100L + li)
           // JET on the way down — the restructuring step: negative-gain bulk moves
           // redraw the boundaries the coarse basis could not express (best-snapshot
           // keeping makes it non-worsening, so the coarse win is preserved)
-          val jet = vc.scope { in =>
-            val r = DistRefiner.jetRefineCaps(
-              in, spark, ge, balanced, k, capsFinal, rounds = 3,
-              seed = seed + 8300L + li, blockW0 = Some(balW.clone()))
-            r.copy(part = vc.memory(r.part)._1)
-          }
-          val (pf, pfW) = DistRefiner.pairwiseFmDist(
-            spark, ge.e, jet.part, k, capsFinal, jet.blockWeights.clone(),
-            rounds = 1, seed = seed + 8200L + li)
-          proj = pf.select(col("node"), col("block"))
-          System.arraycopy(pfW, 0, blockW, 0, k)
+          val jet = vc.scope(in => DistRefiner.jetRefineCaps(
+            in, spark, ge, balanced, k, capsFinal, rounds = 3,
+            seed = seed + 8300L + li).out.stagedIn(vc))
+          out = DistRefiner.pairwiseFmDist(
+            spark, ge, jet, k, capsFinal, rounds = 1, seed = seed + 8200L + li)
           vc.release(ge.e)
           li -= 1
         }
-        Some(CycleResult(st.memory(proj)._1, blockW, winCut))
+        Some(CycleResult(out.stagedIn(st), winCut))
     }
   }
 }

@@ -78,11 +78,13 @@ final class Stage private () {
     (staged, perPartition.map(_._1).sum, folded)
   }
 
-  /** Write `df` to parquet under [[Stage.baseDir]] and read it back. */
+  /** Write `df` to parquet under [[Stage.baseDir]] and read it back with the schema
+    * just written, so no job infers it from the files.
+    */
   def durable(df: DataFrame, tag: String): DataFrame = {
     val path = s"${Stage.baseDir}/$tag-${Stage.counter.incrementAndGet()}"
     df.write.mode("overwrite").parquet(path)
-    df.sparkSession.read.parquet(path)
+    df.sparkSession.read.schema(df.schema).parquet(path)
   }
 
   /** Persist `df` for this scope. Unlike [[memory]] it runs no job of its own: the

@@ -99,7 +99,7 @@ class GatherOnceSpec extends SparkFunSuite with AdaptiveSparkPlanHelper {
     val ge = Gather.plain(edges.repartition(col("dst")))
     assertOnce(plansOf {
       Stage.scope(st => st.memory(DistRefiner.lpRefineCaps(st, spark, ge,
-        st.memory(part.join(nodeW, "node"))._1, 4, Array.fill(4)(40L), maxIter = 1, seed = 3L)))
+        st.memory(part.join(nodeW, "node"))._1, 4, Array.fill(4)(40L), maxIter = 1, seed = 3L).out.part))
     })
   }
 
@@ -114,7 +114,8 @@ class GatherOnceSpec extends SparkFunSuite with AdaptiveSparkPlanHelper {
         Stage.scope(st => st.memory(
           DistCoarsener.lpCluster(st, spark, edges, nodeW, cap = 40L, maxIter = 5, seed = 0L)))
         Stage.scope(st => st.memory(DistRefiner.lpRefineCaps(st, spark, ge,
-          st.memory(part.join(nodeW, "node"))._1, 16, Array.fill(16)(190L), maxIter = 3, seed = 0L)))
+          st.memory(part.join(nodeW, "node"))._1, 16, Array.fill(16)(190L), maxIter = 3, seed = 0L)
+          .out.part))
       }
       assert(filtered.isEmpty,
         s"${filtered.size} queries with a runtime bloom filter, the first:\n${filtered.headOption.orNull}")

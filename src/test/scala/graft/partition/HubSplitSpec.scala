@@ -52,10 +52,49 @@ class HubSplitSpec extends SparkFunSuite {
     def run(ge: Stage => GatherEdges): Seq[(Long, Int)] = Stage.scope { st =>
       DistRefiner.lpRefineCaps(st, spark, ge(st), part0.join(nodeW, "node"), 4,
         Array.fill(4)(12L), maxIter = 4, seed = 11L)
-        .collect().map(r => (r.getLong(0), r.getInt(1))).sortBy(_._1).toSeq
+        .out.part.collect().map(r => (r.getLong(0), r.getInt(1))).sortBy(_._1).toSeq
     }
     val plain = run(_ => Gather.plain(edges.repartition(col("dst"))))
     val split = run(st => Gather.prepare(st, edges, hubDegThreshold = 10L, nSalt = 4))
     assert(split === plain)
+  }
+
+  /** (node, block) rows and block weights of a balancer's result, with the gather
+    * edges plain and hub-salted.
+    */
+  private def onAndOff(balancer: (Stage, GatherEdges) => PartW): Seq[(Seq[(Long, Int)], Seq[Long])] = {
+    val edges = skewed
+    def run(ge: Stage => GatherEdges) = Stage.scope { st =>
+      val out = balancer(st, ge(st))
+      (out.part.collect().map(r => (r.getLong(0), r.getInt(1))).sortBy(_._1).toSeq, out.blockW.toSeq)
+    }
+    Seq(
+      run(_ => Gather.plain(edges.repartition(col("dst")))),
+      run(st => Gather.prepare(st, edges, hubDegThreshold = 10L, nSalt = 4)))
+  }
+
+  private def weighted(blocks: Long => Int): PartW = {
+    val s = spark
+    import s.implicits._
+    val part = (0L to 40L).map(n => (n, blocks(n), 1L)).toDF("node", "block", "weight")
+    PartW(part, Metrics.blockWeightsW(part, 4))
+  }
+
+  test("the overload balancer is bit-identical with hub splitting on and off") {
+    // block 0 holds the hub and 20 leaves, twice its cap
+    val in = weighted(n => if (n <= 20L) 0 else (1 + n % 3).toInt)
+    val Seq(plain, split) = onAndOff((_, ge) =>
+      DistRefiner.balanceTrackedCaps(spark, ge, in, 4, Array.fill(4)(12L), seed = 5L))
+    assert(split === plain)
+    assert(plain._2.forall(_ <= 12L), s"still overloaded: ${plain._2}")
+  }
+
+  test("the underload balancer is bit-identical with hub splitting on and off") {
+    // block 3 holds 2 nodes, below the minimum of 8
+    val in = weighted(n => if (n <= 15L) 0 else if (n <= 30L) 1 else if (n <= 38L) 2 else 3)
+    val Seq(plain, split) = onAndOff((st, ge) =>
+      DistRefiner.underloadBalance(st, spark, ge, in, 4, lmin = 8L, lmax = 16L, seed = 5L))
+    assert(split === plain)
+    assert(plain._2(3) > 2L, s"nothing pulled into block 3: ${plain._2}")
   }
 }

@@ -24,9 +24,10 @@ class PairFmDistSpec extends SparkFunSuite {
     val bw0 = Metrics.blockWeights(part0, nodeW, 2)
     val caps = Array(7L, 7L)
     val before = Metrics.edgeCut(edges, part0)
-    val (partW, bw) = DistRefiner.pairwiseFmDist(
-      spark, edges, part0.join(nodeW, "node"), 2, caps, bw0, rounds = 2, seed = 3L)
-    val part = partW.select(col("node"), col("block"))
+    val out = DistRefiner.pairwiseFmDist(
+      spark, Gather.plain(edges), PartW(part0.join(nodeW, "node"), bw0), 2, caps, rounds = 2,
+      seed = 3L)
+    val (part, bw) = (out.part.select(col("node"), col("block")), out.blockW)
     val after = Metrics.edgeCut(edges, part)
     assert(after < before, s"expected improvement from $before, got $after")
     assert(after === 1L, s"optimal cut is the bridge alone, got $after")
@@ -48,10 +49,10 @@ class PairFmDistSpec extends SparkFunSuite {
     val bw0 = Metrics.blockWeights(part0, nodeW, 2)
     val caps = Array(7L, 7L)
     val before = Metrics.edgeCut(edges, part0)
-    val (partW, bw) = DistRefiner.pairwiseFmDist(
-      spark, edges, part0.join(nodeW, "node"), 2, caps, bw0, rounds = 1,
+    val out = DistRefiner.pairwiseFmDist(
+      spark, Gather.plain(edges), PartW(part0.join(nodeW, "node"), bw0), 2, caps, rounds = 1,
       regionCap = 20L, seed = 3L)
-    val part = partW.select(col("node"), col("block"))
+    val (part, bw) = (out.part.select(col("node"), col("block")), out.blockW)
     val after = Metrics.edgeCut(edges, part)
     assert(after <= before, s"edge-bound path must never worsen the cut: $before -> $after")
     assert(bw.forall(_ <= 7L), s"over-cap block: ${bw.mkString(",")}")

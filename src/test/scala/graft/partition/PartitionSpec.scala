@@ -335,6 +335,34 @@ class BalanceOverloadSpec extends SparkFunSuite {
   }
 }
 
+/** Two calls of one partitioner at once: each records its own superstep rows. */
+class ConcurrentPartitionSpec extends SparkFunSuite {
+  test("two concurrent computePartition calls on one Partitioner each return a solo run's result") {
+    val rnd = new scala.util.Random(23)
+    val n = 240
+    val edgeSet = scala.collection.mutable.Set.empty[(Long, Long)]
+    (0 until n).foreach(i => edgeSet += ((i.toLong, ((i + 1) % n).toLong)))
+    (0 until 3 * n).foreach { _ =>
+      val a = rnd.nextInt(n); val b = rnd.nextInt(n)
+      if (a != b) edgeSet += ((math.min(a, b).toLong, math.max(a, b).toLong))
+    }
+    val p = Partitioner(undirectedUnit(edgeSet.toSeq)).setK(4).setEpsilon(0.05).setSeed(3L)
+      .setDriverThreshold(60L)
+    def run(): (Seq[(Long, Int)], Seq[graft.model.IterMetrics]) = {
+      val r = p.computePartition(spark)
+      (r.assignment.collect().map(x => (x.getLong(0), x.getInt(1))).sortBy(_._1).toSeq, r.iterMetrics)
+    }
+    val solo = run()
+    assert(solo._2.exists(_.moved >= 0L) && solo._2.exists(_.cut > 0L),
+      s"the solo run should record LP and JET rows: ${solo._2}")
+    val both = graft.util.Par.awaitAll(Seq(() => run(), () => run()))
+    both.foreach { r =>
+      assert(r._1 === solo._1)
+      assert(r._2 === solo._2)
+    }
+  }
+}
+
 /** Preset ladder (reference `apps/KaMinPar.cc:93-99`): `fast` trades cut for wall
   * time (skips JET + polish), `largek` starts deep extension earlier with smaller
   * intermediate blocks.
@@ -504,8 +532,10 @@ class UnderloadBalancerSpec extends SparkFunSuite {
       .toDF("node", "block")
     val fe = edges.repartition(col("dst"))
     Stage.scope { st =>
-      val (part, bw) = DistRefiner.underloadBalance(
-        st, spark, fe, nodeW, part0, 3, lmin = 15L, lmax = 40L, seed = 1L)
+      val in = PartW(part0.join(nodeW, "node"), Metrics.blockWeights(part0, nodeW, 3))
+      val out = DistRefiner.underloadBalance(
+        st, spark, Gather.plain(fe), in, 3, lmin = 15L, lmax = 40L, seed = 1L)
+      val (part, bw) = (out.part, out.blockW)
       assert(bw.forall(_ >= 15L), s"blocks below min: ${bw.mkString(",")}")
       assert(bw.sum === n.toLong)
       val counts = part.groupBy(col("block")).agg(count(lit(1))).collect()

@@ -1,7 +1,10 @@
 package graft.util
 
 import graft.SparkFunSuite
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.functions._
+import org.scalatest.concurrent.Eventually._
+import org.scalatest.time.SpanSugar._
 
 /** In-memory staging: results equal the unstaged plan, the statistics of a long
   * chain of self-joining stages stay bounded (a plain local checkpoint carries the
@@ -94,5 +97,39 @@ class StageSpec extends SparkFunSuite {
     }
     assert(err.getMessage === "boom")
     assert((persisted -- before).isEmpty)
+  }
+
+  /** Spark jobs `body` submits. Listener events arrive in order, so once a marker
+    * job submitted after `body` is seen, so is every job of `body`.
+    */
+  private def jobsOf(body: => Unit): Int = {
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[String]
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        seen.add(String.valueOf(e.properties.getProperty("spark.job.description")))
+    }
+    val sc = spark.sparkContext
+    sc.addSparkListener(listener)
+    try {
+      body
+      val marker = s"marker-${System.nanoTime()}"
+      sc.setJobDescription(marker)
+      try sc.parallelize(Seq(1), 1).count() finally sc.setJobDescription(null)
+      eventually(timeout(30.seconds), interval(50.millis)) { assert(seen.contains(marker)) }
+      seen.size - 1
+    } finally sc.removeSparkListener(listener)
+  }
+
+  test("st.durable submits no Spark job after its write") {
+    val df = spark.range(40).select(col("id").as("node"), (col("id") % 3).cast("int").as("block"))
+    val writeOnly = jobsOf(df.write.parquet(s"${Stage.baseDir}/durable-spec-${System.nanoTime()}"))
+    Stage.scope { st =>
+      var back: org.apache.spark.sql.DataFrame = null
+      val durable = jobsOf { back = st.durable(df, "durable-spec") }
+      assert(durable === writeOnly, s"st.durable ran $durable jobs, its write alone $writeOnly")
+      assert(back.schema.map(f => (f.name, f.dataType)) === df.schema.map(f => (f.name, f.dataType)))
+      assert(back.collect().map(r => (r.getLong(0), r.getInt(1))).sorted ===
+        df.collect().map(r => (r.getLong(0), r.getInt(1))).sorted)
+    }
   }
 }

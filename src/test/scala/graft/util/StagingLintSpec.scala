@@ -30,4 +30,24 @@ class StagingLintSpec extends AnyFunSuite {
     } yield s"$f:${no + 1}: $pattern"
     assert(hits.isEmpty, hits.mkString("\n", "\n", ""))
   }
+
+  /** Driver thread pools go through [[Par.awaitAll]] (one pool size, positional
+    * results, fail-fast), and superstep rows come back with each refiner's result.
+    */
+  test("no hand-rolled driver pool or global metrics buffer outside util/Par.scala") {
+    val root = Paths.get("src/main/scala/graft")
+    val walk = Files.walk(root)
+    val files =
+      try walk.iterator().asScala.filter(_.toString.endsWith(".scala")).toList
+      finally walk.close()
+    val par = root.resolve("util/Par.scala")
+    assert(files.contains(par))
+    val hits = for {
+      f <- files if f != par
+      (line, no) <- Files.readAllLines(f).asScala.zipWithIndex
+      pattern <- Seq("Executors.newFixedThreadPool", "Future.sequence", "IterMetricsCollector")
+      if line.contains(pattern)
+    } yield s"$f:${no + 1}: $pattern"
+    assert(hits.isEmpty, hits.mkString("\n", "\n", ""))
+  }
 }
