@@ -17,22 +17,6 @@ package graft.model
   */
 final case class Edge(src: Long, dst: Long, w: Long)
 
-/** Vertex with weight (unit by default — "empty array => unit weights",
-  * `csr_graph.h:96-99` becomes `coalesce(w, 1)` here).
-  */
-final case class Vertex(node: Long, weight: Long)
-
-/** node -> cluster/label assignment (clustering overlay, `cluster_contraction.h:50-59`). */
-final case class Label(node: Long, label: Long)
-
-/** node -> block assignment (partition overlay, `partitioned_graph.h:50-65`). */
-final case class Assign(node: Long, block: Int)
-
-/** Per-block weight row (the reference replicates all k block weights on every PE,
-  * `distributed_partitioned_graph.h`; we broadcast/collect the k-row table).
-  */
-final case class BlockWeight(block: Int, weight: Long)
-
 /** One refinement superstep of one partitioning call (north star M6). A refiner
   * returns its rows with its result, at level -1; the partitioner tags them with the
   * coarsening level they ran at and collects them into its result, in run order.

@@ -3,7 +3,6 @@ package graft.ops
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.util.Stage
-import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.XXH64
 
 /** Connected components via alternating large-star / small-star (Kiveris et al.,
@@ -109,11 +108,7 @@ object ConnectedComponents {
     */
   private def pairHashFold(df: DataFrame): Stage.Fold[Long] = {
     val (u, v) = (Stage.field(df, "u"), Stage.field(df, "v"))
-    new Stage.Fold[Long] {
-      def zero: Long = 0L
-      def add(acc: Long, row: InternalRow): Long =
-        acc ^ XXH64.hashLong(v(row), XXH64.hashLong(u(row), 42L))
-      def merge(a: Long, b: Long): Long = a ^ b
-    }
+    Stage.fold(() => 0L)((acc, row) =>
+      acc ^ XXH64.hashLong(v(row), XXH64.hashLong(u(row), 42L)))(_ ^ _)
   }
 }

@@ -34,9 +34,9 @@ object LabelPropagation {
       maxIter: Int = 20,
       seed: Long = 42L
   ): DataFrame = Stage.scope { st =>
-    // the edge projection is cached for the call unless the caller's cache already
-    // serves it (the select of the same three columns resolves to that entry)
-    val e = st.cache(edges.select(col("src"), col("dst"), col("w")))
+    // the edge projection is staged for the call (a caller's own cache is read once
+    // by the staging job and left as it is)
+    val (e, _) = st.memory(edges.select(col("src"), col("dst"), col("w")))
     var labels = st.durable(
       e.select(col("src").as("node")).distinct().withColumn("label", col("node")),
       "lp-labels")

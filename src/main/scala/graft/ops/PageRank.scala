@@ -17,7 +17,7 @@ import graft.util.{RunCheckpoint, Stage}
   * [[runResumable]] writes every superstep's state durably instead (Iceberg
   * snapshots with per-iteration metrics rows in prod), which both truncates lineage
   * and makes the run resumable from the last superstep. Both write their ranks
-  * durably and release the edge and base tables they cache before returning.
+  * durably and release the edge and base tables they stage before returning.
   */
 object PageRank {
 
@@ -38,7 +38,7 @@ object PageRank {
           st.durable(step.next, "pr-ranks").repartition(col("node"))
         else step.next
       }
-      // the lazy ranks read the scope's cached tables: the result is the one write
+      // the lazy ranks read the scope's staged tables: the result is the one write
       st.durable(state.select(col("node"), col("pr")), "pr-out")
     }
 
@@ -78,7 +78,7 @@ object PageRank {
     * uniform state or from `resumeFrom` = (superstep, state). `afterStep` gets each
     * finished superstep and returns the state the loop continues from (the place to
     * cut lineage). Returns the final (node, outdeg, pr) state, which may read the
-    * tables cached in `st`.
+    * tables staged in `st`.
     */
   private def supersteps(
       st: Stage,
@@ -88,36 +88,35 @@ object PageRank {
       resumeFrom: Option[(Int, DataFrame)]
   )(afterStep: Step => DataFrame): DataFrame = {
     // Co-partitioning contract: the (big) edge table is hash-partitioned by src ONCE
-    // and cached; every superstep's gather join then reuses that partitioning, so only
+    // and staged; every superstep's gather join then reuses that partitioning, so only
     // the n-row state table moves through the shuffle — the edge table never
     // re-shuffles (the north-star "CSR-partitioned adjacency" in DataFrame terms; on a
     // real cluster this is the bucketed-by-src Iceberg layout).
-    // sortWithinPartitions(src): the cached table carries its output ordering, so
+    // sortWithinPartitions(src): the staged table carries its output ordering, so
     // every superstep's sort-merge gather join skips re-sorting the m-row edge side
     // (r06; the at-rest analog is a bucketed+sorted-by-src Iceberg layout) — only
     // the n-row rank state is sorted per superstep.
-    val e = st.cache(edges.select(col("src"), col("dst"))
-      .repartition(col("src")).sortWithinPartitions(col("src")))
+    val (e, _) = st.memory(Stage.byKey(edges.select(col("src"), col("dst")), "src"))
     // static per-node base: node list with out-degree in ONE hash aggregation (each
     // edge emits (src, 1) and (dst, 0); sum of flags = out-degree, and every node of
     // either endpoint role appears), so the edge stream shuffles once (guide
     // §2.3/§2.4). Out-degree rides in the iterated state, saving a join per superstep.
-    val base = st.cache(e
+    // n is its row count, and its staging job counts the dangling nodes.
+    val basePlan = e
       .select(explode(array(
         struct(col("src").as("node"), lit(1L).as("c")),
         struct(col("dst").as("node"), lit(0L).as("c"))
       )).as("p"))
       .groupBy(col("p.node").as("node"))
-      .agg(sum(col("p.c")).as("outdeg")))
-    // n and the dangling-node check in ONE driver action
-    val s0 = base.agg(
-      count(lit(1)).as("n"),
-      coalesce(sum(when(col("outdeg") === 0L, 1L).otherwise(0L)), lit(0L)).as("dangling")).first()
-    val n = s0.getLong(0).toDouble
+      .agg(sum(col("p.c")).as("outdeg"))
+    val outdeg = Stage.field(basePlan, "outdeg")
+    val (base, rows, dangling) = st.memory(basePlan,
+      Stage.fold(() => 0L)((acc, row) => if (outdeg(row) == 0L) acc + 1L else acc)(_ + _))
+    val n = rows.toDouble
     // Dangling mass (nodes with no out-edges) is redistributed uniformly. On symmetric
     // link graphs there are none; detect that once so the common case pays no extra
     // per-iteration driver action.
-    val hasDangling = s0.getLong(1) > 0L
+    val hasDangling = dangling > 0L
 
     var (it, state) = resumeFrom.getOrElse((0, base.withColumn("pr", lit(1.0 / n))))
     while (it < iterations) {

@@ -4,7 +4,6 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import graft.util.{Log, Stage}
-import org.apache.spark.sql.catalyst.InternalRow
 
 /** Distributed LP clustering + contraction — the coarsening half of the partitioner.
   *
@@ -75,15 +74,9 @@ object DistCoarsener {
                 .cast("double") < lit(maxNumNeighbors.toDouble * 1e6) / col("deg"))
           .select(col("src"), col("dst"), col("w"))
       }
-    // edge table hash-partitioned by the gather key ONCE and cached (co-partitioning);
-    // hub splitting (Gather.prepare) when a threshold is configured
-    val ge =
-      if (hubDegThreshold > 0L)
-        Gather.prepare(st, gatherInput, hubDegThreshold)
-      else
-        // sorted cache: superstep gather joins on dst skip the m-row sort (r06)
-        Gather.plain(st.cache(
-          gatherInput.repartition(col("dst")).sortWithinPartitions(col("dst"))))
+    // edge table hash-partitioned and sorted by the gather key ONCE and staged
+    // (co-partitioning), hub-salted when a threshold is configured
+    val ge = Gather.level(st, gatherInput, hubDegThreshold)
     val e = ge.e
     // The superstep state is one staged table (node, label, weight, cand, D, allow,
     // it): the labels entering the superstep, each node's committed move (null if
@@ -266,14 +259,9 @@ object DistCoarsener {
   private def admissionFold(df: DataFrame): Stage.Fold[(Long, Long)] = {
     val (cand, demand, allow) =
       (Stage.field(df, "cand"), Stage.field(df, "D"), Stage.field(df, "allow"))
-    new Stage.Fold[(Long, Long)] {
-      def zero: (Long, Long) = (0L, Long.MinValue)
-      def add(acc: (Long, Long), row: InternalRow): (Long, Long) =
-        if (cand.isNull(row)) acc
-        else (acc._1 + 1L, math.max(acc._2, demand(row) - allow(row)))
-      def merge(a: (Long, Long), b: (Long, Long)): (Long, Long) =
-        (a._1 + b._1, math.max(a._2, b._2))
-    }
+    Stage.fold(() => (0L, Long.MinValue)) { (acc, row) =>
+      if (cand.isNull(row)) acc else (acc._1 + 1L, math.max(acc._2, demand(row) - allow(row)))
+    }((a, b) => (a._1 + b._1, math.max(a._2, b._2)))
   }
 
   /** Sparsification (SURVEY O11, reference `sparsification_cluster_coarsener.cc`

@@ -64,15 +64,13 @@ object DistExtend {
     */
   val MinExtendK = 32
 
-  def doublingsFor(n: Long, k: Int): Int = doublingsFor(n, k, MinExtendK, CExt)
-
   /** Doublings at a graph of n nodes: enough that blocks average >= ~cExt nodes,
     * capped at full k — min(ceil(log2 k), ceil(log2(n / cExt))). Small k goes
     * straight to full (no extension). Thresholds are preset-tunable (`largek`
     * extends earlier and targets smaller intermediate blocks).
     */
   def doublingsFor(n: Long, k: Int, minExtendK: Int, cExt: Long): Int = {
-    def ceilLog2(x: Long): Int = if (x <= 1) 0 else 64 - java.lang.Long.numberOfLeadingZeros(x - 1)
+    import Partitioner.ceilLog2
     if (k < minExtendK) ceilLog2(k.toLong)
     else math.min(ceilLog2(k.toLong), math.max(1, ceilLog2(math.max(1L, n / cExt))))
   }

@@ -18,7 +18,7 @@ import graft.util.Stage
   * decomposition is exact: same (src, label, w) stream, asserted by HubSplitSpec.
   *
   * `level` prepares a level's gather edges once (with salting, one degree
-  * aggregation); the salted table is hash-partitioned by (dst, salt) and pinned,
+  * aggregation); the salted table is hash-partitioned by (dst, salt) and staged,
   * preserving the partition-once-per-level contract of the refiners. Every rating
   * aggregate of the refiners (LP, JET, both balancers, the empty-block fill) is
   * [[Gather.ratings]] over these edges, so each of them gets the salting.
@@ -30,34 +30,32 @@ object Gather {
   /** No hub splitting: the plain dst-keyed gather (callers pre-partition by dst). */
   def plain(edges: DataFrame): GatherEdges = GatherEdges(edges, None, 1)
 
-  /** One level's gather edges, partitioned by the gather key once and cached in `st`
+  /** One level's gather edges, partitioned by the gather key once and staged in `st`
     * (hub-salted when `hubDegThreshold` > 0): every refiner of the level reuses the
-    * layout, so a superstep shuffles only its n-row vertex state. The plain table is
-    * also sorted within partitions, so each superstep's sort-merge join on dst skips
-    * re-sorting the m-row edge side (r06).
+    * layout, so a superstep shuffles only its n-row vertex state. The table is also
+    * sorted within partitions, so each superstep's sort-merge join on the key skips
+    * re-sorting the m-row edge side (r06); the staged leaf keeps both properties.
     */
   def level(st: Stage, edges: DataFrame, hubDegThreshold: Long): GatherEdges = {
     val e = edges.select(col("src"), col("dst"), col("w"))
     if (hubDegThreshold > 0L) prepare(st, e, hubDegThreshold)
-    else plain(st.cache(e.repartition(col("dst")).sortWithinPartitions(col("dst"))))
+    else plain(st.memory(Stage.byKey(e, "dst"))._1)
   }
 
   /** Salt edges whose dst has degree >= `hubDegThreshold` into `nSalt` shards.
-    * Returns a (dst, salt)-partitioned table cached in `st` plus the (small) hub set.
+    * Returns a (dst, salt)-partitioned table staged in `st` plus the (small) hub set.
     */
   def prepare(st: Stage, edges: DataFrame, hubDegThreshold: Long, nSalt: Int = 16): GatherEdges = {
     val (hubs, _) = st.memory(
       edges.groupBy(col("dst")).agg(count(lit(1)).as("d"))
         .filter(col("d") >= hubDegThreshold)
         .select(col("dst").as("hub")))
-    val salted = st.cache(edges
+    val (salted, _) = st.memory(Stage.byKey(edges
       .join(broadcast(hubs), col("dst") === col("hub"), "left")
       .select(
         col("src"), col("dst"), col("w"),
         when(col("hub").isNotNull, pmod(xxhash64(col("src"), lit(7L)), lit(nSalt.toLong)))
-          .otherwise(lit(0L)).as("salt"))
-      .repartition(col("dst"), col("salt"))
-      .sortWithinPartitions(col("dst"), col("salt")))
+          .otherwise(lit(0L)).as("salt")), "dst", "salt"))
     GatherEdges(salted, Some(hubs), nSalt)
   }
 

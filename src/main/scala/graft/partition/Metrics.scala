@@ -2,7 +2,6 @@ package graft.partition
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.catalyst.InternalRow
 import graft.util.Stage
 
 /** Partition metrics M1-M6 (reference `/root/reference/kaminpar-shm/metrics.cc` and
@@ -57,17 +56,13 @@ object Metrics {
     */
   def blockWeightFold(partW: DataFrame, k: Int): Stage.Fold[Array[Long]] = {
     val (block, weight) = (Stage.field(partW, "block"), Stage.field(partW, "weight"))
-    new Stage.Fold[Array[Long]] {
-      def zero: Array[Long] = new Array[Long](k)
-      def add(w: Array[Long], row: InternalRow): Array[Long] = {
-        w(block(row).toInt) += weight(row)
-        w
-      }
-      def merge(a: Array[Long], b: Array[Long]): Array[Long] = {
-        var i = 0
-        while (i < k) { a(i) += b(i); i += 1 }
-        a
-      }
+    Stage.fold(() => new Array[Long](k)) { (w, row) =>
+      w(block(row).toInt) += weight(row)
+      w
+    } { (a, b) =>
+      var i = 0
+      while (i < k) { a(i) += b(i); i += 1 }
+      a
     }
   }
 
@@ -77,10 +72,6 @@ object Metrics {
     val perfect = math.ceil(total.toDouble / blockW.length)
     blockW.max / perfect - 1.0
   }
-
-  /** M3: total overload above Lmax. */
-  def totalOverload(blockW: Array[Long], lmax: Long): Long =
-    blockW.map(w => math.max(0L, w - lmax)).sum
 
   /** M4: all blocks within the cap. */
   def isBalanced(blockW: Array[Long], lmax: Long): Boolean =

@@ -2,7 +2,6 @@ package graft.partition
 
 import graft.model.{CsrGraph, IterMetrics, PartCtx}
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.functions._
 import graft.util.Stage
@@ -457,8 +456,8 @@ final class Partitioner private (
       // blocks — seed each with the cheapest boundary node of a heavy donor block
       // (one gather + bounded collect; a no-op on healthy runs)
       if (blockW.exists(_ == 0L) && n >= k) {
-        val filled = Partitioner.fillEmptyBlocksDist(
-          st, spark, finestGe, weighted(part, blockW), k, ctx.maxBlockWeight)
+        val filled = DistRefiner.fillToFloor(
+          st, spark, finestGe, weighted(part, blockW), k, floor = 1L, ctx.maxBlockWeight)
         part = filled.part.select(col("node"), col("block"))
         blockW = filled.blockW
       }
@@ -483,67 +482,13 @@ object Partitioner {
     */
   private def weightStats(nodeW: DataFrame): Stage.Fold[(Long, Long)] = {
     val weight = Stage.field(nodeW, "weight")
-    new Stage.Fold[(Long, Long)] {
-      def zero: (Long, Long) = (0L, Long.MinValue)
-      def add(acc: (Long, Long), row: InternalRow): (Long, Long) =
-        (acc._1 + weight(row), math.max(acc._2, weight(row)))
-      def merge(a: (Long, Long), b: (Long, Long)): (Long, Long) =
-        (a._1 + b._1, math.max(a._2, b._2))
-    }
+    Stage.fold(() => (0L, Long.MinValue))(
+      (acc, row) => (acc._1 + weight(row), math.max(acc._2, weight(row))))(
+      (a, b) => (a._1 + b._1, math.max(a._2, b._2)))
   }
 
   private[partition] def ceilLog2(x: Long): Int =
     if (x <= 1) 0 else 64 - java.lang.Long.numberOfLeadingZeros(x - 1)
-
-  /** Distributed analog of [[SeqPartitioner.fillEmptyBlocks]]: for each empty block,
-    * move in the donor-block member with the LEAST internal connectivity (usually a
-    * boundary or isolated node, so the cut damage is minimal). One gather + one
-    * bounded ordered collect + one broadcast apply.
-    */
-  private[partition] def fillEmptyBlocksDist(
-      st: Stage,
-      spark: SparkSession,
-      ge: GatherEdges,
-      in: PartW,
-      k: Int,
-      lmax: Long
-  ): PartW = {
-    import spark.implicits._
-    val blockW = in.tracked
-    val empties = (0 until k).filter(b => blockW(b) == 0L)
-    if (empties.isEmpty) return in
-    val donors = (0 until k).filter(b => blockW(b) > 1L).sortBy(b => (-blockW(b), b))
-      .take(math.max(empties.size, 4))
-    if (donors.isEmpty) return in
-    val members = in.part.filter(col("block").isin(donors.map(Int.box): _*))
-      .select(col("node").as("src"), col("block").as("cur"), col("weight").as("nw"))
-    val rated = members
-      .join(Gather.ratings(ge, in.part), Seq("src"), "left")
-      .groupBy(col("src"), col("cur"), col("nw"))
-      .agg(sum(when(col("nb") === col("cur"), col("rating")).otherwise(0L)).as("internal"))
-      .orderBy(asc("internal"), asc("src"))
-      .limit(empties.size * 8 + 8)
-      .collect()
-      .map(r => (r.getLong(0), r.getAs[Number](1).intValue(), r.getLong(2), r.getLong(3)))
-    val movedNodes = scala.collection.mutable.Set.empty[Long]
-    val moves = scala.collection.mutable.ArrayBuffer.empty[(Long, Int)]
-    empties.foreach { b =>
-      rated.find { case (node, donor, wgt, _) =>
-        !movedNodes.contains(node) && blockW(donor) - wgt >= 1L && wgt <= lmax
-      }.foreach { case (node, donor, wgt, _) =>
-        movedNodes += node
-        blockW(donor) -= wgt
-        blockW(b) += wgt
-        moves += ((node, b))
-      }
-    }
-    graft.util.Log.info(s"fillEmptyBlocksDist: seeded ${moves.size}/${empties.size} empty blocks")
-    if (moves.isEmpty) in
-    else PartW(st.memory(
-      in.part.join(broadcast(moves.toSeq.toDF("node", "fb")), Seq("node"), "left")
-        .select(col("node"), coalesce(col("fb"), col("block")).cast("int").as("block"),
-          col("weight")))._1, blockW)
-  }
 
   /** Test-only failpoint: throws after the named resumable stage commits, simulating
     * an interruption between stages.

@@ -229,7 +229,7 @@ object SeqPartitioner {
     // Full-lmax caps are correct ONLY because this point is reached exclusively at
     // full k (all groups fk == 1 — the doubling-capped deep-MGP path returned above);
     // in that path the distributed chain owns the full-k contract via
-    // fillEmptyBlocksDist, and seeding reserved (zero-cap) group blocks here would
+    // DistRefiner.fillToFloor, and seeding reserved (zero-cap) group blocks here would
     // corrupt it. The guard makes the invariant explicit.
     assert(groups.forall(_._2 == 1),
       "fillEmptyBlocks must only run at full k (capped extension returns earlier)")
@@ -456,10 +456,9 @@ object SeqPartitioner {
         val b = (key & 0xffffffffL).toInt
         val pairKey = new FruitlessPairs.Key(g, lmax, mem(a), mem(b), memHash(a), memHash(b))
         if (!fruitless.contains(pairKey)) {
-          // induced subgraph over blocks {a, b} from the member lists — identical
-          // (sub, ids) to a whole-graph inducedSubgraph scan: ids ascend (merge of
-          // two ascending disjoint lists) and neighbors keep adjacency order
-          val (sub, ids) = inducedByPair(g, remap, mem(a), mem(b))
+          // induced subgraph over blocks {a, b} from the member lists: ids ascend
+          // (merge of two ascending disjoint lists), neighbors keep adjacency order
+          val (sub, ids) = induced(g, remap, mergeAscending(mem(a), mem(b)))
           var improvedPair = false
           if (sub.n > 1) {
             val side = new Array[Int](sub.n)
@@ -525,23 +524,13 @@ object SeqPartitioner {
     }
   }
 
-  /** Induced subgraph over the union of two disjoint ascending member lists —
-    * byte-identical output to `inducedSubgraph` over the same membership (ids
-    * ascending, neighbor order = adjacency order), at O(members + incident edges)
-    * instead of O(n + m). `remap` must be all -1 on entry and is restored on exit.
+  /** Induced subgraph over an ascending member list: (subgraph, ids) with subgraph
+    * node i = ids(i) and each node's neighbors in adjacency order, at
+    * O(members + incident edges). `remap` must be all -1 on entry and is restored on
+    * exit, so a caller that extracts many subgraphs reuses one buffer.
     */
-  private def inducedByPair(
-      g: CsrGraph, remap: Array[Int],
-      membersA: Array[Int], membersB: Array[Int]): (CsrGraph, Array[Int]) = {
-    val n2 = membersA.length + membersB.length
-    val ids = new Array[Int](n2)
-    var ia = 0; var ib = 0; var t = 0
-    while (t < n2) {
-      val takeA = ib >= membersB.length ||
-        (ia < membersA.length && membersA(ia) < membersB(ib))
-      if (takeA) { ids(t) = membersA(ia); ia += 1 } else { ids(t) = membersB(ib); ib += 1 }
-      t += 1
-    }
+  private def induced(g: CsrGraph, remap: Array[Int], ids: Array[Int]): (CsrGraph, Array[Int]) = {
+    val n2 = ids.length
     var i = 0
     while (i < n2) { remap(ids(i)) = i; i += 1 }
     val xadj2 = new Array[Int](n2 + 1)
@@ -575,12 +564,25 @@ object SeqPartitioner {
     (new CsrGraph(xadj2, adj2, wgt2, vw2), ids)
   }
 
-  /** Induced subgraph of one block (SURVEY P5 role during extension). */
+  /** The ascending merge of two disjoint ascending member lists. */
+  private def mergeAscending(a: Array[Int], b: Array[Int]): Array[Int] = {
+    val out = new Array[Int](a.length + b.length)
+    var ia = 0; var ib = 0; var t = 0
+    while (t < out.length) {
+      val takeA = ib >= b.length || (ia < a.length && a(ia) < b(ib))
+      if (takeA) { out(t) = a(ia); ia += 1 } else { out(t) = b(ib); ib += 1 }
+      t += 1
+    }
+    out
+  }
+
+  /** Induced subgraph of one block (SURVEY P5 role during extension). Its own
+    * `remap`: the group bisections that call it run concurrently.
+    */
   private def inducedByBlock(g: CsrGraph, part: Array[Int], b: Int): (CsrGraph, Array[Int]) = {
-    val side = new Array[Int](g.n)
-    var u = 0
-    while (u < g.n) { side(u) = if (part(u) == b) 0 else 1; u += 1 }
-    inducedSubgraph(g, side, 0)
+    val remap = new Array[Int](g.n)
+    java.util.Arrays.fill(remap, -1)
+    induced(g, remap, (0 until g.n).filter(part(_) == b).toArray)
   }
 
   /** V-cycles (reference VCYCLE scheme, `partitioning/deep/vcycle_deep_multilevel.cc`
@@ -841,55 +843,6 @@ object SeqPartitioner {
     var u = 0
     while (u < g.n) { w(part(u)) += g.vwgt(u); u += 1 }
     w
-  }
-
-  // --------------------------------------------------------------------------
-  // recursive bisection
-  // --------------------------------------------------------------------------
-
-  private def inducedSubgraph(g: CsrGraph, side: Array[Int], s: Int): (CsrGraph, Array[Int]) = {
-    val remap = new Array[Int](g.n)
-    java.util.Arrays.fill(remap, -1)
-    var n2 = 0
-    var u = 0
-    while (u < g.n) { if (side(u) == s) { remap(u) = n2; n2 += 1 }; u += 1 }
-    val ids = new Array[Int](n2)
-    u = 0
-    while (u < g.n) { if (remap(u) >= 0) ids(remap(u)) = u; u += 1 }
-    val xadj2 = new Array[Int](n2 + 1)
-    u = 0
-    while (u < g.n) {
-      if (remap(u) >= 0) {
-        var d = 0
-        var i = g.xadj(u)
-        while (i < g.xadj(u + 1)) { if (remap(g.adjncy(i)) >= 0 && side(g.adjncy(i)) == s) d += 1; i += 1 }
-        xadj2(remap(u) + 1) = d
-      }
-      u += 1
-    }
-    var i = 0
-    while (i < n2) { xadj2(i + 1) += xadj2(i); i += 1 }
-    val adj2 = new Array[Int](xadj2(n2))
-    val wgt2 = new Array[Long](xadj2(n2))
-    val vw2 = new Array[Long](n2)
-    val pos = java.util.Arrays.copyOf(xadj2, n2)
-    u = 0
-    while (u < g.n) {
-      val ru = remap(u)
-      if (ru >= 0) {
-        vw2(ru) = g.vwgt(u)
-        var j = g.xadj(u)
-        while (j < g.xadj(u + 1)) {
-          val v = g.adjncy(j)
-          if (remap(v) >= 0 && side(v) == s) {
-            adj2(pos(ru)) = remap(v); wgt2(pos(ru)) = g.adjwgt(j); pos(ru) += 1
-          }
-          j += 1
-        }
-      }
-      u += 1
-    }
-    (new CsrGraph(xadj2, adj2, wgt2, vw2), ids)
   }
 
   // --------------------------------------------------------------------------

@@ -249,8 +249,7 @@ object VCycle {
           val proj = vc.memory(
             mp.join(out.part.select(col("node").as("cnode"), col("block")), "cnode")
               .select(col("node"), col("block")))._1
-          val ge = Gather.plain(vc.cache(
-            fe0.select(col("src"), col("dst"), col("w")).repartition(col("dst"))))
+          val ge = Gather.level(vc, fe0, 0L)
           val lp = vc.scope(in => DistRefiner.lpRefineCaps(
             in, spark, ge, proj.join(fw, "node").select(col("node"), col("block"), col("weight")),
             k, capsFinal, maxIter = 3, seed = seed + 8000L + li).out.stagedIn(vc))

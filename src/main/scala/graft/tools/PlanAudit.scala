@@ -160,10 +160,10 @@ object PlanAudit {
 
     // 10. balancer candidate selection (round-5 fix): the overload/underload
     // balancers' eviction/pull sets are picked by the sort-free histogram selection
-    // — per-member candidate aggregation, per-(block, bucket) histogram, and the
-    // boundary-coin filter must all carry NO WindowExec/SortExec (previously a
-    // per-block running-sum sort window: an overloaded block's ~n/k members sorted
-    // in ONE task at scale).
+    // — the per-(block, bucket) histogram and the boundary-coin filter must carry NO
+    // WindowExec/SortExec (previously a per-block running-sum sort window: an
+    // overloaded block's ~n/k members sorted in ONE task at scale). The per-block
+    // score extents are folded by the job that stages the candidates: no plan.
     {
       import org.apache.spark.sql.execution.window.WindowExec
       import org.apache.spark.sql.execution.SortExec
@@ -174,7 +174,6 @@ object PlanAudit {
       val extents = Seq((0, 0.0, 0.01), (1, 0.0, 0.01))
       val sel = Seq((0, 0.0, 0.01, 5, 0.5), (1, 0.0, 0.01, -1, 1.0))
       val plans = Seq(
-        "extents" -> graft.partition.DistRefiner.scoreExtents(cand, "cur", "relGain"),
         "histogram" -> graft.partition.DistRefiner
           .scoreHistogram(cand, "cur", "relGain", extents, 256),
         "select" -> graft.partition.DistRefiner

@@ -2,22 +2,42 @@ package org.apache.spark.sql
 
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.catalyst.plans.logical.Statistics
+import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
 import org.apache.spark.sql.execution.LogicalRDD
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
 
-/** Access to the two package-private calls that [[graft.util.Stage]] needs. */
+/** Access to the package-private calls that [[graft.util.Stage]] needs. */
 object StagingShim {
 
-  /** Rebuild a checkpointed frame's `LogicalRDD` leaf (same RDD, output attributes,
-    * partitioning and ordering) with `Statistics(sizeInBytes)` and no inherited
-    * constraints — what a parquet scan of the same rows would report. A checkpoint
-    * otherwise carries its ORIGIN plan's statistics, which in an iterative pipeline
-    * are products over every earlier stage (see [[graft.util.Stage]]).
+  /** Rebuild a checkpointed frame's `LogicalRDD` leaf (same RDD and output
+    * attributes) with `Statistics(sizeInBytes)` and no inherited constraints — what a
+    * parquet scan of the same rows would report. A checkpoint otherwise carries its
+    * ORIGIN plan's statistics, which in an iterative pipeline are products over every
+    * earlier stage (see [[graft.util.Stage]]).
+    *
+    * Under adaptive execution the checkpoint records the adaptive wrapper's
+    * partitioning and ordering, which are unknown. When the final plan that computed
+    * the rows (`origin`'s, which the checkpoint ran) hash-partitions them, the leaf
+    * reports that partitioning and its ordering, so a join on the key shuffles and
+    * sorts only its other side. A partitioning adaptive execution coalesced stays
+    * unknown: carrying it made the Walshaw k=16 supersteps three times slower.
     */
-  def withStats(checkpointed: DataFrame, sizeInBytes: BigInt): DataFrame =
+  def withStats(checkpointed: DataFrame, origin: DataFrame, sizeInBytes: BigInt): DataFrame =
     checkpointed.queryExecution.analyzed match {
       case lr: LogicalRDD =>
         val session = checkpointed.sparkSession.asInstanceOf[classic.SparkSession]
-        classic.Dataset.ofRows(session, lr.copy()(session, Some(Statistics(sizeInBytes)), None))
+        val plan = origin.queryExecution.executedPlan match {
+          case a: AdaptiveSparkPlanExec if a.isFinalPlan => a.executedPlan
+          case p => p
+        }
+        val (partitioning, ordering) = plan.outputPartitioning match {
+          case h: HashPartitioning if (h.references ++ plan.outputOrdering.flatMap(_.references))
+              .forall(lr.outputSet.contains) =>
+            (h, plan.outputOrdering)
+          case _ => (lr.outputPartitioning, lr.outputOrdering)
+        }
+        classic.Dataset.ofRows(session, lr.copy(outputPartitioning = partitioning,
+          outputOrdering = ordering)(session, Some(Statistics(sizeInBytes)), None))
       case other =>
         throw new IllegalArgumentException(
           s"withStats expects a checkpointed frame, got ${other.nodeName}")

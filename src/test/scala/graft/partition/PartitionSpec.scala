@@ -562,6 +562,24 @@ class UnderloadBalancerSpec extends SparkFunSuite {
         s"threshold=$threshold under-min (lmin=${res.ctx.minBlockWeight}): ${res.blockWeights.mkString(",")}")
     }
   }
+
+  test("Walshaw k=16 at min eps 0.03: blocks no donor touches are still filled to Lmin") {
+    // no node adjacent to the lightest block can leave its own block above Lmin, so
+    // the underload balancer must pull from the heaviest blocks instead
+    val edges = MetisIO.readEdges(spark, MetisIO.readCsrResource("/data.graph"))
+    for (threshold <- Seq(100000L, 300L)) {
+      val res = Partitioner(edges).setK(16).setEpsilon(0.03).setMinEpsilon(0.03)
+        .setSeed(0L).setDriverThreshold(threshold).computePartition(spark)
+      assert(res.ctx.minBlockWeight === 172L && res.ctx.maxBlockWeight === 184L)
+      val w = res.blockWeights.mkString(",")
+      assert(res.feasible, s"threshold=$threshold over-cap: $w")
+      assert(res.minFeasible, s"threshold=$threshold under-min: $w")
+      val counted = res.assignment.groupBy(col("block")).agg(count(lit(1))).collect()
+        .map(r => r.getInt(0) -> r.getLong(1)).toMap
+      (0 until 16).foreach(b =>
+        assert(counted.getOrElse(b, 0L) === res.blockWeights(b), s"block $b"))
+    }
+  }
 }
 
 /** O4 isolated-node pair chaining (reference `label_propagation.h:884-917`): LP

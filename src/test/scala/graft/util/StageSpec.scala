@@ -2,16 +2,21 @@ package graft.util
 
 import graft.SparkFunSuite
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.execution.{RDDScanExec, SortExec}
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+import org.apache.spark.sql.execution.joins.SortMergeJoinExec
 import org.apache.spark.sql.functions._
 import org.scalatest.concurrent.Eventually._
 import org.scalatest.time.SpanSugar._
 
 /** In-memory staging: results equal the unstaged plan, the statistics of a long
   * chain of self-joining stages stay bounded (a plain local checkpoint carries the
-  * origin plan's statistics, whose size estimate squares at every self-join), and a
+  * origin plan's statistics, whose size estimate squares at every self-join), a
+  * staged table keeps the partitioning and ordering of the plan it staged, and a
   * scope releases what it staged — a child scope before its parent, and on a throw.
   */
-class StageSpec extends SparkFunSuite {
+class StageSpec extends SparkFunSuite with AdaptiveSparkPlanHelper {
 
   private def persisted = spark.sparkContext.getPersistentRDDs.keySet
 
@@ -60,12 +65,39 @@ class StageSpec extends SparkFunSuite {
     assert((persisted -- before).isEmpty)
   }
 
+  test("a staged key-partitioned, key-sorted table joins on the key with no exchange or sort") {
+    val threshold = "spark.sql.autoBroadcastJoinThreshold"
+    val saved = spark.conf.getOption(threshold)
+    spark.conf.set(threshold, "-1")
+    try Stage.scope { st =>
+      val (staged, _) = st.memory(
+        Stage.byKey(spark.range(400).select((col("id") % 97).as("k"), col("id").as("v")), "k"))
+      val other = spark.range(300).select((col("id") % 89).as("k"), col("id").as("u"))
+      val joined = staged.join(other, "k")
+      val got = joined.collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).sorted
+      val expected = for {
+        v <- 0L until 400L
+        u <- 0L until 300L if u % 89 == v % 97
+      } yield (v % 97, v, u)
+      assert(got.toSeq === expected.sorted)
+      val joins = collect(joined.queryExecution.executedPlan) { case j: SortMergeJoinExec => j }
+      assert(joins.size === 1, joined.queryExecution.executedPlan.toString)
+      val Seq(stagedSide) =
+        joins.head.children.filter(c => collect(c) { case s: RDDScanExec => s }.nonEmpty)
+      val redone = collect(stagedSide) {
+        case e: ShuffleExchangeExec => e.nodeName
+        case s: SortExec => s.nodeName
+      }
+      assert(redone.isEmpty, s"the staged side re-ran ${redone.mkString(", ")}:\n$stagedSide")
+    } finally saved.fold(spark.conf.unset(threshold))(spark.conf.set(threshold, _))
+  }
+
   test("a child scope releases its blocks while the parent's survive") {
     val before = persisted
     Stage.scope { st =>
       val (outer, _) = st.memory(spark.range(30).toDF("x"))
-      val cached = st.cache(spark.range(40).toDF("y").filter(col("y") > 3))
-      cached.count()
+      val (cached, rows) = st.memory(spark.range(40).toDF("y").filter(col("y") > 3))
+      assert(rows === 36L)
       val parentOwned = persisted -- before
       assert(parentOwned.size === 2)
       val inner = st.scope { in =>
@@ -88,7 +120,7 @@ class StageSpec extends SparkFunSuite {
     val err = intercept[IllegalStateException] {
       Stage.scope { st =>
         st.memory(spark.range(20).toDF("x"))
-        st.cache(spark.range(25).toDF("y")).count()
+        st.memory(spark.range(25).toDF("y"))._1.count()
         st.scope { in =>
           in.memory(spark.range(5).toDF("z"))._1.count()
           throw new IllegalStateException("boom")

@@ -12,7 +12,7 @@ class StagingLintSpec extends AnyFunSuite {
 
   private val packages =
     Seq("extract", "graph", "ops", "partition", "textops", "sim", "streaming", "multimodal")
-  private val forbidden = Seq(".localCheckpoint(", ".persist(", ".cache()", ".unpersist(", "Ckpt")
+  private val forbidden = Seq(".localCheckpoint(", ".persist(", ".cache(", ".unpersist(", "Ckpt")
 
   test("operator packages stage only through graft.util.Stage") {
     val files = packages.flatMap { p =>
