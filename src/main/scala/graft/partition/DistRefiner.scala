@@ -536,15 +536,15 @@ object DistRefiner {
     *  2. per pair, extract the BORDER REGION distributed — border nodes + `radius`
     *     BFS hops inside the pair, probabilistically thinned to `regionCap` nodes
     *     per pair (bounded driver collect at any scale);
-    *  3. run [[PairFm]] per pair on the driver: 2-way FM with external-attachment
-    *     terms for the fixed (non-region) nodes, balance enforced against the TRUE
-    *     block weights — moves inside a pair leave third-block contributions
-    *     invariant, so the region optimum is exact for the global cut;
+    *  3. run [[SeqPartitioner.fmRefine]] per pair on the driver: 2-way FM with
+    *     external-attachment terms for the fixed (non-region) nodes, balance enforced
+    *     against the TRUE block weights — moves inside a pair leave third-block
+    *     contributions invariant, so the region optimum is exact for the global cut;
     *  4. apply all pairs' moves as one bulk broadcast join; stop when a round
     *     improves nothing.
     *
-    * Deterministic given the seed. Never worsens the cut (PairFm rolls back to the
-    * best prefix; infeasible states never survive a pass).
+    * Deterministic given the seed. Never worsens the cut of a feasible pair (FM rolls
+    * back to the best prefix; infeasible states never survive a pass).
     */
   def pairwiseFmDist(
       spark: SparkSession,
@@ -721,9 +721,11 @@ object DistRefiner {
               }
               val fixed0 = blockW(a) - regW0
               val fixed1 = blockW(b) - regW1
-              val delta = PairFm.refine(
-                g, side, ext0, ext1, fixed0, fixed1,
-                max0 = caps(a), max1 = caps(b))
+              // short passes over the region; the source side keeps weight >= 1, as a
+              // pair move may never EMPTY a block (k populated blocks is the contract)
+              val delta = SeqPartitioner.fmRefine(
+                g, side, caps(a), caps(b), fruitlessMoves = math.max(64, g.n / 8), maxPasses = 3,
+                minSourceWeight = 1L, ext0 = ext0, ext1 = ext1, fixed0 = fixed0, fixed1 = fixed1)
               // flow step (O21) on the same region + attachments: the min-cut
               // re-routings FM's move discipline cannot reach
               val flowDelta = FlowRefine.kernel(
@@ -751,14 +753,10 @@ object DistRefiner {
         // the round's stages can go when the scope closes
         if (moves.isEmpty) done = true
         else {
-          // lazy apply (r06: was a parquet checkpoint write per round) — broadcast
-          // join + projection; the apply chain references its predecessor exactly
-          // once per round (linear, no plan blowup) and rounds are bounded
-          part = part.join(broadcast(moves.toSeq.toDF("node", "pb")), Seq("node"), "left")
-            .select(
-              col("node"),
-              coalesce(col("pb"), col("block")).cast("int").as("block"),
-              col("weight"))
+          // lazy apply (r06: was a parquet checkpoint write per round): the apply
+          // chain references its predecessor exactly once per round (linear, no plan
+          // blowup) and rounds are bounded
+          part = applyMoves(spark, part, moves)
         }
       }
       round += 1
@@ -812,7 +810,6 @@ object DistRefiner {
       val overloaded = (0 until k).filter(b => blockW(b) > caps(b))
       if (overloaded.isEmpty) done = true
       else {
-        import spark.implicits._
         val overSet = overloaded.toSet
         val totalOverload = overloaded.map(b => blockW(b) - caps(b)).sum
 
@@ -924,14 +921,7 @@ object DistRefiner {
           // previous state exactly ONCE (the apply chain is linear, unlike the
           // refine/JET staging, which embeds its predecessor 3x and needs the
           // staging's plan truncation), and rounds are bounded by maxRounds.
-          val movesDf = moves.toSeq.toDF("node", "cand")
-          part = part
-            .join(broadcast(movesDf), Seq("node"), "left")
-            .select(
-              col("node"),
-              coalesce(col("cand"), col("block")).cast("int").as("block"),
-              col("weight")
-            )
+          part = applyMoves(spark, part, moves)
         }
       }
       round += 1
@@ -973,7 +963,6 @@ object DistRefiner {
       val underloaded = (0 until k).filter(b => blockW(b) < lmin)
       if (underloaded.isEmpty) done = true
       else {
-        import spark.implicits._
         val underSet = underloaded.toSet
 
         // candidates: nodes OUTSIDE the underloaded blocks whose donor block can spare
@@ -1032,15 +1021,7 @@ object DistRefiner {
             pulled.blockW.copyToArray(blockW)
           }
         } else {
-          val movesDf = moves.toSeq.toDF("node", "ucand")
-          part = st.memory(
-            part
-              .join(broadcast(movesDf), Seq("node"), "left")
-              .select(
-                col("node"),
-                coalesce(col("ucand"), col("block")).cast("int").as("block"),
-                col("weight")
-              ))._1
+          part = st.memory(applyMoves(spark, part, moves))._1
         }
       }
       round += 1
@@ -1067,7 +1048,6 @@ object DistRefiner {
       floor: Long,
       lmax: Long
   ): PartW = {
-    import spark.implicits._
     val blockW = in.tracked
     val targets = (0 until k).filter(b => blockW(b) < floor)
     if (targets.isEmpty) return in
@@ -1104,10 +1084,16 @@ object DistRefiner {
     }
     Log.info(s"fillToFloor: moved ${moves.size} nodes into ${targets.size} blocks below $floor")
     if (moves.isEmpty) in
-    else PartW(st.memory(
-      in.part.join(broadcast(moves.toSeq.toDF("node", "fb")), Seq("node"), "left")
-        .select(col("node"), coalesce(col("fb"), col("block")).cast("int").as("block"),
-          col("weight")))._1, blockW)
+    else PartW(st.memory(applyMoves(spark, in.part, moves))._1, blockW)
+  }
+
+  /** `part` (node, block, weight) with each moved node relabelled to its target
+    * block: one broadcast join of the driver-side moves, lazy.
+    */
+  private def applyMoves(spark: SparkSession, part: DataFrame, moves: Iterable[(Long, Int)]): DataFrame = {
+    import spark.implicits._
+    part.join(broadcast(moves.toSeq.toDF("node", "to")), Seq("node"), "left")
+      .select(col("node"), coalesce(col("to"), col("block")).cast("int").as("block"), col("weight"))
   }
 
   /** Driver-collect bound for the balancer's candidate prefix: per overloaded block at

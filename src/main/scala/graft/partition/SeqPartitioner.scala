@@ -33,7 +33,6 @@ object SeqPartitioner {
     * `presets.cc:208`; slightly larger since our passes are cheaper).
     */
   private val FruitlessMoves = 1200
-  private val MaxFmPasses = 10
   private val CoarsestSize = 20
 
   final case class Result(part: Array[Int], cut: Long)
@@ -1114,29 +1113,56 @@ object SeqPartitioner {
   // 2-way FM refinement with best-prefix rollback
   // --------------------------------------------------------------------------
 
-  /** Repeated FM passes until a pass yields no improvement. Mutates side in place.
+  /** Repeated FM passes until a pass improves neither the cut nor the overload.
+    * Mutates side in place and returns the cut delta (the change of
+    * [[cut]] plus the exterior's attachment cut).
     *
     * `slack`: temporary cap violation allowed per MOVE (tentative-move semantics) —
     * overload is still measured against the exact caps and the best-prefix rollback
     * only lands on states at least as feasible as the start, so the slack buys the
     * pass the balanced SWAPS that strict per-move caps freeze at tight eps, without
     * ever returning an over-cap result from a feasible start.
+    *
+    * `fruitlessMoves` cuts a pass off after that many moves without a new best
+    * state. `minSourceWeight`: no move may leave its source side lighter.
+    *
+    * Exterior (the distributed pairwise FM's border region, SURVEY O19): `g` is a
+    * region of a larger graph whose other nodes are FIXED. `ext0(u)`/`ext1(u)` is
+    * u's edge weight to fixed nodes on side 0/1 and `fixed0`/`fixed1` each side's
+    * fixed node weight, so balance holds against the true block weights. Null
+    * arrays mean no exterior.
     */
-  def fmRefine(g: CsrGraph, side: Array[Int], max0: Long, max1: Long, slack: Long = 0L): Unit = {
+  def fmRefine(
+      g: CsrGraph, side: Array[Int], max0: Long, max1: Long, slack: Long = 0L,
+      fruitlessMoves: Int = FruitlessMoves, maxPasses: Int = 10, minSourceWeight: Long = 0L,
+      ext0: Array[Long] = null, ext1: Array[Long] = null, fixed0: Long = 0L, fixed1: Long = 0L
+  ): Long = {
+    val w = sideWeights(g, side)
+    w(0) += fixed0; w(1) += fixed1
+    var total = 0L
     var pass = 0
     var improved = true
-    while (pass < MaxFmPasses && improved) {
-      improved = fmPass(g, side, max0, max1, slack)
+    while (pass < maxPasses && improved) {
+      val over = overload(w, max0, max1)
+      val delta = fmPass(g, side, w, max0, max1, slack, fruitlessMoves, minSourceWeight, ext0, ext1)
+      improved = delta < 0L || overload(w, max0, max1) < over
+      total += delta
       pass += 1
     }
+    total
   }
 
-  /** One FM pass. Returns true if the final state improved (cut or feasibility). */
-  private def fmPass(g: CsrGraph, side: Array[Int], max0: Long, max1: Long, slack: Long): Boolean = {
+  private def overload(w: Array[Long], max0: Long, max1: Long): Long =
+    math.max(0L, w(0) - max0) + math.max(0L, w(1) - max1)
+
+  /** One FM pass; keeps `w` (the side weights) current. Returns the cut delta. */
+  private def fmPass(
+      g: CsrGraph, side: Array[Int], w: Array[Long], max0: Long, max1: Long, slack: Long,
+      fruitlessMoves: Int, minSourceWeight: Long, ext0: Array[Long], ext1: Array[Long]
+  ): Long = {
     val n = g.n
     val maxW = Array(max0, max1)
-    val w = sideWeights(g, side)
-    // D-values: external - internal weighted degree
+    // D-values: external - internal weighted degree, attachments included
     val d = new Array[Long](n)
     var u = 0
     var curCut = 0L
@@ -1149,13 +1175,17 @@ object SeqPartitioner {
       }
       d(u) = ext - int
       curCut += ext
+      if (ext0 != null) {
+        val own = if (side(u) == 0) ext0(u) else ext1(u)
+        val opp = ext0(u) + ext1(u) - own
+        d(u) += opp - own
+        curCut += 2 * opp // region edges count twice over the loop, attachments once
+      }
       u += 1
     }
     curCut /= 2
     val startCut = curCut
-    def overload(w0: Long, w1: Long): Long =
-      math.max(0L, w0 - max0) + math.max(0L, w1 - max1)
-    val startOver = overload(w(0), w(1))
+    val startOver = overload(w, max0, max1)
 
     val locked = new Array[Boolean](n)
     // two lazy-deletion heaps keyed by D-value (primitive FmHeap — identical total
@@ -1182,7 +1212,7 @@ object SeqPartitioner {
     }
 
     var continue = true
-    while (continue && fruitless < FruitlessMoves && nMoves < n) {
+    while (continue && fruitless < fruitlessMoves && nMoves < n) {
       // choose source side: an overloaded side first; else the one with the better top
       val from =
         if (w(0) > max0) 0
@@ -1218,8 +1248,8 @@ object SeqPartitioner {
           val afterOver =
             math.max(0L, w(from) - g.vwgt(u2) - maxW(from)) +
               math.max(0L, w(to) + g.vwgt(u2) - maxW(to))
-          val reducesOverload = w(from) > maxW(from) && afterOver < overload(w(0), w(1))
-          if (fits || reducesOverload) chosen = u2
+          val reducesOverload = w(from) > maxW(from) && afterOver < overload(w, max0, max1)
+          if ((fits || reducesOverload) && w(from) - g.vwgt(u2) >= minSourceWeight) chosen = u2
           else { rejected += u2; u2 = popValid(from) }
         }
         rejected.foreach(r => heaps(from).enqueue(d(r), r))
@@ -1245,7 +1275,7 @@ object SeqPartitioner {
             }
             i += 1
           }
-          val over = overload(w(0), w(1))
+          val over = overload(w, max0, max1)
           val better = (over < bestOver) || (over == bestOver && curCut < bestCut)
           if (better) { bestCut = curCut; bestOver = over; bestPrefix = nMoves; fruitless = 0 }
           else fruitless += 1
@@ -1256,9 +1286,11 @@ object SeqPartitioner {
     var mi = nMoves - 1
     while (mi >= bestPrefix) {
       val v = moves(mi)
+      w(side(v)) -= g.vwgt(v)
       side(v) = 1 - side(v)
+      w(side(v)) += g.vwgt(v)
       mi -= 1
     }
-    bestOver < startOver || bestCut < startCut
+    bestCut - startCut
   }
 }

@@ -59,21 +59,23 @@ object Similarity {
     * a seeded hash mapped to {-1.0, +1.0} — sign-random projections without
     * materializing plane vectors.
     */
-  private def planeSign(table: Int, plane: Int, dim: Column, seed: Long): Column =
-    when(pmod(xxhash64(lit(table), lit(plane), dim, lit(seed)), lit(2)) === 0, lit(1.0))
+  private def planeSign(table: Int, plane: Column, dim: Column, seed: Long): Column =
+    when(pmod(xxhash64(lit(table), plane, dim, lit(seed)), lit(2)) === 0, lit(1.0))
       .otherwise(lit(-1.0))
 
-  /** LSH signature for one table: `planes`-bit key of projection signs. */
+  /** LSH signature for one table: `planes`-bit key of projection signs. One fold over
+    * the vector carries all `planes` projections, each summed in element order.
+    */
   def lshKey(vec: Column, table: Int, planes: Int, seed: Long): Column = {
     val vd = asDouble(vec)
-    val bits = (0 until planes).map { p =>
-      val proj = aggregate(
-        zip_with(vd, sequence(lit(0), size(vd) - 1), (x, i) => x * planeSign(table, p, i, seed)),
-        lit(0.0), (acc, x) => acc + x
-      )
-      when(proj > 0, shiftleft(lit(1L), p)).otherwise(lit(0L))
-    }
-    bits.reduce((a, b) => a.bitwiseOR(b))
+    val projs = aggregate(
+      zip_with(vd, sequence(lit(0), size(vd) - 1), (x, i) => struct(x.as("x"), i.as("i"))),
+      array_repeat(lit(0.0), planes),
+      (acc, xi) => transform(acc, (a, p) => a + xi("x") * planeSign(table, p, xi("i"), seed)))
+    // bit p = projection p > 0, folded from the last plane down; 0 for a null vector
+    val bits = aggregate(reverse(projs), lit(0L),
+      (m, x) => shiftleft(m, 1).bitwiseOR(when(x > 0, 1L).otherwise(0L)))
+    coalesce(bits, lit(0L))
   }
 
   /** Approximate NN: candidates = pairs sharing a bucket in ANY of `tables` hash

@@ -149,23 +149,18 @@ object Dedup {
 
   /** 64-bit SimHash per document over word-level token hashes: bit b of the hash is
     * the sign of sum over tokens of (+1 if bit set else -1). Pure higher-order
-    * column expressions (codegen'd): per-doc token-hash list folded into a 64-slot
-    * counter array, then collapsed to a bitmask.
+    * column expressions: one fold of the per-doc token-hash list into a 64-slot
+    * counter array, then collapsed to a bitmask (0 for a null text).
     */
   def simhash(docs: DataFrame, seed: Long = 42L): DataFrame = {
     val toks = TextOps.tokens(lower(col("text")))
     val hashes = transform(toks, t => xxhash64(t, lit(seed)))
-    // statically unrolled over the 64 bits (shift amounts must be plan-time Ints):
-    // counter_b = sum over tokens of (+1 if bit b of hash else -1); bit_b = counter>0
-    val bits = (0 until 64).map { b =>
-      val counter = aggregate(
-        hashes,
-        lit(0),
-        (acc, h) => acc + when(shiftright(h, b).bitwiseAND(1) === 1, 1).otherwise(-1)
-      )
-      when(counter > 0, lit(1L << b)).otherwise(lit(0L))
-    }.reduce((a, c) => a.bitwiseOR(c))
-    docs.select(col("doc_id"), bits.as("simhash"))
+    val counters = aggregate(hashes, array_repeat(lit(0), 64),
+      (acc, h) => transform(acc, (c, b) => c + when(getbit(h, b) === 1, 1).otherwise(-1)))
+    // bit b = counter b > 0, folded from bit 63 down
+    val bits = aggregate(reverse(counters), lit(0L),
+      (m, c) => shiftleft(m, 1).bitwiseOR(when(c > 0, 1L).otherwise(0L)))
+    docs.select(col("doc_id"), coalesce(bits, lit(0L)).as("simhash"))
   }
 
   /** SimHash near-dup pairs: hamming distance <= maxDist, blocked by 16-bit chunks
